@@ -17,26 +17,30 @@ import org.apache.spark.sql.functions._
   * is exactly what licenses parallelism: every contiguous block is an
   * independent unit of sequential work.
   *
-  * Scale design (100 TB): block assignment is TWO-PHASE — gap breaks,
-  * block ids, and within-block positions are all computed with
-  * (channel, time-bucket)-local windows plus a per-bucket summary
-  * (one row per non-empty bucket) that carries boundary state across
-  * buckets via a per-channel window over the tiny summary relation,
-  * broadcast back (the same stitch Timeseries' two-phase operators
-  * use) — so NO task ever sorts a whole channel. Block length is
-  * capped at `maxBlockSamples` (oversized contiguous runs restart with
-  * the same reflected-prewarm policy the reference applies at resets,
-  * bounding executor memory); the blocks then shuffle by
-  * (channel, block, chunk) so thousands of blocks filter concurrently
-  * regardless of channel skew. The IIR kernel is the one genuinely
-  * sequential computation in the engine, so it runs in typed
+  * Scale design (100 TB): block assignment is TWO-PHASE and reads its
+  * input once. A typed local pass per (channel, time-bucket) numbers
+  * rows, counts gap breaks after the bucket's first row and remembers
+  * the latest one; a single per-bucket summary (one row per non-empty
+  * bucket) settles each bucket's first-row break and carries row,
+  * block and break-start prefixes across buckets via per-channel
+  * windows over that tiny relation, broadcast back (the same stitch
+  * Timeseries' two-phase operators use) — so NO task ever sorts a
+  * whole channel. Because the typed pass deserializes every column,
+  * the summary and the join back consume one shuffle of the input.
+  * Block length is capped at `maxBlockSamples` (oversized contiguous
+  * runs restart with the same reflected-prewarm policy the reference
+  * applies at resets, bounding executor memory); the blocks then
+  * shuffle by (channel, block, chunk) so thousands of blocks filter
+  * concurrently regardless of channel skew. The IIR kernel is the one
+  * genuinely sequential computation in the engine, so it runs in typed
   * flatMapSortedGroups rather than Catalyst expressions.
   */
 object Filtering {
 
   /** Apply a designed cascade to ts(channel, t, v): per contiguous
     * block (split where t - prev_t > gapUs), reset + reflect-prewarm +
-    * filter. Emits (channel, t, v, fv).
+    * filter. Emits (channel, t, v, fv). A null t or v is a missing
+    * sample: it emits no row and blocks split on the gaps that remain.
     *
     * `stitchBucketUs` is the two-phase summary granularity — it must be
     * coarse enough that each bucket holds many samples (the summary is
@@ -60,57 +64,68 @@ object Filtering {
       if (tsIn.columns.contains("event_id")) tsIn
       else tsIn.withColumn("event_id", lit(0L))
 
-    val bkted = ts
+    // Local pass per (channel, bucket) in (t, event_id) order: the row
+    // number, the block index counting only breaks AFTER the bucket's
+    // first row, and the row number of the latest such break.
+    // Whether the first row itself breaks needs the previous bucket's
+    // last t, which the summary settles. Missing samples drop here
+    // rather than in a Catalyst filter: a pushed-down isnotnull would
+    // land on one side of an upstream montage join only, and the two
+    // sides would stop sharing their grid aggregate.
+    val local = ts
       .select($"channel", $"t", $"v", $"event_id")
-      .withColumn("__bkt", floor($"t" / lit(stitchBucketUs)).cast("long"))
-    val wLoc = Window.partitionBy($"channel", $"__bkt").orderBy($"t", $"event_id")
-    val wLocRun = wLoc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      .as[(String, Option[Long], Option[Double], Long)]
+      .groupByKey { case (ch, t, _, _) => (ch, t.map(Math.floorDiv(_, stitchBucketUs))) }
+      .flatMapSortedGroups($"t", $"event_id") { case ((ch, bkt), rows) =>
+        var rn = 0L
+        var blk = 0L
+        var brkRow = Option.empty[Long]
+        var prevT = 0L
+        rows.collect { case (_, Some(t), Some(v), id) =>
+          rn += 1
+          if (rn > 1 && t - prevT > gapUs) { blk += 1; brkRow = Some(rn) }
+          prevT = t
+          (ch, bkt.get, t, v, id, rn, blk, brkRow)
+        }
+      }
+      .toDF("channel", "__bkt", "t", "v", "event_id", "__rnl", "__blkl", "__bsrnl")
+
+    // Summary: per-bucket totals, then per-channel windows over the tiny
+    // summary. The first row breaks when the previous non-empty bucket's
+    // last t lies more than gapUs before it. Prefixes over preceding
+    // buckets globalize row numbers and block ids; the carry is the
+    // global row number of the latest break before the bucket, where a
+    // block that began in an earlier bucket starts (asofJoin's carry
+    // trick). Window expressions are aliased directly (PlanSpec's __pb_
+    // marker on the Window node); nulls from empty frames coalesce.
     val wSum = Window.partitionBy($"channel").orderBy($"__bkt")
     val wSumPrev = wSum.rowsBetween(Window.unboundedPreceding, -1)
-
-    // Phase A: each bucket's last timestamp, lagged per channel over
-    // the tiny summary → the predecessor of every bucket's FIRST row.
-    val prevT = bkted
-      .groupBy($"channel", $"__bkt")
-      .agg(max($"t").as("__last_t"))
-      .select($"channel", $"__bkt", lag($"__last_t", 1).over(wSum).as("__pb_prev_t"))
-
-    // Local pass: gap breaks, local block index (running break count),
-    // local row number, and the local row number of the latest break —
-    // all within (channel, __bkt), arbitrarily parallel.
-    val local = bkted
-      .join(broadcast(prevT), Seq("channel", "__bkt"))
-      .withColumn("__rnl", row_number().over(wLoc).cast("long"))
-      .withColumn(
-        "__prev_t",
-        when($"__rnl" === 1L, $"__pb_prev_t").otherwise(lag($"t", 1).over(wLoc))
-      )
-      .withColumn("__brk", when($"t" - $"__prev_t" > gapUs, 1L).otherwise(0L))
-      .withColumn("__blkl", sum($"__brk").over(wLocRun))
-      .withColumn("__bsrnl", max(when($"__brk" === 1L, $"__rnl")).over(wLocRun))
-
-    // Phase B: per-bucket totals → per-channel prefixes over the tiny
-    // summary: row-count prefix (globalizes row numbers), break-count
-    // prefix (globalizes block ids), and the carry of the latest
-    // block-start row number from preceding buckets (for rows whose
-    // block began before their bucket) — asofJoin's carry trick.
-    val prefixed = local
+    // global row number of the bucket's first row when that row breaks
+    val firstBrk = when($"__brk0" === 1L, $"__rnprefix" + 1L)
+    val summary = local
       .groupBy($"channel", $"__bkt")
       .agg(
-        count(lit(1)).as("__cnt"),
-        sum($"__brk").as("__bsum"),
-        max(when($"__brk" === 1L, $"__rnl")).as("__mbr")
+        max($"__rnl").as("__cnt"),
+        min($"t").as("__first_t"),
+        max($"t").as("__last_t"),
+        max($"__blkl").as("__blks"),
+        max($"__bsrnl").as("__mbr")
       )
-      // window expressions aliased directly (PlanSpec's __pb_ marker on
-      // the Window node); nulls from empty preceding-frames coalesce at
-      // use sites below
+      .withColumn("__pb_prev_t", lag($"__last_t", 1).over(wSum))
+      .withColumn("__brk0", when($"__first_t" - $"__pb_prev_t" > gapUs, 1L).otherwise(0L))
       .withColumn("__pb_rnprefix0", sum($"__cnt").over(wSumPrev))
-      .withColumn("__pb_rnprefix", coalesce($"__pb_rnprefix0", lit(0L)))
-      .withColumn("__pb_blkprefix0", sum($"__bsum").over(wSumPrev))
-      .withColumn("__pb_blkprefix", coalesce($"__pb_blkprefix0", lit(0L)))
-      .withColumn("__gbr", $"__mbr" + $"__pb_rnprefix")
+      .withColumn("__pb_blkprefix0", sum($"__blks" + $"__brk0").over(wSumPrev))
+      .withColumn("__rnprefix", coalesce($"__pb_rnprefix0", lit(0L)))
+      .withColumn("__gbr", coalesce($"__mbr" + $"__rnprefix", firstBrk))
       .withColumn("__pb_carry", last($"__gbr", ignoreNulls = true).over(wSumPrev))
-      .select($"channel", $"__bkt", $"__pb_rnprefix", $"__pb_blkprefix", $"__pb_carry")
+      .select(
+        $"channel",
+        $"__bkt",
+        $"__rnprefix",
+        (coalesce($"__pb_blkprefix0", lit(0L)) + $"__brk0").as("__blkoff"),
+        // block-start row of the rows before the first in-bucket break
+        coalesce(firstBrk, $"__pb_carry").as("__start0")
+      )
 
     // cap contiguous-run length: chunk restarts filter state with the
     // reference's reset+prewarm policy. Within-block position = global
@@ -119,13 +134,13 @@ object Filtering {
     val chunkCol =
       if (maxBlockSamples == Int.MaxValue) lit(0L)
       else {
-        val rn = $"__rnl" + $"__pb_rnprefix"
-        val blockStart = coalesce($"__bsrnl" + $"__pb_rnprefix", $"__pb_carry", lit(1L))
+        val rn = $"__rnl" + $"__rnprefix"
+        val blockStart = coalesce($"__bsrnl" + $"__rnprefix", $"__start0", lit(1L))
         ((rn - blockStart) / maxBlockSamples).cast("long")
       }
     val withBlocks = local
-      .join(broadcast(prefixed), Seq("channel", "__bkt"))
-      .withColumn("block", $"__blkl" + $"__pb_blkprefix")
+      .join(broadcast(summary), Seq("channel", "__bkt"))
+      .withColumn("block", $"__blkl" + $"__blkoff")
       .withColumn("chunk", chunkCol)
       .select($"channel", $"block", $"chunk", $"t", $"v", $"event_id")
       .as[(String, Long, Long, Long, Double, Long)]

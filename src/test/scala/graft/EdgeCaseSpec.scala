@@ -32,6 +32,47 @@ class EdgeCaseSpec extends SparkSpec {
       .count() shouldBe 0L
   }
 
+  "applyCascade" should "return no rows (not fail) when every sample is null" in {
+    val allNull = (0L until 50L).map(i => ("c", i, Option.empty[Double])).toDF("channel", "t", "v")
+    Filtering
+      .applyCascade(spark, allNull, Butterworth.lowPass(2, 250.0, 20.0), 20, 10L)
+      .count() shouldBe 0L
+  }
+
+  it should "drop null samples and filter the rest like the sequential kernel" in {
+    // a null t or v is a missing sample: isolated nulls leave 2 µs steps
+    // (contiguous under gapUs = 10), the 15-sample null run leaves a
+    // 16 µs gap that resets the filter
+    val c = Butterworth.lowPass(2, 250.0, 20.0)
+    def missing(i: Long) = i % 17 == 3 || (i >= 100 && i < 115)
+    val rows = (0L until 200L).map { i =>
+      ("c", if (i == 150) None else Some(i), if (missing(i)) None else Some(math.sin(i / 7.0)))
+    }
+    val got = Filtering
+      .applyCascade(spark, rows.toDF("channel", "t", "v"), c, 20, 10L)
+      .select($"t", $"fv")
+      .as[(Long, Double)]
+      .collect()
+      .sortBy(_._1)
+
+    val kept = (0L until 200L).filterNot(i => missing(i) || i == 150)
+    val (before, after) = kept.partition(_ < 100)
+    val exp = Seq(before, after).flatMap { b =>
+      b.zip(Butterworth.filterBlock(c, b.map(i => math.sin(i / 7.0)).toArray, 20))
+    }
+    got.toSeq shouldBe exp
+  }
+
+  "hotPathWire" should "serve frames over a montage with a null sample" in {
+    val rows = (0 until 32).flatMap { i =>
+      Seq(("L", i * 10L, if (i == 9) None else Some(i.toDouble)), ("S", i * 10L, Some(0.25)))
+    }
+    val out = Filtering
+      .hotPathWire(spark, rows.toDF("channel", "t", "v"), Seq(("L", "S")), bucketUs = 10L, pixelUs = 40L)
+      .collect()
+    out should not be empty
+  }
+
   "text and dedup operators" should "tolerate null and empty text" in {
     val docs = Seq(
       (1L, "normal document with words"),

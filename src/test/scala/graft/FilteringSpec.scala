@@ -129,6 +129,75 @@ class FilteringSpec extends SparkSpec {
     got.zip(exp).foreach { case (g, e) => g shouldBe e +- 1e-12 }
   }
 
+  it should "equal the sequential kernel exactly for every stitch width and block cap" in {
+    // the two-phase stitch is a parallelism device: for ANY stitch
+    // width and block cap the output must be bit-identical to
+    // filterBlock over the sequential (t, event_id)-ordered blocks.
+    // Fixture t-shapes, per width in {7, 50, 300, 1000}:
+    //  - gaps landing on a bucket's first row (t = 2100, 3000, 5000, 7350, -50)
+    //  - runs of empty buckets (3199 → 5000, 5398 → 7000)
+    //  - single-row buckets (step 60 at widths 7/50, step 7 at width 7)
+    //    and tiny isolated blocks (7000 with its duplicate, 7301 alone)
+    //  - a gap of exactly gapUs (2900 → 3000), which is NOT a break
+    //  - duplicate t values ordered by a scrambled event_id
+    //  - negative t (floor division below zero)
+    val gapUs = 100L
+    val tsA: Seq[Long] =
+      (0L until 700L) ++                     // long contiguous run (caps bite)
+        (760L to 1960L by 60L) ++            // sparse but contiguous
+        (2100L until 2400L by 3L) ++         // break lands on 2100
+        (2400L to 2900L by 50L) ++           // contiguous
+        (3000L until 3200L) ++               // step of exactly gapUs: no break
+        (5000L until 5400L by 2L) ++         // break after empty buckets
+        Seq(7000L, 7301L) ++                 // isolated tiny blocks
+        (7350L to 7700L by 7L)               // break on 7350 = 7·1050
+    val dupTs = (5000L until 5400L by 24L) ++ Seq(0L, 699L, 2100L, 7000L)
+    val tsB: Seq[Long] = (-500L to -200L by 5L) ++ (-50L to 500L by 5L)
+    val raw =
+      tsA.map(t => ("a", t)) ++ dupTs.map(t => ("a", t)) ++ tsB.map(t => ("b", t))
+    val n = raw.length.toLong
+    val rows = raw.zipWithIndex.map { case ((ch, t), i) =>
+      val eid = (i * 7919L) % n // distinct, scrambled against t order
+      (ch, t, math.sin(t / 7.0) + eid / 1024.0, eid)
+    }
+    val df = rows.toDF("channel", "t", "v", "event_id")
+    val pad = 40
+
+    def reference(cap: Int): Map[(String, Long, Double), Double] =
+      rows.groupBy(_._1).toSeq.flatMap { case (ch, rs) =>
+        val sorted = rs.sortBy(r => (r._2, r._4))
+        val blocks = scala.collection.mutable.ArrayBuffer(Vector.empty[(Long, Double)])
+        var prev = Option.empty[Long]
+        sorted.foreach { case (_, t, v, _) =>
+          if (prev.exists(p => t - p > gapUs)) blocks += Vector.empty
+          blocks(blocks.length - 1) = blocks.last :+ ((t, v))
+          prev = Some(t)
+        }
+        blocks.toSeq.flatMap { b =>
+          val chunks = if (b.length <= cap) Seq(b) else b.grouped(cap).toSeq
+          chunks.flatMap { c =>
+            val out = Butterworth.filterBlock(cascade, c.map(_._2).toArray, pad)
+            c.zip(out).map { case ((t, v), fv) => (ch, t, v) -> fv }
+          }
+        }
+      }.toMap
+
+    for (cap <- Seq(Int.MaxValue, 1 << 22, 37, 150)) {
+      val exp = reference(cap)
+      exp.size shouldBe rows.length
+      for (width <- Seq(1L << 60, 7L, 50L, 300L, 1000L, 86400000000L)) {
+        val got = Filtering
+          .applyCascade(spark, df, cascade, pad, gapUs, maxBlockSamples = cap, stitchBucketUs = width)
+          .as[(String, Long, Double, Double)]
+          .collect()
+        withClue(s"stitchBucketUs=$width maxBlockSamples=$cap:") {
+          got.length shouldBe exp.size
+          got.foreach { case (ch, t, v, fv) => fv shouldBe exp((ch, t, v)) }
+        }
+      }
+    }
+  }
+
   "tsButterworth" should "produce one output row per input row" in {
     val out = Filtering.tsButterworth(spark, sfDir)
     out.count() shouldBe Tables.ts(spark, sfDir).count()

@@ -2,8 +2,9 @@ package graft
 
 import graft.operators.{Dedup, Relational, Similarity, Timeseries}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 
 /** Plan-hygiene assertions: the properties that keep these operators
@@ -24,6 +25,29 @@ class PlanSpec extends SparkSpec {
     }
     root.collectWithSubqueries { case s: ShuffleExchangeExec => s }.size
   }
+
+  /** Every node of the final adaptive plan after a collect, descending
+    * into materialized query stages (leaf nodes to a plain walk); a
+    * reused exchange references an already-walked stage, so the walk
+    * stays shallow there.
+    */
+  private def executedNodes(df: DataFrame): Seq[SparkPlan] =
+    df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec =>
+        df.collect()
+        val seen = scala.collection.mutable.ArrayBuffer[SparkPlan]()
+        def go(n: SparkPlan): Unit = {
+          seen += n
+          n match {
+            case q: QueryStageExec => go(q.plan)
+            case _: ReusedExchangeExec => ()
+            case other => other.children.foreach(go)
+          }
+        }
+        go(a.executedPlan)
+        seen.toSeq
+      case p => fail(s"expected adaptive plan, got ${p.getClass}")
+    }
 
   "q1_agg" should "push the shipdate filter into the parquet scan" in {
     val plan = planString(Relational.q1Agg(spark, sfDir))
@@ -205,7 +229,6 @@ class PlanSpec extends SparkSpec {
     // buckets — are the legitimate broadcast-update shape and pass).
     // Swept over every dedup/graph/report registry entry so the next
     // report query written with the same disease fails here.
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
     def rowGrainCorpus(n: SparkPlan): Boolean = n match {
@@ -240,7 +263,6 @@ class PlanSpec extends SparkSpec {
     // a literally-bounded query set that happens to live in the same
     // parquet file in testdata — which is exactly the shape their
     // docstrings declare.
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
     def rowGrainCorpus(n: SparkPlan): Boolean = n match {
@@ -272,7 +294,6 @@ class PlanSpec extends SparkSpec {
     // shape that OOMs at the design point. Channel/user/bucket-grain
     // aggregates broadcast back over the stream are the legitimate
     // two-phase pattern and pass. Swept over EVERY ts_ registry entry.
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
     def rowGrainStream(n: SparkPlan): Boolean = n match {
@@ -439,11 +460,12 @@ class PlanSpec extends SparkSpec {
     // timestamp column — the chain never reads outside the request
     planString(df) should include("1704067200000000")
     // stage budget: grid agg + montage join are the only DATA-grain
-    // exchanges; the filter's two-phase block machinery, downsample,
-    // segment assembly and output sort all operate at grid/pixel
-    // grain. The composed chain must not silently grow extra
-    // corpus-scale stages as its pieces evolve.
-    countShuffles(df) should be <= 20
+    // exchanges; the filter's local-pass shuffle (planned once per
+    // consumer, run once through exchange reuse), its summary and
+    // block shuffles, downsample, segment assembly and output sort all
+    // operate at grid/pixel grain. The composed chain must not silently
+    // grow extra stages as its pieces evolve (12 at writing).
+    countShuffles(df) should be <= 12
   }
 
   "ts_unit_hotpath" should "push the range to the scan and keep the composed chain's shuffle budget bounded" in {
@@ -759,33 +781,30 @@ class PlanSpec extends SparkSpec {
   }
 
   "ts_pyramid" should "serve every tier from one physical scan and one corpus-scale shuffle" in {
-    import org.apache.spark.sql.execution.SparkPlan
-    val df = Timeseries.tsPyramid(spark, sfDir)
-    df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec =>
-        df.collect()
-        // walk the final adaptive plan INCLUDING materialized query
-        // stages (leaf nodes to a plain collect); reused exchanges are
-        // references to already-counted stages, so stay shallow there
-        val seen = scala.collection.mutable.ArrayBuffer[SparkPlan]()
-        def go(n: SparkPlan): Unit = {
-          seen += n
-          n match {
-            case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => go(q.plan)
-            case _: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => ()
-            case other => other.children.foreach(go)
-          }
-        }
-        go(a.executedPlan)
-        // every union branch shares the level-0 aggregate: reuse must
-        // collapse the five branch scans to ONE materialized events scan
-        seen.count(_.isInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec]) shouldBe 1
-        // tiers 1..L reuse the tier below; without reuse the pyramid
-        // would rescan the corpus once per level
-        seen.count(
-          _.isInstanceOf[org.apache.spark.sql.execution.exchange.ReusedExchangeExec]
-        ) should be >= Timeseries.PyramidLevels
-      case p => fail(s"expected adaptive plan, got ${p.getClass}")
+    val seen = executedNodes(Timeseries.tsPyramid(spark, sfDir))
+    // every union branch shares the level-0 aggregate: reuse must
+    // collapse the five branch scans to ONE materialized events scan
+    seen.count(_.isInstanceOf[FileSourceScanExec]) shouldBe 1
+    // tiers 1..L reuse the tier below; without reuse the pyramid
+    // would rescan the corpus once per level
+    seen.count(_.isInstanceOf[ReusedExchangeExec]) should be >= Timeseries.PyramidLevels
+  }
+
+  "filtered ts chains" should "read their input once" in {
+    // applyCascade's local pass, per-bucket summary and join back all
+    // consume ONE shuffle of the filter input (the typed pass needs
+    // every column, so the two consumers' exchanges are identical and
+    // reuse collapses them); the montage's two grid sides share one
+    // grid aggregate the same way
+    import graft.operators.Filtering
+    Seq(
+      "ts_butterworth" -> Filtering.tsButterworth(spark, sfDir),
+      "ts_montage_filter" -> Filtering.tsMontageFilter(spark, sfDir),
+      "ts_hotpath" -> Filtering.tsHotpath(spark, sfDir)
+    ).foreach { case (name, df) =>
+      withClue(s"$name:") {
+        executedNodes(df).count(_.isInstanceOf[FileSourceScanExec]) shouldBe 1
+      }
     }
   }
 
