@@ -10,24 +10,8 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.q1Agg(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2.
-    *
-    * Every entry passes through [[graft.plans.SortSamplePin]]: a query
-    * whose top-level global sort would RE-EXECUTE an expensive
-    * window/join pipeline in the range exchange's boundary-sampling
-    * pass gets its sort input pinned (MEMORY_AND_DISK) so the sampler
-    * and the shuffle read one execution. Rows, values and output order
-    * are unchanged. The pin is gated on a measured allowlist — a
-    * 35-query A/B showed the blanket version loses on cheap tails (see
-    * SortSamplePin's scaladoc).
-    */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    rawQueries.map { case (name, fn) =>
-      name -> ((spark: SparkSession, dir: String) =>
-        graft.plans.SortSamplePin(name, fn(spark, dir)))
-    }
-
-  private def rawQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** One entry per implemented operator from SURVEY.md §2. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q1_agg" -> (Relational.q1Agg _),
     "q2_join" -> (Relational.q2Join _),
     "q3_topk" -> (Relational.q3TopK _),

@@ -414,7 +414,7 @@ object Dedup {
       .select(col("doc_a").as("doc_id"))
       .union(pairs.select(col("doc_b").as("doc_id")))
       .distinct()
-    // HASHED VERIFY KEYS (round-16 MinhashProfile: the verify stage was
+    // HASHED VERIFY KEYS (round-16 stage profile: the verify stage was
     // ~2.9 s of the query's 5.4 at sf0.1, its joins keyed on ~25-byte
     // shingle STRINGS): the exploded stream carries polyHash(shingle) —
     // the same 2⁶¹−1 fold the signature kernel and the containment
@@ -3202,12 +3202,6 @@ object Dedup {
       )
     base.unionByName(planted).select(col("doc_id"), array_join(col("ws"), " ").as("text"))
   }
-
-  /** The driver query's planted corpus, exposed for dev profiling
-    * (tools.ContProfile times pipeline prefixes against it).
-    */
-  def plantedContainmentCorpus(spark: SparkSession, dir: String): DataFrame =
-    withPlantedContainment(Tables.documents(spark, dir))
 
   def dedupContainment(spark: SparkSession, dir: String): DataFrame =
     containmentNearDups(withPlantedContainment(Tables.documents(spark, dir)), w = 3, tau = 0.9, maxDf = 256)

@@ -540,13 +540,13 @@ object Timeseries {
       .withColumn("__arr", collect_list(col("v")).over(w))
       .filter(col("__tgt") === col("__blk")) // core rows, after the frame
       .filter(size(col("__arr")) === 2 * k + 1) // full windows only
-      .withColumn("__med", element_at(array_sort(col("__arr")), k + 1))
+      // null-safe `get`: a consumer's filter on v_med/v_mad combines
+      // with the size filter above, so the indexing can run on short
+      // edge frames; those rows are dropped either way
+      .withColumn("__med", get(array_sort(col("__arr")), lit(k)))
       .withColumn(
         "__mad",
-        element_at(
-          array_sort(transform(col("__arr"), x => abs(x - col("__med")))),
-          k + 1
-        )
+        get(array_sort(transform(col("__arr"), x => abs(x - col("__med")))), lit(k))
       )
       .filter(abs(col("v") - col("__med")) > lit(nSigma) * (lit(1.4826) * col("__mad")))
       .select(
@@ -2232,14 +2232,7 @@ object Timeseries {
   }
 
   def tsMatrixProfile(spark: SparkSession, dir: String): DataFrame =
-    // the kernel's min-agg needs no exchange of its own (the pair
-    // join's partitioning satisfies it), so there is NO shuffle
-    // boundary under the output sort — the registry-level
-    // SortSamplePin pins the sort input so the range exchange's
-    // boundary-sampling pass does not re-execute the pair pipeline
-    // (measured: 2.4 s resampled vs 0.95 s pinned at sf0.1)
     matrixProfile(Tables.ts(spark, dir), windowUs = 604800000000L)
-      .orderBy(col("channel"), col("win"), col("i"))
 
   /** MP oracle: identical PAA grid, LEAD continuity, pinned
     * subsequence z-normalization and literal-order distance, the same
@@ -3019,7 +3012,6 @@ object Timeseries {
 
   def tsHampel(spark: SparkSession, dir: String): DataFrame =
     hampel(Tables.ts(spark, dir))
-      .orderBy(col("channel"), col("t"), col("event_id"))
 
   /** Oracle: DuckDB evaluates MEDIAN and MAD directly as bounded-frame
     * window aggregates over the canonical per-channel window — the

@@ -10,11 +10,4 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object GraftSqlBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Dataset from a logical plan (private[sql] in Spark) — needed to
-    * rebuild a query around a persisted subplan (graft.plans.SortSamplePin).
-    */
-  def ofRows(spark: SparkSession,
-             plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 }

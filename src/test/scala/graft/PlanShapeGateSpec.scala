@@ -83,7 +83,9 @@ class PlanShapeGateSpec extends SparkSpec {
     "text_tokens", "text_quality", "text_entropy", "text_langid",
     "text_fingerprint", "text_perplexity", "text_perplexity2",
     "text_split", "text_repetition", "text_chunk", "corpus_hapax",
-    "text_readability"
+    "text_readability",
+    // per-sample flags (one row per flagged sample)
+    "ts_hampel"
   )
 
   "corpus-grain projections" should "plan zero global sorts" in {

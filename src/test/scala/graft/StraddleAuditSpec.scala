@@ -87,18 +87,15 @@ class StraddleAuditSpec extends SparkSpec {
       val hits =
         try StraddleAudit.audit(SparkEntry.queries(name)(spark, sfDir))
         catch {
-          // a few operators assume per-block sample counts sf0.001
-          // cannot supply (e.g. ts_hampel's rolling frame); they run at
-          // the driver's sf0.01+, where Verify's straddles.json audit
-          // covers them — the tolerated set is PINNED BY NAME below,
-          // so a new failure in a previously-green operator (or a
-          // pinned one coming back to life) is a red bar, never an
-          // anonymous count
+          // the audit filters on every output column, which an
+          // operator must survive like any consumer; the tolerated set
+          // is PINNED BY NAME below (empty), so a new failure is a red
+          // bar naming the query, never an anonymous count
           case e: Throwable => skipped += s"$name (${e.getMessage.take(60)})"; Nil
         }
       hits.map(h => s"$name.${h.column}=${h.value}")
     }
-    val allowedSkips = Set("ts_hampel")
+    val allowedSkips = Set.empty[String]
     withClue(s"sweep skips drifted from the pinned allowlist: $skipped: ") {
       skipped.map(_.takeWhile(_ != ' ')).toSet shouldBe allowedSkips
     }

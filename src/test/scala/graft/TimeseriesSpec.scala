@@ -1111,6 +1111,21 @@ class TimeseriesSpec extends SparkSpec {
     Timeseries.hampel(edgy, k = 5, nSigma = 3.0).count() shouldBe 0L
   }
 
+  it should "survive a consumer filter on v_med/v_mad over blocks shorter than 2k+1" in {
+    // channel "b" never fills a ±5 frame; a filter on the outputs lets
+    // Spark index the sorted frames of its short rows before the
+    // full-window filter drops them
+    val ts = mkTs((0L until 100L).map { i =>
+      ("a", i * 1000L, if (i == 30 || i == 71) 100.0 else (i % 3).toDouble)
+    } ++ (0L until 4L).map(i => ("b", i * 1000L, if (i == 0) 100.0 else 0.0)))
+    val out = Timeseries.hampel(ts, k = 5, nSigma = 3.0)
+    val keep = (r: org.apache.spark.sql.Row) => r.getAs[Double]("v_med") >= 1.0 || r.getAs[Double]("v_mad") > 0.0
+    val expected = out.collect().filter(keep).map(_.toSeq).sortBy(_.mkString("|"))
+    expected should not be empty
+    out.filter(col("v_med") >= 1.0 || col("v_mad") > 0.0)
+      .collect().map(_.toSeq).sortBy(_.mkString("|")) shouldBe expected
+  }
+
   "attribution" should "pick window-bounded first/last touches with event_id ties and NULL-survive untouched conversions" in {
     val W = 1000L
     // user 1: conv at t=2000; touches at 1000 (= t_conv - W, included,
