@@ -19,11 +19,11 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** Canonical form of a data directory for (SparkSession, dir) cache
-    * keys (the EmbLayout/TsLayout canonKey pattern): aliases of the
-    * same directory — trailing slash, relative path, `..` segments —
-    * must hit the SAME memoized artifact instead of retraining and
-    * pinning a duplicate localCheckpoint for the session's lifetime.
+  /** Canonical form of a directory for cache keys (the shared
+    * intermediates and the layout marker caches): aliases of the same
+    * directory — trailing slash, relative path, `..` segments — must
+    * hit the SAME entry instead of retraining and pinning a duplicate
+    * localCheckpoint for the session's lifetime.
     */
   def canonDir(dir: String): String =
     try new java.io.File(dir).getCanonicalPath

@@ -445,48 +445,22 @@ object Dedup {
       .filter(col("jaccard") >= tau)
       .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
 
-  // ---------------------------------------------------------------------
-  // Shared mined-pair memo: the registry's dedup/graph report queries all
-  // consume the SAME candidate relation (planted corpus, w=3, bands=16).
-  // Re-mining it per driver query is fine for oracle independence but is
-  // not the production shape — nobody re-mines identical pairs for every
-  // report at 100 TB; a real pipeline mines once and the reports read the
-  // verified-pair relation. Mine once per (SparkContext, sfDir), pin it
-  // with localCheckpoint (truncates lineage; blocks live in the local
-  // block manager, MEMORY_AND_DISK), and let every consumer read it. The
-  // relation is pair-bounded — candidate-capped by maxBucketSize, orders
-  // of magnitude below corpus row count — so pinning it is cheap at any
-  // scale; at a real 100 TB run this would be a parquet table written by
-  // the mining job, which downstream reports scan.
-  private val minedCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  private val minedLock = new Object
-
   /** The shared pre-τ candidate relation (doc_a, doc_b, jaccard-raw)
     * over [[withPlantedNearDups]] at the registry's fixed mining
-    * parameters, computed once per (SparkSession, sfDir). Keyed by the
-    * SESSION (not applicationId) so a checkpointed DataFrame is only
-    * ever consumed by the session that created it; entries whose
-    * context has stopped are evicted on access — their checkpoint
-    * blocks died with the context, and the keys would otherwise pin
-    * dead sessions for the JVM lifetime.
+    * parameters (w=3, bands=16), one [[Intermediates]] entry per
+    * (session, sfDir) that the dedup/graph reports all read. It is
+    * pinned with localCheckpoint (truncates lineage; blocks live in the
+    * local block manager, MEMORY_AND_DISK). The relation is
+    * pair-bounded — candidate-capped by maxBucketSize, orders of
+    * magnitude below corpus row count — so pinning it is cheap at any
+    * scale; at a real 100 TB run this would be a parquet table written
+    * by the mining job, which downstream reports scan.
     */
-  def minedJaccardFor(spark: SparkSession, dir: String): DataFrame = {
-    minedCache.keys.foreach { k =>
-      if (k._1.sparkContext.isStopped) minedCache.remove(k): Unit
+  def minedJaccardFor(spark: SparkSession, dir: String): DataFrame =
+    Intermediates.getOrBuild(spark, "mined_jaccard", Tables.canonDir(dir)) {
+      minhashJaccard(withPlantedNearDups(Tables.documents(spark, dir)), w = 3)
+        .localCheckpoint()
     }
-    val key = (spark, Tables.canonDir(dir))
-    minedCache.getOrElse(
-      key,
-      minedLock.synchronized {
-        minedCache.getOrElseUpdate(
-          key,
-          minhashJaccard(withPlantedNearDups(Tables.documents(spark, dir)), w = 3)
-            .localCheckpoint()
-        )
-      }
-    )
-  }
 
   /** Verified near-dup pairs (τ = 0.5) from the shared memo — the
     * relation [[dedupClusters]] / [[dedupReport]] / [[dedupMatrix]] /

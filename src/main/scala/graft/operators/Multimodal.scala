@@ -1029,30 +1029,15 @@ object Multimodal {
   }
 
   // Two registry consumers read the SAME mined phash pair relation
-  // (the pair report and the cluster collapse) — mine once per
-  // (session, dir), the minedJaccardFor discipline.
-  private val phashCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  private val phashLock = new Object
-
-  def phashPairsFor(spark: SparkSession, dir: String): DataFrame = {
-    phashCache.keys.foreach { k =>
-      if (k._1.sparkContext.isStopped) phashCache.remove(k): Unit
+  // (the pair report and the cluster collapse) — one entry per
+  // (session, dir)
+  def phashPairsFor(spark: SparkSession, dir: String): DataFrame =
+    Intermediates.getOrBuild(spark, "phash_pairs", Tables.canonDir(dir)) {
+      phashNearDups(
+        spark,
+        withPayloads(withPlantedExactCopies(Tables.documents(spark, dir)))
+      ).localCheckpoint(true)
     }
-    val key = (spark, Tables.canonDir(dir))
-    phashCache.getOrElse(
-      key,
-      phashLock.synchronized {
-        phashCache.getOrElseUpdate(
-          key,
-          phashNearDups(
-            spark,
-            withPayloads(withPlantedExactCopies(Tables.documents(spark, dir)))
-          ).localCheckpoint(true)
-        )
-      }
-    )
-  }
 
   def mmPhash(spark: SparkSession, dir: String): DataFrame =
     phashPairsFor(spark, dir)
@@ -1272,35 +1257,15 @@ object Multimodal {
       )
   }
 
-  // The registry has two consumers of the SAME landmark stream (the
-  // fingerprint report and the constellation match); a real pipeline
-  // fingerprints the corpus once and every search/dedup pass reads the
-  // landmark artifact. Fingerprint once per (SparkSession, sfDir) —
-  // the trainedFor/minedJaccardFor discipline, including dead-session
-  // eviction.
-  private val fpCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  private val fpLock = new Object
-
-  /** The corpus landmark stream, computed once per (session, dir) and
-    * localCheckpoint'd.
+  /** The corpus landmark stream, an [[Intermediates]] entry per
+    * (session, dir), localCheckpoint'd: the fingerprint report and the
+    * constellation match read the SAME landmarks.
     */
-  def fingerprintFor(spark: SparkSession, dir: String): DataFrame = {
-    fpCache.keys.foreach { k =>
-      if (k._1.sparkContext.isStopped) fpCache.remove(k): Unit
+  def fingerprintFor(spark: SparkSession, dir: String): DataFrame =
+    Intermediates.getOrBuild(spark, "audio_fingerprint", Tables.canonDir(dir)) {
+      audioFingerprint(spark, withPayloads(Tables.documents(spark, dir)))
+        .localCheckpoint(true)
     }
-    val key = (spark, Tables.canonDir(dir))
-    fpCache.getOrElse(
-      key,
-      fpLock.synchronized {
-        fpCache.getOrElseUpdate(
-          key,
-          audioFingerprint(spark, withPayloads(Tables.documents(spark, dir)))
-            .localCheckpoint(true)
-        )
-      }
-    )
-  }
 
   def mmAudioFp(spark: SparkSession, dir: String): DataFrame =
     fingerprintFor(spark, dir)

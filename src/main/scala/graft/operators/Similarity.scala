@@ -345,31 +345,19 @@ object Similarity {
     * projection, update = k·dim-group partial aggregation) plus a
     * k·dim-row driver collect — the standard broadcast-update shape.
     *
-    * Memoized per (session, input-plan semantic hash, k, iters): the
-    * registry has SEVEN consumers of the same trajectory (kmeans /
-    * outliers / silhouette / topics / nmi / ivf_kmeans / db_index),
-    * and a real pipeline trains the cartography once. The cached
-    * value is k·dim driver doubles — no executor-state lifecycle —
-    * and the semantic hash covers LocalRelation data, so spec-local
-    * inputs never collide; dead-session keys evict on access (the
-    * minedJaccardFor discipline).
+    * An [[Intermediates]] entry per (input-plan semantic hash, k,
+    * iters): the registry has SEVEN consumers of the same trajectory
+    * (kmeans / outliers / silhouette / topics / nmi / ivf_kmeans /
+    * db_index). The value is k·dim driver doubles — no executor-state
+    * lifecycle — and the semantic hash covers LocalRelation data, so
+    * spec-local inputs never collide.
     */
-  private val kmCentCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, Int, Int, Int), Seq[(Int, Seq[Double])]]()
-  private val kmCentLock = new Object
-
-  def kmeansCentroids(emb: DataFrame, k: Int, iters: Int): Seq[(Int, Seq[Double])] = {
-    kmCentCache.keys.foreach { kk =>
-      if (kk._1.sparkContext.isStopped) kmCentCache.remove(kk): Unit
-    }
-    val key = (emb.sparkSession, emb.queryExecution.analyzed.semanticHash(), k, iters)
-    kmCentCache.getOrElse(
-      key,
-      kmCentLock.synchronized {
-        kmCentCache.getOrElseUpdate(key, kmeansCentroidsUncached(emb, k, iters))
-      }
-    )
-  }
+  def kmeansCentroids(emb: DataFrame, k: Int, iters: Int): Seq[(Int, Seq[Double])] =
+    Intermediates.getOrBuild(
+      emb.sparkSession,
+      "kmeans_centroids",
+      (emb.queryExecution.analyzed.semanticHash(), k, iters)
+    )(kmeansCentroidsUncached(emb, k, iters))
 
   private def kmeansCentroidsUncached(emb: DataFrame, k: Int, iters: Int): Seq[(Int, Seq[Double])] = {
     val dec = org.apache.spark.sql.types.DecimalType(27, 10)
@@ -423,35 +411,17 @@ object Similarity {
   val QueryCount = 10
   val TopK = 5
 
-  /** Memoized exact ground truth per (SparkSession, dir) — the
-    * [[Dedup.minedJaccardFor]] discipline: the brute-force ranking is
-    * consumed by the ann_bruteforce report AND all three recall
-    * curves, and an eval suite computes its ground truth once. The
-    * checkpointed relation is queries×k rows (driver-size); entries of
-    * stopped contexts are evicted on access.
+  /** Exact ground truth, an [[Intermediates]] entry per (session, dir):
+    * the brute-force ranking is consumed by the ann_bruteforce report
+    * AND all three recall curves. The checkpointed relation is
+    * queries×k rows (driver-size).
     */
-  private val bfCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  private val bfLock = new Object
-
-  private def bruteForceFor(spark: SparkSession, dir: String): DataFrame = {
-    bfCache.keys.foreach { k =>
-      if (k._1.sparkContext.isStopped) bfCache.remove(k): Unit
+  private def bruteForceFor(spark: SparkSession, dir: String): DataFrame =
+    Intermediates.getOrBuild(spark, "ann_bruteforce", Tables.canonDir(dir)) {
+      val emb = Tables.embeddings(spark, dir)
+      bruteForceTopK(emb, emb.filter(col("vec_id") < QueryCount), TopK)
+        .localCheckpoint()
     }
-    val key = (spark, Tables.canonDir(dir))
-    bfCache.getOrElse(
-      key,
-      bfLock.synchronized {
-        bfCache.getOrElseUpdate(
-          key, {
-            val emb = Tables.embeddings(spark, dir)
-            bruteForceTopK(emb, emb.filter(col("vec_id") < QueryCount), TopK)
-              .localCheckpoint()
-          }
-        )
-      }
-    )
-  }
 
   def annBruteforce(spark: SparkSession, dir: String): DataFrame =
     bruteForceFor(spark, dir).orderBy(col("query_id"), col("rank"))
@@ -1793,30 +1763,15 @@ object Similarity {
       )
   }
 
-  /** Memoized PQ codebooks per (SparkSession, dir) — the index-build
-    * (an iterative driver-side trajectory of sliced k-means collects)
-    * is paid once; ann_pq and ann_recall_pq both rank against the
-    * SAME index, exactly as a production eval would.
+  /** PQ codebooks, an [[Intermediates]] entry per (session, dir) — the
+    * index-build (an iterative driver-side trajectory of sliced k-means
+    * collects) is paid once; ann_pq and ann_recall_pq both rank against
+    * the SAME index, exactly as a production eval would.
     */
-  private val pqBookCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String), Seq[(Int, Seq[(Int, Seq[Double])])]]()
-  private val pqBookLock = new Object
-
-  private def pqBooksFor(spark: SparkSession, dir: String): Seq[(Int, Seq[(Int, Seq[Double])])] = {
-    pqBookCache.keys.foreach { k =>
-      if (k._1.sparkContext.isStopped) pqBookCache.remove(k): Unit
+  private def pqBooksFor(spark: SparkSession, dir: String): Seq[(Int, Seq[(Int, Seq[Double])])] =
+    Intermediates.getOrBuild(spark, "pq_books", Tables.canonDir(dir)) {
+      pqCodebooks(Tables.embeddings(spark, dir), PqSubspaces, KmeansDim, PqCentroids, PqIters)
     }
-    val key = (spark, Tables.canonDir(dir))
-    pqBookCache.getOrElse(
-      key,
-      pqBookLock.synchronized {
-        pqBookCache.getOrElseUpdate(
-          key,
-          pqCodebooks(Tables.embeddings(spark, dir), PqSubspaces, KmeansDim, PqCentroids, PqIters)
-        )
-      }
-    )
-  }
 
   def annPq(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
@@ -2774,61 +2729,31 @@ object Similarity {
 
   // The default-parameter kNN mine (k=5, planes=4, dim=64) feeds THREE
   // registry consumers (embed_hubness, embed_lof, ann_graph's view A)
-  // and ann_graph's second view (seed 7) — mine once per
-  // (session, dir, seed) and share the checkpointed edge relation
-  // (the minedJaccardFor / trainedFor discipline).
-  private val knnCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String, Long, Int), DataFrame]()
-  private val knnLock = new Object
-
+  // and ann_graph's second view (seed 7) — one checkpointed edge
+  // relation per (session, dir, seed, planes)
   private[graft] def knnFor(
     spark: SparkSession,
     dir: String,
     seed: Long = 42L,
     planes: Int = 4
-  ): DataFrame = {
-    knnCache.keys.foreach { k =>
-      if (k._1.sparkContext.isStopped) knnCache.remove(k): Unit
+  ): DataFrame =
+    Intermediates.getOrBuild(spark, "knn", (Tables.canonDir(dir), seed, planes)) {
+      bucketedKnn(Tables.embeddings(spark, dir), 5, planes, 64, seed = seed)
+        .localCheckpoint()
     }
-    val key = (spark, Tables.canonDir(dir), seed, planes)
-    knnCache.getOrElse(
-      key,
-      knnLock.synchronized {
-        knnCache.getOrElseUpdate(
-          key,
-          bucketedKnn(Tables.embeddings(spark, dir), 5, planes, 64, seed = seed)
-            .localCheckpoint()
-        )
-      }
-    )
-  }
 
   // the graph-ANN long-range view (half-sampled coarse mine) — its own
-  // memo since its (sample, k, planes) differ from every knnFor key
-  private val coarseKnnCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-
-  private[graft] def coarseKnnFor(spark: SparkSession, dir: String): DataFrame = {
-    coarseKnnCache.keys.foreach { k =>
-      if (k._1.sparkContext.isStopped) coarseKnnCache.remove(k): Unit
+  // entry since its (sample, k, planes) differ from every knnFor key
+  private[graft] def coarseKnnFor(spark: SparkSession, dir: String): DataFrame =
+    Intermediates.getOrBuild(spark, "knn_coarse", Tables.canonDir(dir)) {
+      bucketedKnn(
+        graphCoarseHalf(Tables.embeddings(spark, dir)),
+        GraphCoarseK,
+        GraphCoarsePlanes,
+        64,
+        seed = GraphSeedC
+      ).localCheckpoint()
     }
-    val key = (spark, Tables.canonDir(dir))
-    coarseKnnCache.getOrElse(
-      key,
-      knnLock.synchronized {
-        coarseKnnCache.getOrElseUpdate(
-          key,
-          bucketedKnn(
-            graphCoarseHalf(Tables.embeddings(spark, dir)),
-            GraphCoarseK,
-            GraphCoarsePlanes,
-            64,
-            seed = GraphSeedC
-          ).localCheckpoint()
-        )
-      }
-    )
-  }
 
   def hubnessScreen(
     emb: DataFrame,
@@ -3058,7 +2983,7 @@ object Similarity {
     * vectors the two fine views keep apart — the NSW long-link
     * ingredient — and the half-sample prices the view at (n/2)²/4 =
     * n²/16 scored pairs, exactly ONE fine view, so the three-view mine
-    * is 1.5× the round-12 two-view mine. Measured at sf0.1 (GraphTune):
+    * is 1.5× the round-12 two-view mine. Measured at sf0.1:
     * recall@5 0.60 (two views) → 0.90 (this config; full-corpus coarse
     * at 3× mine cost reads 0.86-0.94 — the half-sample keeps nearly
     * all of the win at half the added cost). Edge retention (k=8) is
@@ -3184,40 +3109,24 @@ object Similarity {
   }
 
   // the beam result feeds both ann_graph and ann_recall_graph — pay
-  // the two-view mine + beam once per (session, dir), the
-  // bruteForceFor discipline (queries × k rows: driver-trivial to pin)
-  private val graphCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  private val graphLock = new Object
-
-  private def graphTopKFor(spark: SparkSession, dir: String): DataFrame = {
-    graphCache.keys.foreach { k =>
-      if (k._1.sparkContext.isStopped) graphCache.remove(k): Unit
-    }
-    val key = (spark, Tables.canonDir(dir))
-    graphCache.getOrElse(
-      key,
-      graphLock.synchronized {
-        graphCache.getOrElseUpdate(
-          key, {
-            val emb = Tables.embeddings(spark, dir)
-            graphBeamTopK(
-              emb,
-              emb.filter(col("vec_id") < QueryCount),
-              TopK,
-              minedViews = Some(
-                Seq(
-                  knnFor(spark, dir),
-                  knnFor(spark, dir, GraphSeedB),
-                  coarseKnnFor(spark, dir)
-                )
-              )
-            ).localCheckpoint()
-          }
+  // the three-view mine + beam once per (session, dir) (queries × k
+  // rows: driver-trivial to pin)
+  private def graphTopKFor(spark: SparkSession, dir: String): DataFrame =
+    Intermediates.getOrBuild(spark, "ann_graph", Tables.canonDir(dir)) {
+      val emb = Tables.embeddings(spark, dir)
+      graphBeamTopK(
+        emb,
+        emb.filter(col("vec_id") < QueryCount),
+        TopK,
+        minedViews = Some(
+          Seq(
+            knnFor(spark, dir),
+            knnFor(spark, dir, GraphSeedB),
+            coarseKnnFor(spark, dir)
+          )
         )
-      }
-    )
-  }
+      ).localCheckpoint()
+    }
 
   def annGraph(spark: SparkSession, dir: String): DataFrame =
     graphTopKFor(spark, dir).orderBy(col("query_id"), col("rank"))
@@ -3633,35 +3542,16 @@ object Similarity {
       .toDF("dim", "loading")
   }
 
-  /** Memoized (µ, published u₁) per (SparkSession, dir) — the
-    * [[Dedup.minedJaccardFor]] discipline: embed_pca and embed_debias
-    * are two REPORTS over one shared power-iteration result, computed
-    * once per session/data directory (a production diagnostics suite
-    * runs the iteration once and serves every consumer). Entries of
-    * stopped contexts are evicted on access; driver memory per entry
-    * is two d-element arrays.
+  /** (µ, published u₁), an [[Intermediates]] entry per (session, dir):
+    * embed_pca and embed_debias are two REPORTS over one shared
+    * power-iteration result. Driver memory per entry is two d-element
+    * arrays.
     */
-  private val pcaCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), (Array[Double], Array[Double])]()
-  private val pcaLock = new Object
-
-  private def pcaFor(spark: SparkSession, dir: String): (Array[Double], Array[Double]) = {
-    pcaCache.keys.foreach { k =>
-      if (k._1.sparkContext.isStopped) pcaCache.remove(k): Unit
+  private def pcaFor(spark: SparkSession, dir: String): (Array[Double], Array[Double]) =
+    Intermediates.getOrBuild(spark, "pca", Tables.canonDir(dir)) {
+      val (mu, s, norm) = powerIteration(Tables.embeddings(spark, dir), iters = 8)
+      (mu, s.map(z => round6(z / norm)))
     }
-    val key = (spark, Tables.canonDir(dir))
-    pcaCache.getOrElse(
-      key,
-      pcaLock.synchronized {
-        pcaCache.getOrElseUpdate(
-          key, {
-            val (mu, s, norm) = powerIteration(Tables.embeddings(spark, dir), iters = 8)
-            (mu, s.map(z => round6(z / norm)))
-          }
-        )
-      }
-    )
-  }
 
   def embedPca(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -124,49 +124,20 @@ object Tokenizer {
     * a per-doc partial aggregation. No merge fold ever runs over the
     * corpus itself, and no state bigger than the vocabulary exists.
     */
-  def bpeEncodeStats(docs: DataFrame, rounds: Int = 10): DataFrame = {
-    val (_, vocab) = bpeTrain(docs, rounds)
-    val enc = vocab.select(col("word"), size(col("syms")).cast("long").as("w_tokens"))
-    docs
-      .filter(col("text").isNotNull && length(trim(col("text"))) > 0)
-      .select(col("doc_id"), explode(split(expr(TextAnalysis.NormSql), " ")).as("word"))
-      .filter(length(col("word")) > 0)
-      .join(enc, Seq("word"))
-      .groupBy(col("doc_id"))
-      .agg(
-        count(lit(1)).as("n_words"),
-        sum(length(col("word"))).cast("long").as("n_chars"),
-        sum(col("w_tokens")).as("n_tokens")
-      )
+  def bpeEncodeStats(docs: DataFrame, rounds: Int = 10): DataFrame =
+    encodedDocWords(docs, bpeTrain(docs, rounds)._2)
       .withColumn("ratio", round(col("n_tokens").cast("double") / col("n_chars"), 6))
-  }
-
-  // The registry has three consumers of the SAME training run (merge
-  // table, per-doc encode, per-lang fertility); a real pipeline trains
-  // once and every report reads the trained artifact. Train once per
-  // (SparkSession, sfDir) — the final vocabulary is already
-  // localCheckpoint'd by the round loop, and the merge table is a
-  // driver-size local relation — and let consumers share it (the
-  // minedJaccardFor discipline, including the dead-session eviction).
-  private val trainCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), (DataFrame, DataFrame)]()
-  private val trainLock = new Object
 
   /** (merges, final vocab) for the registry's fixed 10-round training
-    * run, computed once per (SparkSession, sfDir).
+    * run, an [[Intermediates]] entry per (session, sfDir) read by three
+    * consumers (merge table, per-doc encode, per-lang fertility). The
+    * final vocabulary is already localCheckpoint'd by the round loop,
+    * and the merge table is a driver-size local relation.
     */
-  def trainedFor(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    trainCache.keys.foreach { k =>
-      if (k._1.sparkContext.isStopped) trainCache.remove(k): Unit
+  def trainedFor(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
+    Intermediates.getOrBuild(spark, "bpe", Tables.canonDir(dir)) {
+      bpeTrain(Tables.documents(spark, dir))
     }
-    val key = (spark, Tables.canonDir(dir))
-    trainCache.getOrElse(
-      key,
-      trainLock.synchronized {
-        trainCache.getOrElseUpdate(key, bpeTrain(Tables.documents(spark, dir)))
-      }
-    )
-  }
 
   /** The (doc_id, word) stream + vocabulary join behind every encode
     * consumer: per-doc word/char/token partial sums.
@@ -383,26 +354,14 @@ object Tokenizer {
     (n2, enc)
   }
 
-  private val unigramCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), (DataFrame, DataFrame)]()
-  private val unigramLock = new Object
-
   /** (final counts, encoded vocab) for the registry's fixed training
-    * run, computed once per (SparkSession, sfDir) — the trainedFor
-    * discipline, shared by the train and tokenize consumers.
+    * run, an [[Intermediates]] entry per (session, sfDir) shared by the
+    * train and tokenize consumers.
     */
-  def unigramFor(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    unigramCache.keys.foreach { k =>
-      if (k._1.sparkContext.isStopped) unigramCache.remove(k): Unit
+  def unigramFor(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
+    Intermediates.getOrBuild(spark, "unigram", Tables.canonDir(dir)) {
+      unigramTrain(Tables.documents(spark, dir))
     }
-    val key = (spark, Tables.canonDir(dir))
-    unigramCache.getOrElse(
-      key,
-      unigramLock.synchronized {
-        unigramCache.getOrElseUpdate(key, unigramTrain(Tables.documents(spark, dir)))
-      }
-    )
-  }
 
   /** Top-20 final pieces by (count DESC, piece) with their log
     * probabilities — the trained-tokenizer report.
@@ -864,23 +823,10 @@ object Tokenizer {
     )
   }
 
-  // train once per (SparkSession, sfDir) — the trainedFor discipline
-  private val wordpieceCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), (DataFrame, DataFrame)]()
-  private val wordpieceLock = new Object
-
-  def wordpieceFor(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    wordpieceCache.keys.foreach { k =>
-      if (k._1.sparkContext.isStopped) wordpieceCache.remove(k): Unit
+  def wordpieceFor(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
+    Intermediates.getOrBuild(spark, "wordpiece", Tables.canonDir(dir)) {
+      wordpieceTrain(Tables.documents(spark, dir))
     }
-    val key = (spark, Tables.canonDir(dir))
-    wordpieceCache.getOrElse(
-      key,
-      wordpieceLock.synchronized {
-        wordpieceCache.getOrElseUpdate(key, wordpieceTrain(Tables.documents(spark, dir)))
-      }
-    )
-  }
 
   def trainWordpiece(spark: SparkSession, dir: String): DataFrame =
     wordpieceFor(spark, dir)._1

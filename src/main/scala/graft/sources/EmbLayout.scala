@@ -49,16 +49,12 @@ object EmbLayout {
     */
   private val planesCache = scala.collection.concurrent.TrieMap[String, Option[Int]]()
 
-  private def canonKey(path: String): String =
-    try new java.io.File(path).getCanonicalPath
-    catch { case scala.util.control.NonFatal(_) => path }
-
   def markerPlanes(
     rootPath: String,
     hadoopConf: org.apache.hadoop.conf.Configuration
   ): Option[Int] =
     planesCache.getOrElseUpdate(
-      canonKey(rootPath), {
+      graft.Tables.canonDir(rootPath), {
         try {
           val marker = new org.apache.hadoop.fs.Path(rootPath, PlanesMarker)
           val fs = marker.getFileSystem(hadoopConf)
@@ -82,7 +78,7 @@ object EmbLayout {
     try out.write(planes.toString.getBytes("UTF-8"))
     finally out.close()
     // a rewrite with a different plane set must invalidate the lookup
-    planesCache.remove(canonKey(path))
+    planesCache.remove(graft.Tables.canonDir(path))
   }
 
   /** One-time write: vectors land in their bucket's directory. One
@@ -128,8 +124,8 @@ object EmbLayout {
     // the overwrite is lazy w.r.t. the read — compacting a layout onto
     // itself (or into a dir nested under itself) would truncate the
     // layout being read and destroy it
-    val srcCanon = canonKey(srcPath)
-    val dstCanon = canonKey(dstPath)
+    val srcCanon = graft.Tables.canonDir(srcPath)
+    val dstCanon = graft.Tables.canonDir(dstPath)
     require(
       srcCanon != dstCanon && !dstCanon.startsWith(srcCanon + java.io.File.separator) &&
         !srcCanon.startsWith(dstCanon + java.io.File.separator),

@@ -38,10 +38,6 @@ object TsLayout {
     */
   private val widthCache = scala.collection.concurrent.TrieMap[String, Option[Long]]()
 
-  private def canonKey(path: String): String =
-    try new java.io.File(path).getCanonicalPath
-    catch { case scala.util.control.NonFatal(_) => path }
-
   /** The bucket width recorded in a layout's `_graft_bucket_us` marker,
     * None for markerless paths. This is how [[graft.plans.DeriveBucketFilter]]
     * learns each scanned layout's OWN width instead of trusting a
@@ -50,7 +46,7 @@ object TsLayout {
     */
   def markerWidth(rootPath: String, hadoopConf: org.apache.hadoop.conf.Configuration): Option[Long] =
     widthCache.getOrElseUpdate(
-      canonKey(rootPath), {
+      graft.Tables.canonDir(rootPath), {
         try {
           val marker = new org.apache.hadoop.fs.Path(rootPath, BucketMarker)
           val fs = marker.getFileSystem(hadoopConf)
@@ -92,7 +88,7 @@ object TsLayout {
     try out.write(bucketUs.toString.getBytes("UTF-8"))
     finally out.close()
     // a rewrite with a different width must invalidate the cached lookup
-    widthCache.remove(canonKey(path))
+    widthCache.remove(graft.Tables.canonDir(path))
   }
 
   /** Read a layout. Width handling needs no session step: the rule
@@ -123,8 +119,8 @@ object TsLayout {
     // the overwrite is lazy w.r.t. the read — compacting a layout onto
     // itself (or into a dir nested under itself) would truncate the
     // layout being read and destroy it
-    val srcCanon = canonKey(srcPath)
-    val dstCanon = canonKey(dstPath)
+    val srcCanon = graft.Tables.canonDir(srcPath)
+    val dstCanon = graft.Tables.canonDir(dstPath)
     require(
       srcCanon != dstCanon && !dstCanon.startsWith(srcCanon + java.io.File.separator) &&
         !srcCanon.startsWith(dstCanon + java.io.File.separator),
@@ -150,7 +146,7 @@ object TsLayout {
     val out = fs.create(marker, true)
     try out.write(bucketUs.toString.getBytes("UTF-8"))
     finally out.close()
-    widthCache.remove(canonKey(path))
+    widthCache.remove(graft.Tables.canonDir(path))
   }
 
   /** Range query that drives partition pruning: channel set + time
