@@ -146,25 +146,16 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env
-      .get("SPARK_GRAFT_CPUS")
-      .map(_.toInt)
-      .getOrElse(math.min(Runtime.getRuntime.availableProcessors, 32))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // reducer count sizes to the DATA, not the core count: a cluster
-      // deployment runs thousands of shuffle partitions so per-partition
-      // hash-join builds and sorts fit in executor memory, and the
-      // decade rehearsals (5M docs on one box) need the same lever —
-      // 32 partitions at sf100docs put ~160k docs' exploded streams in
-      // each shuffle-hash build and OOM ("not enough memory to build
-      // hash map"). Default stays cpus for the sf0.1 record.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.get("SPARK_GRAFT_SHUFFLE_PARTS").map(_.toInt).getOrElse(cpus))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val cpus = LocalSession.cpus
+    // reducer count sizes to the DATA, not the core count: a cluster
+    // deployment runs thousands of shuffle partitions so per-partition
+    // hash-join builds and sorts fit in executor memory, and the
+    // decade rehearsals (5M docs on one box) need the same lever —
+    // 32 partitions at sf100docs put ~160k docs' exploded streams in
+    // each shuffle-hash build and OOM ("not enough memory to build
+    // hash map"). Default stays cpus for the sf0.1 record.
+    val shuffleParts = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTS").map(_.toInt).getOrElse(cpus)
+    val spark = LocalSession.builder(cpus, shuffleParts).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // Execute the ACTUAL physical plan: df.count() would wrap the plan

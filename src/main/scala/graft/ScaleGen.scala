@@ -79,15 +79,8 @@ object ScaleGen {
     df.agg(max(col(key))).head.getLong(0) + 1L
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(math.min(Runtime.getRuntime.availableProcessors, 32))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val cpus = LocalSession.cpus
+    val spark = LocalSession.builder(cpus, cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     run(spark, args(0), args(1),
       if (args.length > 2) args(2).toInt else 10,

@@ -110,7 +110,7 @@ object SparkEntry {
     "dedup_semantic_clusters" -> (Similarity.dedupSemanticClusters _),
     "sample_coreset" -> (Similarity.sampleCoresetQ _),
     // reference blob format end to end: gzip BE-f64 store + range index
-    // built from events, read through BinarySegments.readRange
+    // built from events, read through BinarySegments.readRangePartitioned
     "ts_blob_range" -> (graft.sources.BlobStore.tsBlobRange _),
     "corpus_rollup" -> (TextAnalysis.corpusRollupQ _),
     "ts_pivot" -> (Timeseries.tsPivot _),

@@ -1,24 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env
-      .get("SPARK_GRAFT_CPUS")
-      .map(_.toInt)
-      .getOrElse(math.min(Runtime.getRuntime.availableProcessors, 32))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // testdata events.ts is TIMESTAMP(NANOS), which Spark 4 otherwise rejects
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val cpus = LocalSession.cpus
+    val spark = LocalSession.builder(cpus, cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_VERIFY_ONLY=a,b,c — dump only the named queries
@@ -82,7 +70,10 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    // only the selected ids, so a compare that walks this file sees a
+    // query that threw as missing output, not a skipped id
     val json = SparkEntry.oracleSql
+      .filter(kv => selected.contains(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Environment pin (separate file — an extra key in oracle_sql.json

@@ -1145,16 +1145,10 @@ object Dedup {
     // not kept), so a persist/unpersist chain re-runs the whole
     // upstream pipeline EVERY round — and lineage would grow per
     // round besides. localCheckpoint(eager) both materializes the
-    // round and truncates its plan to the stored blocks.
-    // handle on the block-store RDD behind a locally checkpointed
-    // Dataset, so a superseded round's blocks can be released as soon
-    // as the next round is materialized — without this, a long-lived
-    // driver retains up to maxIter label copies until GC
-    def checkpointBlocks(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-      df.queryExecution.logical match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd)
-        case _ => None
-      }
+    // round and truncates its plan to the stored blocks; a superseded
+    // round's blocks are released as soon as the next round is
+    // materialized, so a long-lived driver does not retain up to
+    // maxIter label copies.
     // ONE job per round: the convergence witness (exact decimal label
     // sum) rides the SAME action that materializes the checkpoint,
     // via an Observation on the label stream — the former separate
@@ -1198,7 +1192,7 @@ object Dedup {
         converged = s.compareTo(prevSum) == 0
         // `updated` is fully materialized into its own blocks (eager
         // checkpoint), so the superseded round's copy can go now
-        checkpointBlocks(labels).foreach(_.unpersist(false))
+        Checkpoints.release(labels)
         labels = updated
         prevSum = s
         iter += 1
@@ -1220,8 +1214,8 @@ object Dedup {
       // upstream caches always go; the labels themselves only survive a
       // successful return
       pairs.unpersist()
-      checkpointBlocks(edges).foreach(_.unpersist(false))
-      if (!succeeded) checkpointBlocks(labels).foreach(_.unpersist(false))
+      Checkpoints.release(edges)
+      if (!succeeded) Checkpoints.release(labels)
     }
   }
 
@@ -1256,11 +1250,6 @@ object Dedup {
     * [[connectedComponents]], which labels it a singleton).
     */
   def connectedComponentsStar(pairsIn: DataFrame, maxIter: Int = 30): DataFrame = {
-    def checkpointBlocks(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-      df.queryExecution.logical match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd)
-        case _ => None
-      }
     def ck(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
     var edges = ck(
@@ -1307,7 +1296,7 @@ object Dedup {
         val next = ck(small)
         val sameCount = next.count() == edges.count()
         converged = sameCount && next.exceptAll(edges).isEmpty
-        checkpointBlocks(edges).foreach(_.unpersist(false))
+        Checkpoints.release(edges)
         edges = next
         iter += 1
       }
@@ -1323,7 +1312,7 @@ object Dedup {
         .union(edges.select(col("a").as("node"), col("a").as("cluster")))
         .distinct()
     } finally {
-      if (!succeeded) checkpointBlocks(edges).foreach(_.unpersist(false))
+      if (!succeeded) Checkpoints.release(edges)
     }
   }
 
@@ -2040,11 +2029,6 @@ object Dedup {
       .join(deg, "src")
       .repartition(col("src"))
       .localCheckpoint(true)
-    def blocks(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-      df.queryExecution.logical match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd)
-        case _ => None
-      }
     var succeeded = false
     try {
       val nodes = wedges.select(col("src").as("node"), col("deg")).distinct().persist(sl)
@@ -2062,7 +2046,7 @@ object Dedup {
           .groupBy(col("dst").as("node"))
           .agg((lit(reset) / lit(nD) + lit(damping) * sum(col("c").cast(dec)).cast("double")).as("r"))
           .localCheckpoint(true)
-        blocks(ranks).foreach(_.unpersist(false))
+        Checkpoints.release(ranks)
         ranks = updated
         i += 1
       }
@@ -2073,7 +2057,7 @@ object Dedup {
     } finally {
       pairs.unpersist(false)
       edges.unpersist(false)
-      if (!succeeded) blocks(wedges).foreach(_.unpersist(false))
+      if (!succeeded) Checkpoints.release(wedges)
       // wedges/nodes stay pinned on success until the caller's action
       // completes; they are bucket-size relations and the session's
       // block manager reclaims them under pressure
@@ -2257,9 +2241,12 @@ object Dedup {
         .filter(col("__rn") === 1)
         .select(col("u").as("node"), col("lbl"))
         .localCheckpoint(true)
-      labels.unpersist(false)
+      Checkpoints.release(labels)
       labels = next
     }
+    // the result reads only the final labels
+    Checkpoints.release(pairs)
+    Checkpoints.release(edges)
     val sizes = labels.groupBy(col("lbl")).agg(count(lit(1)).as("community_size"))
     labels
       .join(sizes, Seq("lbl"))
@@ -2441,9 +2428,12 @@ object Dedup {
         .agg(max(least(col("hv"), col("__rn").cast("long"))).as("hv"))
         .select(col("u").as("node"), col("hv"))
         .localCheckpoint(true)
-      h.unpersist(false)
+      Checkpoints.release(h)
       h = next
     }
+    // the result reads only deg and the final values
+    Checkpoints.release(pairs)
+    Checkpoints.release(edges)
     deg
       .join(h, col("u") === col("node"))
       .select(col("u").as("doc_id"), col("deg").as("degree"), col("hv").as("coreness"))
@@ -2530,7 +2520,7 @@ object Dedup {
         .withColumn("d", lit(r.toLong))
         .localCheckpoint(true)
       val next = dist.unionByName(nxt).localCheckpoint(true)
-      dist.unpersist(false)
+      Checkpoints.release(dist)
       dist = next
       frontier = nxt
     }
@@ -2651,7 +2641,7 @@ object Dedup {
         .select(col("src"), col("node"), col("d"), col("sigma"))
         .localCheckpoint(true)
       val next = vis.unionByName(nxt).localCheckpoint(true)
-      vis.unpersist(false)
+      Checkpoints.release(vis)
       vis = next
       frontier = nxt
     }
@@ -2686,7 +2676,7 @@ object Dedup {
         .select(col("src"), col("node"), coalesce(col("delta"), lit(0.0)).as("delta"))
         .localCheckpoint(true)
       val nacc = acc.unionByName(dlvl).localCheckpoint(true)
-      acc.unpersist(false)
+      Checkpoints.release(acc)
       acc = nacc
       prevDelta = dlvl
     }

@@ -225,78 +225,61 @@ object Timeseries {
       .drop("__pb_prev1", "__pb_prev2", "__lag1", "__lag2", "__rnl")
   }
 
-  /** Adds `__bkt` and `__rn` = 1-based per-channel row number in
-    * (t, tieBreak) order, computed as a (channel, __bkt)-local
-    * row_number plus the channel's running row count over strictly
-    * preceding buckets (a sum over the tiny per-bucket summary,
-    * broadcast back). Identical to
-    * row_number() over (partition by channel order by t, tieBreak)
-    * with no per-channel sort anywhere.
+  /** The per-channel frame over a per-bucket summary that carries a
+    * running quantity into a bucket: every strictly preceding bucket.
     */
-  private def withGlobalRowNumber(df: DataFrame, bucketUs: Long, tieBreak: Seq[String]): DataFrame = {
-    val ord = col("t") +: tieBreak.map(col)
-    val bkted = df.withColumn("__bkt", microsBucket(col("t"), bucketUs))
-    val wLoc = Window.partitionBy(col("channel"), col("__bkt")).orderBy(ord: _*)
-    val wPrev = Window
-      .partitionBy(col("channel"))
-      .orderBy(col("__bkt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
+  private val wPrecedingBuckets = Window
+    .partitionBy(col("channel"))
+    .orderBy(col("__bkt"))
+    .rowsBetween(Window.unboundedPreceding, -1)
+
+  /** Adds `__bkt`, `__rn` = the 1-based per-channel row number in
+    * `order`, and for each `(name, x)` of `sums` a column `name` = the
+    * channel's inclusive running sum of `x` in `order` — exactly
+    * row_number() / sum(x) over (partition by channel order by
+    * `order`), with no per-channel sort over the data stream. Each is a
+    * (channel, __bkt)-local window plus the channel's total over
+    * strictly preceding buckets (row count, sum of `x`), all carried on
+    * ONE tiny per-bucket summary broadcast back. `__bkt` buckets
+    * `order.head` (an input that already carries it, e.g. from
+    * [[withStitchedPrev]], keeps its own), so (bucket, order) order ≡
+    * `order` order. Integer and DECIMAL addition is associative, so
+    * the stitched sums are bit-identical to the global window's.
+    * Outputs a caller never reads are pruned from the plan.
+    */
+  private def withStitchedRunningSums(
+    df: DataFrame,
+    sums: Seq[(String, Column)],
+    bucketUs: Long,
+    order: Seq[Column]
+  ): DataFrame = {
+    val bkted =
+      if (df.columns.contains("__bkt")) df
+      else df.withColumn("__bkt", microsBucket(order.head, bucketUs))
+    val wLoc = Window.partitionBy(col("channel"), col("__bkt")).orderBy(order: _*)
+    val wRun = wLoc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val prefix = bkted
       .groupBy(col("channel"), col("__bkt"))
-      .agg(count(lit(1)).as("__cnt"))
-      // aliased directly on the window expression (not inside a
+      .agg(count(lit(1)).as("__cnt"), sums.map { case (n, x) => sum(x).as(s"__s_$n") }: _*)
+      // aliased directly on the window expressions (not inside a
       // coalesce) so the __pb_ marker lands on the Window node itself —
-      // PlanSpec keys off it; null (first bucket) coalesces at use
-      .select(col("channel"), col("__bkt"), sum(col("__cnt")).over(wPrev).as("__pb_rnprefix"))
-    bkted
+      // PlanSpec keys off it; nulls (first bucket) coalesce at use
+      .select(
+        col("channel") +: col("__bkt") +:
+          sum(col("__cnt")).over(wPrecedingBuckets).as("__pb_rnprefix") +:
+          sums.map { case (n, _) => sum(col(s"__s_$n")).over(wPrecedingBuckets).as(s"__pb_$n") }: _*
+      )
+    val withRn = bkted
       .join(broadcast(prefix), Seq("channel", "__bkt"))
       .withColumn(
         "__rn",
         row_number().over(wLoc).cast("long") + coalesce(col("__pb_rnprefix"), lit(0L))
       )
-      .drop("__pb_rnprefix")
-  }
-
-  /** Adds `__bkt`, `__rn` (as [[withGlobalRowNumber]]) and `__ps` =
-    * the channel's inclusive running DECIMAL sum of `v` in
-    * (t, tieBreak) order — sum(v) over (partition by channel order by
-    * t, tieBreak), with no per-channel sort over the data stream: the
-    * (channel, __bkt)-local running sum plus the channel's exact
-    * DECIMAL total over strictly preceding buckets (carried on the
-    * tiny per-bucket summary, broadcast back). Decimal addition is
-    * associative, so the stitched sum is bit-identical to the global
-    * window's.
-    */
-  private def withGlobalPrefixSum(df: DataFrame, bucketUs: Long, tieBreak: Seq[String]): DataFrame = {
-    val ord = col("t") +: tieBreak.map(col)
-    val bkted = df.withColumn("__bkt", microsBucket(col("t"), bucketUs))
-    val wLocRn = Window.partitionBy(col("channel"), col("__bkt")).orderBy(ord: _*)
-    val wLoc = wLocRn.rowsBetween(Window.unboundedPreceding, 0)
-    val wPrev = Window
-      .partitionBy(col("channel"))
-      .orderBy(col("__bkt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val prefix = bkted
-      .groupBy(col("channel"), col("__bkt"))
-      .agg(count(lit(1)).as("__cnt"), sum(col("v").cast(dec2710)).as("__s"))
-      .select(
-        col("channel"),
-        col("__bkt"),
-        sum(col("__cnt")).over(wPrev).as("__pb_cntprefix"),
-        sum(col("__s")).over(wPrev).as("__pb_sumprefix")
-      )
-    bkted
-      .join(broadcast(prefix), Seq("channel", "__bkt"))
-      .withColumn(
-        "__rn",
-        row_number().over(wLocRn).cast("long") + coalesce(col("__pb_cntprefix"), lit(0L))
-      )
-      .withColumn(
-        "__ps",
-        sum(col("v").cast(dec2710)).over(wLoc) +
-          coalesce(col("__pb_sumprefix"), lit(0).cast(dec2710))
-      )
-      .drop("__pb_cntprefix", "__pb_sumprefix")
+    sums
+      .foldLeft(withRn) { case (d, (n, x)) =>
+        d.withColumn(n, sum(x).over(wRun) + coalesce(col(s"__pb_$n"), lit(0)))
+      }
+      .drop("__pb_rnprefix" +: sums.map { case (n, _) => s"__pb_$n" }: _*)
   }
 
   /** CUSUM drift screen per channel (Page 1954): the maximum absolute
@@ -309,7 +292,7 @@ object Timeseries {
     * bridge) reject stationarity.
     *
     * Scale shape: the running sum Σ_{j≤i} v_j comes from
-    * [[withGlobalPrefixSum]] — bucket-local windows plus an exact
+    * [[withStitchedRunningSums]] — bucket-local windows plus an exact
     * DECIMAL bucket-summary carry, never a per-channel sort of the
     * data stream; per-channel moments are one partial agg; scoring is
     * a broadcast-stats projection; the argmax resolves with a
@@ -346,7 +329,12 @@ object Timeseries {
           9
         ).as("__sigma")
       )
-    val scored = withGlobalPrefixSum(base, stitchBucketUs, Seq("event_id"))
+    val scored = withStitchedRunningSums(
+      base,
+      Seq("__ps" -> col("v").cast(dec2710)),
+      stitchBucketUs,
+      Seq(col("t"), col("event_id"))
+    )
       .join(broadcast(stats), Seq("channel"))
       .withColumn(
         "__a",
@@ -385,14 +373,14 @@ object Timeseries {
   }
 
   /** Halo-replicated row-number blocks — the two-phase rewrite for any
-    * BOUNDED-frame per-channel window: adds `__rn` (the stitched
-    * global per-channel row number), `__blk` and `__tgt`. A ±halo-row
-    * frame is a pure function of a bounded neighborhood, so partition
-    * each channel into blocks of B ≥ 2·halo consecutive rows (by row
-    * NUMBER — dense by construction, immune to empty time buckets and
-    * skewed arrival rates), replicate each block's first/last `halo`
-    * rows into the neighboring block (`__tgt` fans a row to every
-    * block that needs it), and evaluate frames over
+    * BOUNDED-frame per-channel window: adds `__rn` (the global
+    * per-channel row number of [[withStitchedRunningSums]]), `__blk`
+    * and `__tgt`. A ±halo-row frame is a pure function of a bounded
+    * neighborhood, so partition each channel into blocks of B ≥ 2·halo
+    * consecutive rows (by row NUMBER — dense by construction, immune to
+    * empty time buckets and skewed arrival rates), replicate each
+    * block's first/last `halo` rows into the neighboring block (`__tgt`
+    * fans a row to every block that needs it), and evaluate frames over
     * `Window.partitionBy(channel, __tgt).orderBy(__rn)`: on core rows
     * (`__tgt === __blk`, filtered AFTER all frames evaluate) the
     * result is row-for-row identical to the global per-channel window
@@ -408,7 +396,7 @@ object Timeseries {
   ): DataFrame = {
     val b = if (blockRows > 0) blockRows else math.max(4 * halo, 64)
     require(b >= 2 * halo, s"blockRows must be >= 2*halo, got $b < ${2 * halo}")
-    withGlobalRowNumber(df, bucketUs, tieBreak)
+    withStitchedRunningSums(df, Nil, bucketUs, col("t") +: tieBreak.map(col))
       .withColumn("__blk", expr(s"(__rn - 1) div $b"))
       .withColumn("__pos", expr(s"(__rn - 1) % $b"))
       .withColumn(
@@ -792,7 +780,7 @@ object Timeseries {
     * per channel and emit (min,max), dropping the trailing partial chunk
     * exactly like the reference (`grouped(n).take(floor(total/n))`).
     * The per-channel sample index comes from the two-phase
-    * [[withGlobalRowNumber]] — bucket-local row_number + summary-carry
+    * [[withStitchedRunningSums]] — bucket-local row_number + summary-carry
     * prefix — so no task ever sorts a whole channel; the chunk agg
     * after it is partial. Uniform-rate channels (the reference's actual
     * storage model) can still use [[resampleChunksUniform]], where the
@@ -800,7 +788,7 @@ object Timeseries {
     */
   def resampleChunks(tsIn: DataFrame, chunkSize: Int, stitchBucketUs: Long = StitchBucketUs): DataFrame = {
     val ts = withTieBreak(tsIn).select(col("channel"), col("t"), col("v"), col("event_id"))
-    withGlobalRowNumber(ts, stitchBucketUs, Seq("event_id"))
+    withStitchedRunningSums(ts, Nil, stitchBucketUs, Seq(col("t"), col("event_id")))
       .select(col("channel"), col("v"), expr(s"(__rn - 1) div $chunkSize").as("chunk"))
       .groupBy(col("channel"), col("chunk"))
       .agg(min(col("v")).as("cmin"), max(col("v")).as("cmax"), count(lit(1)).as("n"))
@@ -891,25 +879,7 @@ object Timeseries {
   private def contiguousSpansByThreshold(ts: DataFrame, stitchBucketUs: Long = StitchBucketUs): DataFrame = {
     val withBrk = withStitchedPrev(ts, Seq("t"), stitchBucketUs, Nil)
       .withColumn("__brk", when(col("t") - col("__prev_t") >= col("__gap"), 1L).otherwise(0L))
-    val wLoc = Window.partitionBy(col("channel"), col("__bkt")).orderBy(col("t"))
-    val wPrev = Window
-      .partitionBy(col("channel"))
-      .orderBy(col("__bkt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val spanPrefix = withBrk
-      .groupBy(col("channel"), col("__bkt"))
-      .agg(sum(col("__brk")).as("__bsum"))
-      // window expression aliased directly (PlanSpec marker) — nulls
-      // from the empty preceding-frame coalesce at use
-      .select(col("channel"), col("__bkt"), sum(col("__bsum")).over(wPrev).as("__pb_spanprefix"))
-    withBrk
-      .join(broadcast(spanPrefix), Seq("channel", "__bkt"))
-      .select(
-        col("channel"),
-        col("t"),
-        (sum(col("__brk")).over(wLoc.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-          + coalesce(col("__pb_spanprefix"), lit(0L))).as("span_id")
-      )
+    withStitchedRunningSums(withBrk, Seq("span_id" -> col("__brk")), stitchBucketUs, Seq(col("t")))
       .groupBy(col("channel"), col("span_id"))
       .agg(min(col("t")).as("span_start"), max(col("t")).as("span_end"), count(lit(1)).as("n"))
   }
@@ -2479,26 +2449,12 @@ object Timeseries {
         "__flag",
         when(col("__prev_t").isNull || (col("t") - col("__prev_t")) >= gapUs, 1L).otherwise(0L)
       )
-    val wLoc = Window
-      .partitionBy(col("channel"), col("__bkt"))
-      .orderBy(col("t"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wPrev = Window
-      .partitionBy(col("channel"))
-      .orderBy(col("__bkt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val prefix = flagged
-      .groupBy(col("channel"), col("__bkt"))
-      .agg(sum(col("__flag")).as("__cnt"))
-      // aliased directly on the window expression — the __pb_ marker
-      // identifies the tiny summary branch (PlanSpec keys off it)
-      .select(col("channel"), col("__bkt"), sum(col("__cnt")).over(wPrev).as("__pb_flagprefix"))
-    flagged
-      .join(broadcast(prefix), Seq("channel", "__bkt"))
-      .withColumn(
-        "session_id",
-        sum(col("__flag")).over(wLoc) + coalesce(col("__pb_flagprefix"), lit(0L))
-      )
+    withStitchedRunningSums(
+      flagged,
+      Seq("session_id" -> col("__flag")),
+      bucketUs,
+      Seq(col("t"), col("event_id"))
+    )
       .select(col("channel").as("user_id"), col("t"), col("session_id"))
   }
 
@@ -2627,7 +2583,7 @@ object Timeseries {
   ): DataFrame = {
     import spark.implicits._
     val ts = withTieBreak(tsIn).select(col("channel"), col("t"), col("v"), col("event_id"))
-    withGlobalRowNumber(ts, stitchBucketUs, Seq("event_id"))
+    withStitchedRunningSums(ts, Nil, stitchBucketUs, Seq(col("t"), col("event_id")))
       .select(
         col("channel"),
         col("t"),
@@ -2821,14 +2777,6 @@ object Timeseries {
       .partitionBy(col("channel"), col("__bkt"))
       .orderBy(col("s"), col("e"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val wLocRun = Window
-      .partitionBy(col("channel"), col("__bkt"))
-      .orderBy(col("s"), col("e"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wPrevBkt = Window
-      .partitionBy(col("channel"))
-      .orderBy(col("__bkt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
     // phase 1: per-bucket max(e) summary; strictly-preceding-bucket
     // prefix max carried per channel over the tiny summary relation
     // (aliased directly on the window expression so the __pb_ marker
@@ -2836,7 +2784,7 @@ object Timeseries {
     val emax = bkted
       .groupBy(col("channel"), col("__bkt"))
       .agg(max(col("e")).as("__be"))
-      .select(col("channel"), col("__bkt"), max(col("__be")).over(wPrevBkt).as("__pb_emaxprefix"))
+      .select(col("channel"), col("__bkt"), max(col("__be")).over(wPrecedingBuckets).as("__pb_emaxprefix"))
     // greatest() skips nulls: null iff first row of the first bucket
     val prevMaxEnd = greatest(max(col("e")).over(wLocPrev), col("__pb_emaxprefix"))
     val flagged = bkted
@@ -2844,16 +2792,12 @@ object Timeseries {
       .withColumn("new_island", when(prevMaxEnd.isNull || col("s") > prevMaxEnd, 1L).otherwise(0L))
       .drop("__pb_emaxprefix")
     // phase 2: island id = stitched running sum of the flags
-    val icnt = flagged
-      .groupBy(col("channel"), col("__bkt"))
-      .agg(sum(col("new_island")).as("__bi"))
-      .select(col("channel"), col("__bkt"), sum(col("__bi")).over(wPrevBkt).as("__pb_islprefix"))
-    flagged
-      .join(broadcast(icnt), Seq("channel", "__bkt"))
-      .withColumn(
-        "island",
-        sum(col("new_island")).over(wLocRun) + coalesce(col("__pb_islprefix"), lit(0L))
-      )
+    withStitchedRunningSums(
+      flagged,
+      Seq("island" -> col("new_island")),
+      stitchBucketUs,
+      Seq(col("s"), col("e"))
+    )
       .groupBy(col("channel"), col("island"))
       .agg(min(col("s")).as("span_start"), max(col("e")).as("span_end"), count(lit(1)).as("n"))
   }

@@ -57,7 +57,7 @@ object Tokenizer {
     */
   def bpeMerges(docs: DataFrame, rounds: Int = 10): DataFrame = {
     val (m, vocab) = bpeTrain(docs, rounds)
-    vocab.unpersist(false)
+    Checkpoints.release(vocab)
     m
   }
 
@@ -104,7 +104,7 @@ object Tokenizer {
           (best(0).getAs[String]("lhs"), best(0).getAs[String]("rhs"), best(0).getAs[Long]("cnt"))
         merges += ((r.toLong, l, rr, l + rr, cnt))
         val next = vocab.withColumn("syms", mergeFold(col("syms"), l, rr)).localCheckpoint(true)
-        vocab.unpersist(false)
+        Checkpoints.release(vocab)
         vocab = next
       }
     }
@@ -813,7 +813,7 @@ object Tokenizer {
         )
         merges += ((r.toLong, l, rr, l + rr, cnt, sp))
         val next = vocab.withColumn("syms", mergeFold(col("syms"), l, rr)).localCheckpoint(true)
-        vocab.unpersist(false)
+        Checkpoints.release(vocab)
         vocab = next
       }
     }

@@ -104,11 +104,6 @@ object BinarySegments {
     os.close()
   }
 
-  /** Read blobs under `blobDir` located by `index(channel, file,
-    * start_us, rate)` into ts(channel, t, v) rows. The index is
-    * broadcast (it is the Postgres-range-table analog — tiny next to
-    * the data).
-    */
   /** The scan's `path` is a file URI ("file:/…"); the index's `file` is
     * a path RELATIVE to blobDir. Stripping the blobDir URI prefix from
     * the scan side recovers that exact relative path, so the join is a
@@ -133,6 +128,11 @@ object BinarySegments {
     )
   }
 
+  /** Read blobs under `blobDir` located by `index(channel, file,
+    * start_us, rate)` into ts(channel, t, v) rows. The index is
+    * broadcast (it is the Postgres-range-table analog — tiny next to
+    * the data).
+    */
   def read(spark: SparkSession, blobDir: String, index: DataFrame): DataFrame = {
     import spark.implicits._
     val blobs = spark.read

@@ -13,19 +13,10 @@ trait SparkSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // same extension set the driver mains run with: kernel SQL
-      // functions + the DeriveBucketFilter pruning rule (a no-op
-      // unless spark.graft.ts.bucketUs is set)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    // the session Verify and Bench run: GraftSession's confs, so the
+    // kernel SQL functions + the DeriveBucketFilter pruning rule (a
+    // no-op unless spark.graft.ts.bucketUs is set) are loaded
+    val s = LocalSession.builder(4, 4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -454,6 +454,40 @@ class TimeseriesSpec extends SparkSpec {
     got shouldBe expected
   }
 
+  it should "be invariant to the stitch bucket width, with t ties ordered by event_id" in {
+    // pairs of rows share a t and carry scrambled event_ids, so the
+    // stitched row number must order each tie by event_id; t spans
+    // negative values, and width 7 leaves empty buckets between rows
+    val rows = for {
+      ch <- Seq("a", "b")
+      i <- 0 until 62
+    } yield (ch, (i / 2) * 53L - 400L, math.sin(i * 0.7) * (i + 1), (i * 7919L + ch.head) % 1009L)
+    val df = rows.toDF("channel", "t", "v", "event_id")
+    def run(width: Long) = Timeseries
+      .spikeWaveforms(spark, df, spikeDataPointCount = 5, chunkCount = 2, stitchBucketUs = width)
+      .orderBy("channel", "wf", "chunk")
+      .as[(String, Long, Long, Double, Double)]
+      .collect()
+      .toList
+    val ref = run(1L << 60)
+    // reference: each channel sorted by (t, event_id), grouped(5) and
+    // resampled; the 2-row tail waveform is emitted like the rest
+    ref shouldBe rows
+      .groupBy(_._1)
+      .toList
+      .sortBy(_._1)
+      .flatMap { case (ch, rs) =>
+        rs.sortBy(r => (r._2, r._4)).map(_._3).grouped(5).zipWithIndex.flatMap { case (g, wf) =>
+          graft.streaming.RealtimeResample.resample(g.toVector, 2).zipWithIndex.map {
+            case ((mn, mx), c) => (ch, wf.toLong, c.toLong, mn, mx)
+          }
+        }
+      }
+    for (width <- Seq(7L, 300L, 86400000000L)) withClue(s"width $width:") {
+      run(width) shouldBe ref
+    }
+  }
+
   "rangeQuery" should "trim to the window and keep pushable predicates" in {
     val df = Timeseries.tsRange(spark, sfDir)
     df.count() should be > 0L
