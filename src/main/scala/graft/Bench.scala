@@ -50,6 +50,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
+  /** At most this many inflated queries are restamped (worst first). */
+  private val RestampN = 10
+
   private def splitmixLoop(): Long = {
     var x = 0x9e3779b97f4a7c15L
     var acc = 0L
@@ -240,14 +243,13 @@ object Bench {
           .map(m => m.group(1) -> m.group(2).toDouble).toMap
       } catch { case e: Throwable => Console.err.println(s"[bench] ref record unreadable: ${e.getMessage}"); Map.empty[String, Double] }
     }.getOrElse(Map.empty)
-    val restampN = sys.env.get("SPARK_GRAFT_RESTAMP_N").map(_.toInt).getOrElse(10)
     val outliers = first
       .flatMap { case (name, t) =>
         benchRef.get(name).collect {
           case ref if ref > 0.2 && t > 0 && t / ref > 1.3 => (name, t / ref)
         }
       }
-      .toSeq.sortBy(-_._2).take(restampN).map(_._1)
+      .toSeq.sortBy(-_._2).take(RestampN).map(_._1)
     val results = first.map { case (name, t) =>
       if (outliers.contains(name)) {
         val t2 = stamp(name, selected(name))

@@ -1112,8 +1112,8 @@ object Dedup {
     * diameter; near-dup clusters are shallow (members share a
     * template), so a handful of rounds suffices — if diameters ever
     * grew, alternating large-star/small-star cuts rounds to O(log n).
-    * At production scale, checkpoint `labels` every few rounds to
-    * truncate lineage; here the per-round persist suffices.
+    * Every round's labels are an eager local checkpoint, so each
+    * round plans against stored blocks and lineage never grows.
     *
     * Output: (node, cluster) for every doc appearing in a pair, with
     * cluster = the component's minimum doc_id.
@@ -1129,57 +1129,51 @@ object Dedup {
     val oriented = pairs
       .select(col("doc_a").as("u"), col("doc_b").as("v"))
       .union(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
-    // edges are LOCALLY CHECKPOINTED, not merely persisted: a persist
-    // leaves the whole upstream mining pipeline's logical plan under
-    // every round, and Catalyst re-analyzes/re-optimizes that tree for
-    // each round's fresh QueryExecution — measured on the pageRank
-    // sibling loop as ~3 s of DRIVER time per round vs ~0.02 s of
-    // executor time. The checkpoint truncates each round's plan to
-    // (LogicalRDD join LogicalRDD).
-    val edges = oriented
-      .union(oriented.select(col("u"), col("u").as("v")))
-      .localCheckpoint(true)
-    // labels live on LOCALLY CHECKPOINTED rdds, not chained persists:
-    // uncaching round i's labels would force Spark to re-cache round
-    // i+1's entry from scratch (buffers of dependents are invalidated,
-    // not kept), so a persist/unpersist chain re-runs the whole
-    // upstream pipeline EVERY round — and lineage would grow per
-    // round besides. localCheckpoint(eager) both materializes the
-    // round and truncates its plan to the stored blocks; a superseded
-    // round's blocks are released as soon as the next round is
-    // materialized, so a long-lived driver does not retain up to
-    // maxIter label copies.
-    // ONE job per round: the convergence witness (exact decimal label
-    // sum) rides the SAME action that materializes the checkpoint,
-    // via an Observation on the label stream — the former separate
-    // labelSum aggregation doubled the job count of every round.
-    // Empty input sums to SQL NULL — normalize to zero so an empty
-    // pair set converges after one round instead of burning maxIter
-    // no-op rounds on never-equal nulls.
-    def checkpointWithSum(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = df
-        .observe(obs, sum(col("cluster").cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("s"))
-        .localCheckpoint(true)
-      val s = obs.get("s").asInstanceOf[java.math.BigDecimal]
-      (ck, if (s == null) java.math.BigDecimal.ZERO else s)
-    }
-    // round 0, fused with initialization: labels(v) = v initially, so
-    // min over the self-looped neighborhood is a plain aggregation —
-    // no distinct-nodes job and no join; its sum seeds the witness
-    var (labels, prevSum) = checkpointWithSum(
-      edges
-        .groupBy(col("u").as("node"))
-        .agg(min(col("v")).as("cluster"))
-    )
-    var iter = 1
-    var converged = false
-    // try/finally so a mid-loop failure (including the non-convergence
-    // throw below) releases every block this call pinned — pairs,
-    // edges, and the in-flight label round — instead of leaking them
-    // for the life of the driver
-    var succeeded = false
-    try {
+    // the final labels are self-contained pinned blocks, so the
+    // upstream cache always goes
+    try Checkpoints.scoped { pins =>
+      // edges are LOCALLY CHECKPOINTED, not merely persisted: a persist
+      // leaves the whole upstream mining pipeline's logical plan under
+      // every round, and Catalyst re-analyzes/re-optimizes that tree for
+      // each round's fresh QueryExecution — measured on the pageRank
+      // sibling loop as ~3 s of DRIVER time per round vs ~0.02 s of
+      // executor time. The checkpoint truncates each round's plan to
+      // (LogicalRDD join LogicalRDD).
+      val edges = pins(oriented.union(oriented.select(col("u"), col("u").as("v"))))
+      // labels live on LOCALLY CHECKPOINTED rdds, not chained persists:
+      // uncaching round i's labels would force Spark to re-cache round
+      // i+1's entry from scratch (buffers of dependents are invalidated,
+      // not kept), so a persist/unpersist chain re-runs the whole
+      // upstream pipeline EVERY round — and lineage would grow per
+      // round besides. localCheckpoint(eager) both materializes the
+      // round and truncates its plan to the stored blocks; each round
+      // replaces the one it supersedes, so a long-lived driver does not
+      // retain up to maxIter label copies.
+      // ONE job per round: the convergence witness (exact decimal label
+      // sum) rides the SAME action that materializes the checkpoint,
+      // via an Observation on the label stream — the former separate
+      // labelSum aggregation doubled the job count of every round.
+      // Empty input sums to SQL NULL — normalize to zero so an empty
+      // pair set converges after one round instead of burning maxIter
+      // no-op rounds on never-equal nulls.
+      def checkpointWithSum(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
+        val obs = org.apache.spark.sql.Observation()
+        val ck = pins(
+          df.observe(obs, sum(col("cluster").cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("s"))
+        )
+        val s = obs.get("s").asInstanceOf[java.math.BigDecimal]
+        (ck, if (s == null) java.math.BigDecimal.ZERO else s)
+      }
+      // round 0, fused with initialization: labels(v) = v initially, so
+      // min over the self-looped neighborhood is a plain aggregation —
+      // no distinct-nodes job and no join; its sum seeds the witness
+      var (labels, prevSum) = checkpointWithSum(
+        edges
+          .groupBy(col("u").as("node"))
+          .agg(min(col("v")).as("cluster"))
+      )
+      var iter = 1
+      var converged = false
       while (!converged && iter < maxIter) {
         // self-loops make the neighborhood min include the node's own
         // label, so the aggregation output IS the new label relation
@@ -1190,10 +1184,7 @@ object Dedup {
             .agg(min(col("cluster")).as("cluster"))
         )
         converged = s.compareTo(prevSum) == 0
-        // `updated` is fully materialized into its own blocks (eager
-        // checkpoint), so the superseded round's copy can go now
-        Checkpoints.release(labels)
-        labels = updated
+        labels = pins.replace(labels, updated)
         prevSum = s
         iter += 1
       }
@@ -1207,16 +1198,8 @@ object Dedup {
           s"connectedComponents did not converge within $maxIter rounds; " +
             "raise maxIter (diameter-bound) for unusually deep components"
         )
-      succeeded = true
       labels
-    } finally {
-      // the final labels are self-contained checkpointed blocks, so the
-      // upstream caches always go; the labels themselves only survive a
-      // successful return
-      pairs.unpersist()
-      Checkpoints.release(edges)
-      if (!succeeded) Checkpoints.release(labels)
-    }
+    } finally pairs.unpersist()
   }
 
   /** Connected components by ALTERNATING LARGE-STAR / SMALL-STAR
@@ -1249,22 +1232,19 @@ object Dedup {
     * ignored (a node only ever paired with itself has no edge — unlike
     * [[connectedComponents]], which labels it a singleton).
     */
-  def connectedComponentsStar(pairsIn: DataFrame, maxIter: Int = 30): DataFrame = {
-    def ck(df: DataFrame): DataFrame = df.localCheckpoint(true)
-
-    var edges = ck(
-      pairsIn
-        .select(
-          least(col("doc_a"), col("doc_b")).as("a"),
-          greatest(col("doc_a"), col("doc_b")).as("b")
-        )
-        .filter(col("a") =!= col("b"))
-        .distinct()
-    )
-    var iter = 0
-    var converged = edges.isEmpty
-    var succeeded = false
-    try {
+  def connectedComponentsStar(pairsIn: DataFrame, maxIter: Int = 30): DataFrame =
+    Checkpoints.scoped { pins =>
+      var edges = pins(
+        pairsIn
+          .select(
+            least(col("doc_a"), col("doc_b")).as("a"),
+            greatest(col("doc_a"), col("doc_b")).as("b")
+          )
+          .filter(col("a") =!= col("b"))
+          .distinct()
+      )
+      var iter = 0
+      var converged = edges.isEmpty
       while (!converged && iter < maxIter) {
         // large-star: m(u) = min(N(u) ∪ {u}); emit (m(u), v) for v > u
         val nbrs = edges
@@ -1293,11 +1273,10 @@ object Dedup {
           .select(col("m").as("a"), col("v").as("b"))
           .union(mins2.select(col("m").as("a"), col("u").as("b")))
           .distinct()
-        val next = ck(small)
+        val next = pins(small)
         val sameCount = next.count() == edges.count()
         converged = sameCount && next.exceptAll(edges).isEmpty
-        Checkpoints.release(edges)
-        edges = next
+        edges = pins.replace(edges, next)
         iter += 1
       }
       if (!converged)
@@ -1305,16 +1284,12 @@ object Dedup {
           s"connectedComponentsStar did not converge within $maxIter rounds — " +
             "O(log n) bound exceeded; inspect the edge distribution"
         )
-      succeeded = true
       // fixpoint edges are (component-min, member): read labels off
       edges
         .select(col("b").as("node"), col("a").as("cluster"))
         .union(edges.select(col("a").as("node"), col("a").as("cluster")))
         .distinct()
-    } finally {
-      if (!succeeded) Checkpoints.release(edges)
     }
-  }
 
   /** Components + survivor flag: survivor = the cluster's min doc_id. */
   def clustersWithSurvivors(pairs: DataFrame): DataFrame =
@@ -1997,9 +1972,9 @@ object Dedup {
     * weighted-edge side reuses its partitioning) plus one dst-keyed
     * partial agg — the standard Pregel-style iteration expressed
     * relationally, at one shuffle of node-scale data per round.
-    * Rounds ride localCheckpoint(eager) with block release, exactly
-    * like [[connectedComponents]], so lineage stays flat and
-    * superseded rounds free their blocks.
+    * Rounds ride localCheckpoint(eager) in a [[Checkpoints.scoped]]
+    * pin set, exactly like [[connectedComponents]], so lineage stays
+    * flat and superseded rounds free their blocks.
     *
     * Portability: contributions divide identical doubles by identical
     * integer degrees; each round's sum routes through DECIMAL(27,10)
@@ -2017,50 +1992,43 @@ object Dedup {
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .persist(sl)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    // degree folded into the edges once, partitioned on the join key —
-    // and LOCALLY CHECKPOINTED, not merely persisted: a persist leaves
-    // the mining pipeline's full logical plan under every round, and
-    // Catalyst re-analyzes/re-optimizes that whole tree for each
-    // round's new QueryExecution (measured: ~3 s of DRIVER time per
-    // round against ~0.02 s of executor time — the loop was
-    // planner-bound, not data-bound). The checkpoint truncates the
-    // tree to a LogicalRDD, so every round's plan is iteration-sized.
-    val wedges = edges
-      .join(deg, "src")
-      .repartition(col("src"))
-      .localCheckpoint(true)
-    var succeeded = false
-    try {
+    try Checkpoints.scoped { pins =>
+      // degree folded into the edges once, partitioned on the join key —
+      // and LOCALLY CHECKPOINTED, not merely persisted: a persist leaves
+      // the mining pipeline's full logical plan under every round, and
+      // Catalyst re-analyzes/re-optimizes that whole tree for each
+      // round's new QueryExecution (measured: ~3 s of DRIVER time per
+      // round against ~0.02 s of executor time — the loop was
+      // planner-bound, not data-bound). The checkpoint truncates the
+      // tree to a LogicalRDD, so every round's plan is iteration-sized.
+      val wedges = pins(edges.join(deg, "src").repartition(col("src")))
       val nodes = wedges.select(col("src").as("node"), col("deg")).distinct().persist(sl)
       val n = nodes.count() // node count: one metadata-scale job
       val nD = n.toDouble
       val reset = 1.0 - damping
-      var ranks = nodes
-        .select(col("node"), (lit(1.0) / lit(nD)).as("r"))
-        .localCheckpoint(true)
+      var ranks = pins(nodes.select(col("node"), (lit(1.0) / lit(nD)).as("r")))
       var i = 0
       while (i < iters) {
-        val updated = wedges
-          .join(ranks.select(col("node").as("src"), col("r")), "src")
-          .select(col("dst"), (col("r") / col("deg")).as("c"))
-          .groupBy(col("dst").as("node"))
-          .agg((lit(reset) / lit(nD) + lit(damping) * sum(col("c").cast(dec)).cast("double")).as("r"))
-          .localCheckpoint(true)
-        Checkpoints.release(ranks)
-        ranks = updated
+        ranks = pins.replace(
+          ranks,
+          wedges
+            .join(ranks.select(col("node").as("src"), col("r")), "src")
+            .select(col("dst"), (col("r") / col("deg")).as("c"))
+            .groupBy(col("dst").as("node"))
+            .agg((lit(reset) / lit(nD) + lit(damping) * sum(col("c").cast(dec)).cast("double")).as("r"))
+        )
         i += 1
       }
-      succeeded = true
+      // the result reads nodes and so wedges: both stay pinned until
+      // the caller's action completes. Local-checkpoint blocks are
+      // stored MEMORY_AND_DISK, so under memory pressure they spill to
+      // disk; they are never dropped and recomputed.
       ranks
         .join(nodes.select(col("node"), col("deg").as("n_links")), "node")
         .select(col("node").as("doc_id"), col("n_links"), round(col("r"), 6).as("pagerank"))
     } finally {
       pairs.unpersist(false)
       edges.unpersist(false)
-      if (!succeeded) Checkpoints.release(wedges)
-      // wedges/nodes stay pinned on success until the caller's action
-      // completes; they are bucket-size relations and the session's
-      // block manager reclaims them under pressure
     }
   }
 
@@ -2215,43 +2183,38 @@ object Dedup {
     * stays flat (the pageRank discipline). Integer-only: no float
     * portability surface at all.
     */
-  def labelPropagation(pairsIn: DataFrame, rounds: Int = 4): DataFrame = {
-    val pairs = pairsIn
-      .select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .localCheckpoint(true)
-    val edges = pairs
-      .union(pairs.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint(true)
-    var labels = edges
-      .select(col("u").as("node"))
-      .distinct()
-      .withColumn("lbl", col("node"))
-      .localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      val next = edges
-        .join(labels.select(col("node").as("__v2"), col("lbl")), col("v") === col("__v2"))
-        .groupBy(col("u"), col("lbl"))
-        .agg(count(lit(1)).as("__c"))
-        .withColumn(
-          "__rn",
-          row_number().over(
-            Window.partitionBy(col("u")).orderBy(col("__c").desc, col("lbl"))
-          )
+  def labelPropagation(pairsIn: DataFrame, rounds: Int = 4): DataFrame =
+    Checkpoints.scoped { pins =>
+      val pairs = pins(pairsIn.select(col("doc_a").as("u"), col("doc_b").as("v")))
+      val edges = pins(pairs.union(pairs.select(col("v").as("u"), col("u").as("v"))))
+      var labels = pins(
+        edges
+          .select(col("u").as("node"))
+          .distinct()
+          .withColumn("lbl", col("node"))
+      )
+      for (_ <- 1 to rounds) {
+        labels = pins.replace(
+          labels,
+          edges
+            .join(labels.select(col("node").as("__v2"), col("lbl")), col("v") === col("__v2"))
+            .groupBy(col("u"), col("lbl"))
+            .agg(count(lit(1)).as("__c"))
+            .withColumn(
+              "__rn",
+              row_number().over(
+                Window.partitionBy(col("u")).orderBy(col("__c").desc, col("lbl"))
+              )
+            )
+            .filter(col("__rn") === 1)
+            .select(col("u").as("node"), col("lbl"))
         )
-        .filter(col("__rn") === 1)
-        .select(col("u").as("node"), col("lbl"))
-        .localCheckpoint(true)
-      Checkpoints.release(labels)
-      labels = next
+      }
+      val sizes = labels.groupBy(col("lbl")).agg(count(lit(1)).as("community_size"))
+      labels
+        .join(sizes, Seq("lbl"))
+        .select(col("node").as("doc_id"), col("lbl").as("community"), col("community_size"))
     }
-    // the result reads only the final labels
-    Checkpoints.release(pairs)
-    Checkpoints.release(edges)
-    val sizes = labels.groupBy(col("lbl")).agg(count(lit(1)).as("community_size"))
-    labels
-      .join(sizes, Seq("lbl"))
-      .select(col("node").as("doc_id"), col("lbl").as("community"), col("community_size"))
-  }
 
   def graphCommunities(spark: SparkSession, dir: String): DataFrame =
     labelPropagation(
@@ -2406,38 +2369,32 @@ object Dedup {
     * it, but the sort still pins a (value desc, v) total order so both
     * engines window identically.
     */
-  def kcoreness(pairsIn: DataFrame, rounds: Int = 4): DataFrame = {
-    val pairs = pairsIn
-      .select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .localCheckpoint(true)
-    val edges = pairs
-      .union(pairs.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint(true)
-    val deg = edges.groupBy(col("u")).agg(count(lit(1)).as("deg")).localCheckpoint(true)
-    var h = deg.select(col("u").as("node"), col("deg").cast("long").as("hv"))
-    for (_ <- 1 to rounds) {
-      val next = edges
-        .join(h.select(col("node").as("__v2"), col("hv")), col("v") === col("__v2"))
-        .withColumn(
-          "__rn",
-          row_number().over(
-            Window.partitionBy(col("u")).orderBy(col("hv").desc, col("v"))
-          )
+  def kcoreness(pairsIn: DataFrame, rounds: Int = 4): DataFrame =
+    Checkpoints.scoped { pins =>
+      val pairs = pins(pairsIn.select(col("doc_a").as("u"), col("doc_b").as("v")))
+      val edges = pins(pairs.union(pairs.select(col("v").as("u"), col("u").as("v"))))
+      val deg = pins(edges.groupBy(col("u")).agg(count(lit(1)).as("deg")))
+      var h = deg.select(col("u").as("node"), col("deg").cast("long").as("hv"))
+      for (_ <- 1 to rounds) {
+        h = pins.replace(
+          h,
+          edges
+            .join(h.select(col("node").as("__v2"), col("hv")), col("v") === col("__v2"))
+            .withColumn(
+              "__rn",
+              row_number().over(
+                Window.partitionBy(col("u")).orderBy(col("hv").desc, col("v"))
+              )
+            )
+            .groupBy(col("u"))
+            .agg(max(least(col("hv"), col("__rn").cast("long"))).as("hv"))
+            .select(col("u").as("node"), col("hv"))
         )
-        .groupBy(col("u"))
-        .agg(max(least(col("hv"), col("__rn").cast("long"))).as("hv"))
-        .select(col("u").as("node"), col("hv"))
-        .localCheckpoint(true)
-      Checkpoints.release(h)
-      h = next
+      }
+      deg
+        .join(h, col("u") === col("node"))
+        .select(col("u").as("doc_id"), col("deg").as("degree"), col("hv").as("coreness"))
     }
-    // the result reads only deg and the final values
-    Checkpoints.release(pairs)
-    Checkpoints.release(edges)
-    deg
-      .join(h, col("u") === col("node"))
-      .select(col("u").as("doc_id"), col("deg").as("degree"), col("hv").as("coreness"))
-  }
 
   def graphKcore(spark: SparkSession, dir: String): DataFrame =
     kcoreness(
@@ -2499,30 +2456,26 @@ object Dedup {
     pairsIn: DataFrame,
     nSources: Int = 4,
     maxHops: Int = 6
-  ): DataFrame = {
+  ): DataFrame = Checkpoints.scoped { pins =>
     val pairs = pairsIn.select(col("doc_a").as("u"), col("doc_b").as("v"))
-    val edges = pairs
-      .unionByName(pairs.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-      .localCheckpoint(true)
-    val nodes = edges.select(col("u").as("doc_id")).distinct().localCheckpoint(true)
+    val edges = pins(pairs.unionByName(pairs.select(col("v").as("u"), col("u").as("v"))).distinct())
+    val nodes = pins(edges.select(col("u").as("doc_id")).distinct())
     val sources = nodes.orderBy(col("doc_id")).limit(nSources).select(col("doc_id").as("src"))
-    var dist = sources
-      .select(col("src"), col("src").as("node"), lit(0L).as("d"))
-      .localCheckpoint(true)
+    var dist = pins(sources.select(col("src"), col("src").as("node"), lit(0L).as("d")))
     var frontier = dist
     for (r <- 1 to maxHops) {
-      val nxt = frontier
-        .join(edges, frontier("node") === edges("u"))
-        .select(col("src"), col("v").as("node"))
-        .distinct()
-        .join(dist.select(col("src"), col("node")), Seq("src", "node"), "left_anti")
-        .withColumn("d", lit(r.toLong))
-        .localCheckpoint(true)
-      val next = dist.unionByName(nxt).localCheckpoint(true)
-      Checkpoints.release(dist)
-      dist = next
-      frontier = nxt
+      val nxt = pins(
+        frontier
+          .join(edges, frontier("node") === edges("u"))
+          .select(col("src"), col("v").as("node"))
+          .distinct()
+          .join(dist.select(col("src"), col("node")), Seq("src", "node"), "left_anti")
+          .withColumn("d", lit(r.toLong))
+      )
+      dist = pins.replace(dist, dist.unionByName(nxt))
+      // nxt supersedes the previous frontier (at hop 1 that is the
+      // seed round of dist, already freed just above)
+      frontier = pins.replace(frontier, nxt)
     }
     val agg = dist
       .filter(col("d") > 0)
@@ -2617,38 +2570,33 @@ object Dedup {
     pairsIn: DataFrame,
     nSources: Int = 4,
     maxHops: Int = 6
-  ): DataFrame = {
+  ): DataFrame = Checkpoints.scoped { pins =>
     val dec = org.apache.spark.sql.types.DecimalType(38, 10)
     val pairs = pairsIn.select(col("doc_a").as("u"), col("doc_b").as("v"))
-    val edges = pairs
-      .unionByName(pairs.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-      .localCheckpoint(true)
-    val nodes = edges.select(col("u").as("doc_id")).distinct().localCheckpoint(true)
+    val edges = pins(pairs.unionByName(pairs.select(col("v").as("u"), col("u").as("v"))).distinct())
+    val nodes = pins(edges.select(col("u").as("doc_id")).distinct())
     val sources = nodes.orderBy(col("doc_id")).limit(nSources).select(col("doc_id").as("src"))
-    var vis = sources
-      .select(col("src"), col("src").as("node"), lit(0L).as("d"), lit(1L).as("sigma"))
-      .localCheckpoint(true)
+    var vis = pins(sources.select(col("src"), col("src").as("node"), lit(0L).as("d"), lit(1L).as("sigma")))
     var frontier = vis
     for (r <- 1 to maxHops) {
-      val nxt = frontier
-        .join(edges, frontier("node") === edges("u"))
-        .select(col("src"), col("v").as("node"), col("sigma"))
-        .join(vis.select(col("src"), col("node")), Seq("src", "node"), "left_anti")
-        .groupBy(col("src"), col("node"))
-        .agg(sum(col("sigma")).as("sigma"))
-        .withColumn("d", lit(r.toLong))
-        .select(col("src"), col("node"), col("d"), col("sigma"))
-        .localCheckpoint(true)
-      val next = vis.unionByName(nxt).localCheckpoint(true)
-      Checkpoints.release(vis)
-      vis = next
-      frontier = nxt
+      val nxt = pins(
+        frontier
+          .join(edges, frontier("node") === edges("u"))
+          .select(col("src"), col("v").as("node"), col("sigma"))
+          .join(vis.select(col("src"), col("node")), Seq("src", "node"), "left_anti")
+          .groupBy(col("src"), col("node"))
+          .agg(sum(col("sigma")).as("sigma"))
+          .withColumn("d", lit(r.toLong))
+          .select(col("src"), col("node"), col("d"), col("sigma"))
+      )
+      vis = pins.replace(vis, vis.unionByName(nxt))
+      frontier = pins.replace(frontier, nxt)
     }
-    var prevDelta = vis
-      .filter(col("d") === maxHops)
-      .select(col("src"), col("node"), lit(0.0).as("delta"))
-      .localCheckpoint(true)
+    var prevDelta = pins(
+      vis
+        .filter(col("d") === maxHops)
+        .select(col("src"), col("node"), lit(0.0).as("delta"))
+    )
     var acc = prevDelta
     for (l <- (maxHops - 1) to 0 by -1) {
       val lvl = vis.filter(col("d") === l).select(col("src"), col("node"), col("sigma"))
@@ -2670,15 +2618,14 @@ object Dedup {
         )
         .groupBy(col("src"), col("node"))
         .agg(round(sum(col("term").cast(dec)).cast("double"), 9).as("delta"))
-      val dlvl = lvl
-        .select(col("src"), col("node"))
-        .join(contrib, Seq("src", "node"), "left")
-        .select(col("src"), col("node"), coalesce(col("delta"), lit(0.0)).as("delta"))
-        .localCheckpoint(true)
-      val nacc = acc.unionByName(dlvl).localCheckpoint(true)
-      Checkpoints.release(acc)
-      acc = nacc
-      prevDelta = dlvl
+      val dlvl = pins(
+        lvl
+          .select(col("src"), col("node"))
+          .join(contrib, Seq("src", "node"), "left")
+          .select(col("src"), col("node"), coalesce(col("delta"), lit(0.0)).as("delta"))
+      )
+      acc = pins.replace(acc, acc.unionByName(dlvl))
+      prevDelta = pins.replace(prevDelta, dlvl)
     }
     val bsum = acc
       .filter(col("node") =!= col("src"))

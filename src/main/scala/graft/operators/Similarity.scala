@@ -3033,7 +3033,7 @@ object Similarity {
     planes: Int = 4,
     dim: Int = 64,
     minedViews: Option[Seq[DataFrame]] = None
-  ): DataFrame = {
+  ): DataFrame = Checkpoints.scoped { pins =>
     // MULTI-VIEW NSW-style graph: a single LSH-bucketed kNN mine only
     // has INTRA-bucket edges, so true neighbors hashed into other
     // buckets are unreachable at any beam budget. A second mine under
@@ -3060,11 +3060,12 @@ object Similarity {
     // hop instead of re-planning two mines × two window ranks each
     // time (at deployment scale the index persists to storage; this is
     // the in-session equivalent, the pagerank loop discipline)
-    val knn = mined
-      .select(col("__src").as("__gsrc"), col("__dst").as("__gdst"))
-      .union(mined.select(col("__dst").as("__gsrc"), col("__src").as("__gdst")))
-      .distinct()
-      .localCheckpoint(true)
+    val knn = pins(
+      mined
+        .select(col("__src").as("__gsrc"), col("__dst").as("__gdst"))
+        .union(mined.select(col("__dst").as("__gsrc"), col("__src").as("__gdst")))
+        .distinct()
+    )
     val c = prepped(emb, "__cid", "__vc", "__nc")
     val q = prepped(queries, "query_id", "__vq", "__nq")
     val ent = emb
@@ -3086,15 +3087,14 @@ object Similarity {
     // per-hop eager checkpoint keeps the unrolled plan FLAT (frontier
     // is |Q|·beam rows — driver-trivial to materialize; without it the
     // lineage nests a window rank + two joins per hop)
-    var frontier =
-      beamScore(q.select(col("query_id")).crossJoin(broadcast(ent))).localCheckpoint(true)
+    var frontier = pins(beamScore(q.select(col("query_id")).crossJoin(broadcast(ent))))
     for (_ <- 1 to hops) {
       val expanded = frontier
         .select(col("query_id"), col("__cand"))
         .join(knn, col("__cand") === col("__gsrc"))
         .select(col("query_id"), col("__gdst").as("__cand"))
       val cands = frontier.select(col("query_id"), col("__cand")).union(expanded).distinct()
-      frontier = beamScore(cands).localCheckpoint(true)
+      frontier = pins.replace(frontier, beamScore(cands))
     }
     frontier
       .filter(col("__cand") =!= col("query_id"))
@@ -3309,40 +3309,43 @@ object Similarity {
     pool: Int = MmrPool,
     m: Int = MmrK,
     lambda: Double = MmrLambda
-  ): DataFrame = {
+  ): DataFrame = Checkpoints.scoped { pins =>
     val c = prepped(emb, "__cid", "__vc", "__nc")
     val q = prepped(queries, "query_id", "__vq", "__nq")
     val byQsim = Window.partitionBy(col("query_id")).orderBy(col("sim9").desc, col("__cand"))
     val byQsimC = Window.partitionBy(col("query_id")).orderBy(col("sim9").desc, col("__cid"))
-    val cands = c
-      .join(broadcast(q), col("query_id") =!= col("__cid"))
-      .withColumn(
-        "sim9",
-        round(VectorMath.cosine(col("__vq"), col("__vc"), col("__nq"), col("__nc")), 9)
-      )
-      .withColumn("__rk", row_number().over(byQsimC))
-      .filter(col("__rk") <= pool)
-      .select(col("query_id"), col("__cid").as("__cand"), col("sim9"), col("__vc"), col("__nc"))
-      .localCheckpoint(true)
+    val cands = pins(
+      c
+        .join(broadcast(q), col("query_id") =!= col("__cid"))
+        .withColumn(
+          "sim9",
+          round(VectorMath.cosine(col("__vq"), col("__vc"), col("__nq"), col("__nc")), 9)
+        )
+        .withColumn("__rk", row_number().over(byQsimC))
+        .filter(col("__rk") <= pool)
+        .select(col("query_id"), col("__cid").as("__cand"), col("sim9"), col("__vc"), col("__nc"))
+    )
     val a = cands.select(col("query_id"), col("__cand").as("__a"), col("__vc").as("__va"), col("__nc").as("__na"))
     val b = cands.select(col("query_id"), col("__cand").as("__b"), col("__vc").as("__vb"), col("__nc").as("__nb"))
-    val csim = a
-      .join(b, Seq("query_id"))
-      .filter(col("__a") =!= col("__b"))
-      .select(
-        col("query_id"),
-        col("__a"),
-        col("__b"),
-        round(VectorMath.cosine(col("__va"), col("__vb"), col("__na"), col("__nb")), 9).as("cs9")
-      )
-      .localCheckpoint(true)
+    val csim = pins(
+      a
+        .join(b, Seq("query_id"))
+        .filter(col("__a") =!= col("__b"))
+        .select(
+          col("query_id"),
+          col("__a"),
+          col("__b"),
+          round(VectorMath.cosine(col("__va"), col("__vb"), col("__na"), col("__nb")), 9).as("cs9")
+        )
+    )
     val pool0 = cands.select(col("query_id"), col("__cand"), col("sim9"))
-    var selected = pool0
-      .withColumn("__rk", row_number().over(byQsim))
-      .filter(col("__rk") === 1)
-      .select(col("query_id"), col("__cand"), lit(1L).as("rank"), col("sim9"),
-        col("sim9").as("__mmrq"))
-      .localCheckpoint(true)
+    var selected = pins(
+      pool0
+        .withColumn("__rk", row_number().over(byQsim))
+        .filter(col("__rk") === 1)
+        .select(col("query_id"), col("__cand"), lit(1L).as("rank"), col("sim9"),
+          col("sim9").as("__mmrq"))
+    )
     for (r <- 2 to m) {
       val rem = pool0.join(
         selected.select(col("query_id"), col("__cand")),
@@ -3368,7 +3371,7 @@ object Similarity {
         .filter(col("__rk") === 1)
         .select(col("query_id"), col("__cand"), lit(r.toLong).as("rank"), col("sim9"),
           col("__mmr").as("__mmrq"))
-      selected = selected.union(pick).localCheckpoint(true)
+      selected = pins.replace(selected, selected.union(pick))
     }
     selected.select(
       col("query_id"),

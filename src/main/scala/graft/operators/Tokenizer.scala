@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Byte-pair-encoding tokenizer TRAINING (Sennrich et al. 2016) — the
@@ -68,47 +68,72 @@ object Tokenizer {
     * relation; no per-document merge replay is ever needed.
     */
   def bpeTrain(docs: DataFrame, rounds: Int = 10): (DataFrame, DataFrame) = {
-    require(rounds > 0, s"rounds must be positive, got $rounds")
     val spark = docs.sparkSession
     import spark.implicits._
-    var vocab = docs
+    val (picks, vocab) =
+      learnMerges(docs, rounds)(pairCounts(_).orderBy(col("cnt").desc, col("lhs"), col("rhs")))
+    val merges = picks.zipWithIndex.map { case (p, i) =>
+      val (l, rr) = (p.getAs[String]("lhs"), p.getAs[String]("rhs"))
+      (i + 1L, l, rr, l + rr, p.getAs[Long]("cnt"))
+    }
+    (merges.toDF("rank", "lhs", "rhs", "merged", "pair_count"), vocab)
+  }
+
+  /** The corpus's (word, freq) vocabulary — the one corpus scan every
+    * tokenizer learner runs before its rounds.
+    */
+  private def wordVocab(docs: DataFrame): DataFrame =
+    docs
       .filter(col("text").isNotNull && length(trim(col("text"))) > 0)
       .select(explode(split(expr(TextAnalysis.NormSql), " ")).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy(col("word"))
       .agg(count(lit(1)).as("freq"))
-      .withColumn("syms", split(col("word"), ""))
-      .localCheckpoint(true)
-    val merges = scala.collection.mutable.Buffer.empty[(Long, String, String, String, Long)]
-    var exhausted = false
-    for (r <- 1 to rounds if !exhausted) {
-      val best = vocab
-        .filter(size(col("syms")) >= 2)
-        .select(
-          col("freq"),
-          explode(
-            expr(
-              """transform(sequence(1, size(syms) - 1),
-                |  i -> struct(element_at(syms, i) AS l, element_at(syms, i + 1) AS r))""".stripMargin
-            )
-          ).as("p")
-        )
-        .groupBy(col("p.l").as("lhs"), col("p.r").as("rhs"))
-        .agg(sum(col("freq")).as("cnt"))
-        .orderBy(col("cnt").desc, col("lhs"), col("rhs"))
-        .limit(1)
-        .collect()
-      if (best.isEmpty) exhausted = true
-      else {
-        val (l, rr, cnt) =
-          (best(0).getAs[String]("lhs"), best(0).getAs[String]("rhs"), best(0).getAs[Long]("cnt"))
-        merges += ((r.toLong, l, rr, l + rr, cnt))
-        val next = vocab.withColumn("syms", mergeFold(col("syms"), l, rr)).localCheckpoint(true)
-        Checkpoints.release(vocab)
-        vocab = next
+
+  /** Freq-weighted counts (lhs, rhs, cnt) of every adjacent symbol pair
+    * in a (word, freq, syms) vocabulary.
+    */
+  private def pairCounts(vocab: DataFrame): DataFrame =
+    vocab
+      .filter(size(col("syms")) >= 2)
+      .select(
+        col("freq"),
+        explode(
+          expr(
+            """transform(sequence(1, size(syms) - 1),
+              |  i -> struct(element_at(syms, i) AS l, element_at(syms, i + 1) AS r))""".stripMargin
+          )
+        ).as("p")
+      )
+      .groupBy(col("p.l").as("lhs"), col("p.r").as("rhs"))
+      .agg(sum(col("freq")).as("cnt"))
+
+  /** The merge-round learner BPE and WordPiece share: seed every word
+    * as its characters, then per round take the first row of
+    * `ranked(vocab)` — a relation with `lhs` and `rhs` — as the winning
+    * pair and fold it into every word, until `rounds` merges or no
+    * pair is left. Returns the winning rows in round order and the
+    * final vocabulary (word, freq, syms).
+    */
+  private def learnMerges(docs: DataFrame, rounds: Int)(
+    ranked: DataFrame => DataFrame
+  ): (Seq[Row], DataFrame) = {
+    require(rounds > 0, s"rounds must be positive, got $rounds")
+    Checkpoints.keeping { pins =>
+      var vocab = pins(wordVocab(docs).withColumn("syms", split(col("word"), "")))
+      val picks = scala.collection.mutable.Buffer.empty[Row]
+      var exhausted = false
+      for (_ <- 1 to rounds if !exhausted) {
+        val best = ranked(vocab).limit(1).collect()
+        if (best.isEmpty) exhausted = true
+        else {
+          val (l, rr) = (best(0).getAs[String]("lhs"), best(0).getAs[String]("rhs"))
+          picks += best(0)
+          vocab = pins.replace(vocab, vocab.withColumn("syms", mergeFold(col("syms"), l, rr)))
+        }
       }
-    }
-    (merges.toSeq.toDF("rank", "lhs", "rhs", "merged", "pair_count"), vocab)
+      (picks.toSeq, vocab)
+    }(r => Seq(r._2))
   }
 
   /** Per-document token statistics under the trained tokenizer: encode
@@ -320,39 +345,35 @@ object Tokenizer {
     * (word, freq, n_pieces) under the final costs, final singles-count
     * total for the report).
     */
-  private[graft] def unigramTrain(docs: DataFrame): (DataFrame, DataFrame) = {
-    val spark = docs.sparkSession
-    val vocab = docs
-      .filter(col("text").isNotNull && length(trim(col("text"))) > 0)
-      .select(explode(split(expr(TextAnalysis.NormSql), " ")).as("word"))
-      .filter(length(col("word")) > 0)
-      .groupBy(col("word"))
-      .agg(count(lit(1)).as("freq"))
-      .localCheckpoint(true)
-    val seed = vocab
-      .select(col("word"), col("freq"), explode(expr("sequence(1, length(word))")).as("i"))
-      .select(col("word"), col("freq"), col("i"), explode(expr("array(1, 2, 3, 4)")).as("k"))
-      .filter(expr("i + k - 1 <= length(word)"))
-      .select(expr("substring(word, i, k)").as("piece"), col("freq"))
-      .groupBy(col("piece"))
-      .agg(sum(col("freq")).as("cnt"))
-      .localCheckpoint(true)
-    val singles = seed.filter(length(col("piece")) === 1).select(col("piece"))
-    val multis0 = seed
-      .filter(length(col("piece")) >= 2)
-      .orderBy(col("cnt").desc, col("piece"))
-      .limit(48)
-    val cnt0 = seed.join(singles, Seq("piece")).unionByName(multis0)
-    val c0 = unigramCosts(cnt0).localCheckpoint(true)
-    val n1 = unigramCounts(viterbiSegment(vocab, c0), singles).localCheckpoint(true)
-    val c1 = unigramCosts(n1).localCheckpoint(true)
-    val n2 = unigramCounts(viterbiSegment(vocab, c1), singles).localCheckpoint(true)
-    val c2 = unigramCosts(n2).localCheckpoint(true)
-    val enc = viterbiSegment(vocab, c2)
-      .select(col("word"), col("freq"), size(col("pieces")).cast("long").as("w_tokens"))
-      .localCheckpoint(true)
-    (n2, enc)
-  }
+  private[graft] def unigramTrain(docs: DataFrame): (DataFrame, DataFrame) =
+    Checkpoints.keeping { pins =>
+      val vocab = pins(wordVocab(docs))
+      val seed = pins(
+        vocab
+          .select(col("word"), col("freq"), explode(expr("sequence(1, length(word))")).as("i"))
+          .select(col("word"), col("freq"), col("i"), explode(expr("array(1, 2, 3, 4)")).as("k"))
+          .filter(expr("i + k - 1 <= length(word)"))
+          .select(expr("substring(word, i, k)").as("piece"), col("freq"))
+          .groupBy(col("piece"))
+          .agg(sum(col("freq")).as("cnt"))
+      )
+      val singles = seed.filter(length(col("piece")) === 1).select(col("piece"))
+      val multis0 = seed
+        .filter(length(col("piece")) >= 2)
+        .orderBy(col("cnt").desc, col("piece"))
+        .limit(48)
+      val cnt0 = seed.join(singles, Seq("piece")).unionByName(multis0)
+      val c0 = pins(unigramCosts(cnt0))
+      val n1 = pins(unigramCounts(viterbiSegment(vocab, c0), singles))
+      val c1 = pins(unigramCosts(n1))
+      val n2 = pins(unigramCounts(viterbiSegment(vocab, c1), singles))
+      val c2 = pins(unigramCosts(n2))
+      val enc = pins(
+        viterbiSegment(vocab, c2)
+          .select(col("word"), col("freq"), size(col("pieces")).cast("long").as("w_tokens"))
+      )
+      (n2, enc)
+    } { case (n2, enc) => Seq(n2, enc) }
 
   /** (final counts, encoded vocab) for the registry's fixed training
     * run, an [[Intermediates]] entry per (session, sfDir) shared by the
@@ -738,9 +759,9 @@ object Tokenizer {
 
   /** WordPiece tokenizer training (Schuster & Nakajima 2012; the BERT
     * tokenizer's learner) — completes the tokenizer triad beside BPE
-    * and unigram. Identical loop shape to [[bpeTrain]] (vocabulary-
-    * relation rounds, argmax collect, codegen'd merge fold) with the
-    * WordPiece selection rule: instead of raw pair count, each round
+    * and unigram. The same merge-round learner as [[bpeTrain]]
+    * (vocabulary-relation rounds, argmax collect, codegen'd merge fold)
+    * with the WordPiece selection rule: instead of raw pair count, each round
     * merges the pair maximizing the likelihood gain
     * score = cnt(pair) / (cnt(lhs)·cnt(rhs)).
     *
@@ -758,38 +779,14 @@ object Tokenizer {
     * keeps the plan flat.
     */
   def wordpieceTrain(docs: DataFrame, rounds: Int = 10): (DataFrame, DataFrame) = {
-    require(rounds > 0, s"rounds must be positive, got $rounds")
     val spark = docs.sparkSession
     import spark.implicits._
-    var vocab = docs
-      .filter(col("text").isNotNull && length(trim(col("text"))) > 0)
-      .select(explode(split(expr(TextAnalysis.NormSql), " ")).as("word"))
-      .filter(length(col("word")) > 0)
-      .groupBy(col("word"))
-      .agg(count(lit(1)).as("freq"))
-      .withColumn("syms", split(col("word"), ""))
-      .localCheckpoint(true)
-    val merges =
-      scala.collection.mutable.Buffer.empty[(Long, String, String, String, Long, Long)]
-    var exhausted = false
-    for (r <- 1 to rounds if !exhausted) {
+    val (picks, vocab) = learnMerges(docs, rounds) { vocab =>
       val symCnt = vocab
         .select(col("freq"), explode(col("syms")).as("s"))
         .groupBy(col("s"))
         .agg(sum(col("freq")).as("scnt"))
-      val best = vocab
-        .filter(size(col("syms")) >= 2)
-        .select(
-          col("freq"),
-          explode(
-            expr(
-              """transform(sequence(1, size(syms) - 1),
-                |  i -> struct(element_at(syms, i) AS l, element_at(syms, i + 1) AS r))""".stripMargin
-            )
-          ).as("p")
-        )
-        .groupBy(col("p.l").as("lhs"), col("p.r").as("rhs"))
-        .agg(sum(col("freq")).as("cnt"))
+      pairCounts(vocab)
         .join(symCnt.select(col("s").as("lhs"), col("scnt").as("__cl")), Seq("lhs"))
         .join(symCnt.select(col("s").as("rhs"), col("scnt").as("__cr")), Seq("rhs"))
         .withColumn(
@@ -801,26 +798,12 @@ object Tokenizer {
           )
         )
         .orderBy(col("score_pico").desc, col("lhs"), col("rhs"))
-        .limit(1)
-        .collect()
-      if (best.isEmpty) exhausted = true
-      else {
-        val (l, rr, cnt, sp) = (
-          best(0).getAs[String]("lhs"),
-          best(0).getAs[String]("rhs"),
-          best(0).getAs[Long]("cnt"),
-          best(0).getAs[Long]("score_pico")
-        )
-        merges += ((r.toLong, l, rr, l + rr, cnt, sp))
-        val next = vocab.withColumn("syms", mergeFold(col("syms"), l, rr)).localCheckpoint(true)
-        Checkpoints.release(vocab)
-        vocab = next
-      }
     }
-    (
-      merges.toSeq.toDF("rank", "lhs", "rhs", "merged", "pair_count", "score_pico"),
-      vocab
-    )
+    val merges = picks.zipWithIndex.map { case (p, i) =>
+      val (l, rr) = (p.getAs[String]("lhs"), p.getAs[String]("rhs"))
+      (i + 1L, l, rr, l + rr, p.getAs[Long]("cnt"), p.getAs[Long]("score_pico"))
+    }
+    (merges.toDF("rank", "lhs", "rhs", "merged", "pair_count", "score_pico"), vocab)
   }
 
   def wordpieceFor(spark: SparkSession, dir: String): (DataFrame, DataFrame) =

@@ -53,21 +53,12 @@ object StreamingCusum {
     // as any replay with different micro-batch boundaries — carry
     // event_id when the source has one, constant otherwise (the same
     // convention withTieBreak applies to id-less sources)
-    val withId =
-      if (input.columns.contains("event_id"))
-        input.select(
-          col("channel"),
-          col("t").cast("long"),
-          col("v").cast("double"),
-          col("event_id").cast("long")
-        )
-      else
-        input.select(
-          col("channel"),
-          col("t").cast("long"),
-          col("v").cast("double"),
-          lit(0L).as("event_id")
-        )
+    val withId = TieBreak.withEventId(
+      input,
+      col("channel"),
+      col("t").cast("long"),
+      col("v").cast("double")
+    )
     withId
       .as[(String, Long, Double, Long)]
       .groupByKey(_._1)

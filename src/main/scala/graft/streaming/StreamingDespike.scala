@@ -42,21 +42,12 @@ object StreamingDespike {
   ): Dataset[Outlier] = {
     import spark.implicits._
     require(k > 0, s"window half-width k must be positive, got $k")
-    val withId =
-      if (input.columns.contains("event_id"))
-        input.select(
-          col("channel"),
-          col("t").cast("long"),
-          col("v").cast("double"),
-          col("event_id").cast("long")
-        )
-      else
-        input.select(
-          col("channel"),
-          col("t").cast("long"),
-          col("v").cast("double"),
-          lit(0L).as("event_id")
-        )
+    val withId = TieBreak.withEventId(
+      input,
+      col("channel"),
+      col("t").cast("long"),
+      col("v").cast("double")
+    )
     withId
       .as[(String, Long, Double, Long)]
       .groupByKey(_._1)

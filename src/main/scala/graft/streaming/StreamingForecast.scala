@@ -112,21 +112,12 @@ object StreamingForecast {
     x0: Long = graft.operators.Timeseries.ForecastX0
   ): Dataset[ForecastUpdate] = {
     import spark.implicits._
-    val withId =
-      if (input.columns.contains("event_id"))
-        input.select(
-          col("channel"),
-          col("t").cast("long"),
-          col("v").cast("double"),
-          col("event_id").cast("long")
-        )
-      else
-        input.select(
-          col("channel"),
-          col("t").cast("long"),
-          col("v").cast("double"),
-          lit(0L).as("event_id")
-        )
+    val withId = TieBreak.withEventId(
+      input,
+      col("channel"),
+      col("t").cast("long"),
+      col("v").cast("double")
+    )
     withId
       .as[(String, Long, Double, Long)]
       .groupByKey(_._1)

@@ -37,11 +37,7 @@ object StreamingSessions {
     gapUs: Long
   ): Dataset[ClosedSession] = {
     import spark.implicits._
-    val withId =
-      if (input.columns.contains("event_id"))
-        input.select(col("user_id").cast("long"), col("t").cast("long"), col("event_id").cast("long"))
-      else
-        input.select(col("user_id").cast("long"), col("t").cast("long"), lit(0L).as("event_id"))
+    val withId = TieBreak.withEventId(input, col("user_id").cast("long"), col("t").cast("long"))
     withId
       .as[(Long, Long, Long)]
       .groupByKey(_._1)

@@ -29,11 +29,12 @@ object StreamingTransitions {
     input: DataFrame // (user_id long, channel string, t long µs [, event_id long])
   ): Dataset[Transition] = {
     import spark.implicits._
-    val withId =
-      if (input.columns.contains("event_id"))
-        input.select(col("user_id").cast("long"), col("channel"), col("t").cast("long"), col("event_id").cast("long"))
-      else
-        input.select(col("user_id").cast("long"), col("channel"), col("t").cast("long"), lit(0L).as("event_id"))
+    val withId = TieBreak.withEventId(
+      input,
+      col("user_id").cast("long"),
+      col("channel"),
+      col("t").cast("long")
+    )
     withId
       .as[(Long, String, Long, Long)]
       .groupByKey(_._1)

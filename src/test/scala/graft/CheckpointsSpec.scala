@@ -1,34 +1,114 @@
 package graft
 
-import graft.operators.{Dedup, Tokenizer}
+import graft.operators.{Dedup, Similarity, Tokenizer}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.functions.col
 
 class CheckpointsSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The persisted RDDs a result reads: the `LogicalRDD` leaves of its
+    * plan (pins) and the buffers of the caches it scans.
+    */
+  private def reads(df: DataFrame): Set[Int] = {
+    val qe = df.queryExecution
+    (qe.logical.collectWithSubqueries { case lr: LogicalRDD => lr.rdd.id } ++
+      qe.withCachedData.collectWithSubqueries { case m: InMemoryRelation =>
+        m.cacheBuilder.cachedColumnBuffers.id
+      }).toSet
+  }
+
   /** RDDs a run leaves persisted in the context while its result is
     * still reachable (unpersisted again afterwards so no spec sees
-    * another's blocks).
+    * another's blocks); they must be exactly the ones the result reads.
     */
-  private def pinned(run: => DataFrame): Int = {
+  private def pinned(run: => DataFrame): Int = pinnedAll(Seq(run))
+
+  private def pinnedAll(run: => Seq[DataFrame]): Int = {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     val out = run
-    out.count()
+    out.foreach(_.count())
     val grown = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    val read = out.flatMap(reads).toSet
     java.lang.ref.Reference.reachabilityFence(out)
     grown.values.foreach(_.unpersist(blocking = true))
+    grown.keySet shouldBe read
     grown.size
   }
 
+  private val docs = Seq("lower lowest newer newest wider widest", "slower slowest", "low new wide")
+    .zipWithIndex
+    .map { case (t, i) => (i.toLong, t) }
+    .toDF("doc_id", "text")
+
+  // components 1-2-3 (a star on its minimum: one round converges) and 4-5
+  private val stars = Seq((1L, 2L), (1L, 3L), (4L, 5L)).toDF("doc_a", "doc_b")
+  private val path = (1L until 12L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+
+  // 12 near-collinear 64-dim vectors sharing one hyperplane bucket
+  private val emb = {
+    val base = Array.tabulate(64)(d => 1.0f + 0.01f * d)
+    (0L until 12L)
+      .map { i =>
+        val v = base.clone()
+        v((i % 8).toInt) = v((i % 8).toInt) + 0.05f * (i + 1)
+        (i, v)
+      }
+      .toDF("vec_id", "embedding")
+  }
+  private val queries = emb.filter(col("vec_id") < 3)
+
   "checkpointed round loops" should "free every superseded round, so pinned blocks do not grow with rounds" in {
-    val docs = Seq("lower lowest newer newest wider widest", "slower slowest", "low new wide")
-      .zipWithIndex
-      .map { case (t, i) => (i.toLong, t) }
-      .toDF("doc_id", "text")
     pinned(Tokenizer.bpeTrain(docs, 6)._2) shouldBe pinned(Tokenizer.bpeTrain(docs, 2)._2)
 
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 5L), (5L, 6L)).toDF("doc_a", "doc_b")
     pinned(Dedup.labelPropagation(pairs, 6)) shouldBe pinned(Dedup.labelPropagation(pairs, 2))
+  }
+
+  /** Each scoped operator at a small and a large round count. */
+  private val loops: Seq[(String, Int => DataFrame)] = Seq(
+    "sampledCloseness" -> (r => Dedup.sampledCloseness(path, maxHops = r)),
+    "sampledBetweenness" -> (r => Dedup.sampledBetweenness(path, maxHops = r)),
+    "graphBeamTopK" -> (r => Similarity.graphBeamTopK(emb, queries, k = 3, hops = r)),
+    "mmrRerank" -> (r => Similarity.mmrRerank(emb, queries, pool = 8, m = r)),
+    "connectedComponents" -> (r => Dedup.connectedComponents(stars, maxIter = r)),
+    "connectedComponentsStar" -> (r => Dedup.connectedComponentsStar(stars, maxIter = r)),
+    "pageRank" -> (r => Dedup.pageRank(stars, iters = r)),
+    "kcoreness" -> (r => Dedup.kcoreness(path, rounds = r)),
+    "wordpieceTrain" -> (r => Tokenizer.wordpieceTrain(docs, r)._2)
+  )
+
+  loops.foreach { case (name, run) =>
+    name should "keep exactly the pins its result reads, however many rounds it runs" in {
+      pinned(run(6)) shouldBe pinned(run(2))
+    }
+  }
+
+  "unigramTrain" should "keep only the two pins it returns" in {
+    pinnedAll { val (n2, enc) = Tokenizer.unigramTrain(docs); Seq(n2, enc) } shouldBe 2
+  }
+
+  "connectedComponents" should "free everything it persisted or pinned when it throws" in {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    an[IllegalStateException] should be thrownBy Dedup.connectedComponents(path, maxIter = 2)
+    sc.getPersistentRDDs.keySet -- before shouldBe empty
+  }
+
+  "scoped results" should "read back twice after their scope has returned" in {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val results = loops.map { case (_, run) => run(2) } ++
+      Seq(Tokenizer.bpeTrain(docs, 2)._2, Dedup.labelPropagation(stars, 2)) ++ {
+        val (n2, enc) = Tokenizer.unigramTrain(docs); Seq(n2, enc)
+      }
+    results.foreach { df =>
+      val first = df.collect().toSeq
+      df.collect().toSeq shouldBe first
+    }
+    sc.getPersistentRDDs.filter { case (id, _) => !before(id) }.values.foreach(_.unpersist(blocking = true))
   }
 }
