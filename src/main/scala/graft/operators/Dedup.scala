@@ -2002,7 +2002,7 @@ object Dedup {
       // planner-bound, not data-bound). The checkpoint truncates the
       // tree to a LogicalRDD, so every round's plan is iteration-sized.
       val wedges = pins(edges.join(deg, "src").repartition(col("src")))
-      val nodes = wedges.select(col("src").as("node"), col("deg")).distinct().persist(sl)
+      val nodes = pins(wedges.select(col("src").as("node"), col("deg")).distinct())
       val n = nodes.count() // node count: one metadata-scale job
       val nD = n.toDouble
       val reset = 1.0 - damping
@@ -2019,10 +2019,11 @@ object Dedup {
         )
         i += 1
       }
-      // the result reads nodes and so wedges: both stay pinned until
-      // the caller's action completes. Local-checkpoint blocks are
-      // stored MEMORY_AND_DISK, so under memory pressure they spill to
-      // disk; they are never dropped and recomputed.
+      // the result reads the nodes pin and the last round's ranks: the
+      // scope keeps those two and frees wedges and every earlier round.
+      // Local-checkpoint blocks are stored MEMORY_AND_DISK, so under
+      // memory pressure they spill to disk; they are never dropped and
+      // recomputed.
       ranks
         .join(nodes.select(col("node"), col("deg").as("n_links")), "node")
         .select(col("node").as("doc_id"), col("n_links"), round(col("r"), 6).as("pagerank"))

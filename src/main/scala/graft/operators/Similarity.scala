@@ -37,18 +37,42 @@ object Similarity {
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val c = prepped(corpus, "neighbor_id", "vc", "nc")
     val q = prepped(queries, "query_id", "vq", "nq")
-    val byQuery = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", VectorMath.cosine(col("vq"), col("vc"), col("nq"), col("nc")))
+    val pairs = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
+    topKPerQuery(pairs, cosineVQ("vc", "nc"), "cosine", k)
+  }
+
+  /** The output contract every top-k index here shares: per query the
+    * k best candidate pairs by `score` (descending; ascending for a
+    * distance), ties broken on `neighbor_id`, emitted as
+    * (query_id, rank: long, neighbor_id, carry…, round(score, 6) AS
+    * name). The `row_number() <= k` cut plans as a WindowGroupLimit, so
+    * each group is cut to k before the final shuffle.
+    */
+  private def topKPerQuery(
+    pairs: DataFrame,
+    score: Column,
+    name: String,
+    k: Int,
+    ascending: Boolean = false,
+    carry: Seq[String] = Nil
+  ): DataFrame = {
+    val order = if (ascending) col(name) else col(name).desc
+    val byQuery = Window.partitionBy(col("query_id")).orderBy(order, col("neighbor_id"))
+    pairs
+      .withColumn(name, score)
       .withColumn("rank", row_number().over(byQuery))
       .filter(col("rank") <= k)
       .select(
-        col("query_id"),
-        col("rank").cast("long").as("rank"),
-        col("neighbor_id"),
-        round(col("cosine"), 6).as("cosine")
+        Seq(col("query_id"), col("rank").cast("long").as("rank"), col("neighbor_id")) ++
+          carry.map(col) :+ round(col(name), 6).as(name): _*
       )
   }
+
+  /** Exact cosine of the query vector (`vq`, norm `nq`) against a
+    * candidate vector column and its norm.
+    */
+  private def cosineVQ(v: String, n: String): Column =
+    VectorMath.cosine(col("vq"), col(v), col("nq"), col(n))
 
   /** Maximum-inner-product top-k (MIPS) — the retrieval primitive for
     * un-normalized embedding families (recommendation scores,
@@ -68,17 +92,8 @@ object Similarity {
   def mipsTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("vc"))
     val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("vq"))
-    val byQuery = Window.partitionBy(col("query_id")).orderBy(col("score").desc, col("neighbor_id"))
-    c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", VectorMath.dot(col("vq"), col("vc")))
-      .withColumn("rank", row_number().over(byQuery))
-      .filter(col("rank") <= k)
-      .select(
-        col("query_id"),
-        col("rank").cast("long").as("rank"),
-        col("neighbor_id"),
-        round(col("score"), 6).as("score")
-      )
+    val pairs = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
+    topKPerQuery(pairs, VectorMath.dot(col("vq"), col("vc")), "score", k)
   }
 
   /** Deterministic pseudo-random hyperplanes (splitmix64 stream) built
@@ -112,34 +127,32 @@ object Similarity {
     * queries probe their own bucket plus every bucket at hamming
     * distance 1, then rank candidates by exact cosine and keep top-k.
     */
-  def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int, planes: Int = 8, dim: Int = 64): DataFrame = {
+  def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int, planes: Int = 8, dim: Int = 64): DataFrame =
+    topKPerQuery(lshPairs(corpus, queries, planes, dim), cosineVQ("vc", "nc"), "cosine", k)
+
+  /** The multi-probe fan-out: one row per probed bucket, the query's
+    * own signature `__b0` plus every bucket at hamming distance 1.
+    */
+  private def probeBuckets(planes: Int): Column = {
+    val probes = col("__b0") +: (0 until planes).map(p => col("__b0").bitwiseXOR(lit(1L << p)))
+    explode(array(probes: _*)).as("bucket")
+  }
+
+  /** The candidate pairs of [[lshTopK]] and [[lshRadius]]: every
+    * (query, corpus vector) pair sharing a probed bucket, self-pairs
+    * dropped. The probe set is distinct per query, so no pair repeats.
+    */
+  private def lshPairs(corpus: DataFrame, queries: DataFrame, planes: Int, dim: Int): DataFrame = {
     // dim must cover the embedding length: VecDot loops over the
     // shorter array, so undersized hyperplanes would silently bucket on
     // a truncated dot product
     val hp = hyperplanes(planes, dim)
     val c = prepped(corpus, "neighbor_id", "vc", "nc")
       .withColumn("bucket", hyperplaneBucket(col("vc"), hp))
-    val q0 = prepped(queries, "query_id", "vq", "nq")
+    val q = prepped(queries, "query_id", "vq", "nq")
       .withColumn("__b0", hyperplaneBucket(col("vq"), hp))
-    val probes = col("__b0") +: (0 until planes).map(p => col("__b0").bitwiseXOR(lit(1L << p)))
-    val q = q0.select(
-      col("query_id"),
-      col("vq"),
-      col("nq"),
-      explode(array(probes: _*)).as("bucket")
-    )
-    val byQuery = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    c.join(broadcast(q), Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", VectorMath.cosine(col("vq"), col("vc"), col("nq"), col("nc")))
-      .withColumn("rank", row_number().over(byQuery))
-      .filter(col("rank") <= k)
-      .select(
-        col("query_id"),
-        col("rank").cast("long").as("rank"),
-        col("neighbor_id"),
-        round(col("cosine"), 6).as("cosine")
-      )
+      .select(col("query_id"), col("vq"), col("nq"), probeBuckets(planes))
+    c.join(broadcast(q), Seq("bucket")).filter(col("query_id") =!= col("neighbor_id"))
   }
 
   /** Radius (threshold) retrieval — the dual of top-k: return EVERY
@@ -160,26 +173,12 @@ object Similarity {
       tau: Double,
       planes: Int = 8,
       dim: Int = 64
-  ): DataFrame = {
-    val hp = hyperplanes(planes, dim)
-    val c = prepped(corpus, "neighbor_id", "vc", "nc")
-      .withColumn("bucket", hyperplaneBucket(col("vc"), hp))
-    val q0 = prepped(queries, "query_id", "vq", "nq")
-      .withColumn("__b0", hyperplaneBucket(col("vq"), hp))
-    val probes = col("__b0") +: (0 until planes).map(p => col("__b0").bitwiseXOR(lit(1L << p)))
-    val q = q0.select(
-      col("query_id"),
-      col("vq"),
-      col("nq"),
-      explode(array(probes: _*)).as("bucket")
-    )
-    c.join(broadcast(q), Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", VectorMath.cosine(col("vq"), col("vc"), col("nq"), col("nc")))
+  ): DataFrame =
+    lshPairs(corpus, queries, planes, dim)
+      .withColumn("cosine", cosineVQ("vc", "nc"))
       .filter(col("cosine") >= tau)
       .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 6).as("cosine"))
       .distinct()
-  }
 
   /** IVF-style ANN: a deterministic sample of corpus vectors serves as
     * the coarse quantizer ("centroids" — at scale these come from a
@@ -219,18 +218,12 @@ object Similarity {
           slice(reverse(array_sort(array(simStructs(col("vq")): _*))), 1, nProbe).getField("cid")
         )
       )
-    val byQuery = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    c.join(broadcast(q), Seq("cid"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", VectorMath.cosine(col("vq"), col("vc"), col("nq"), col("nc")))
-      .withColumn("rank", row_number().over(byQuery))
-      .filter(col("rank") <= k)
-      .select(
-        col("query_id"),
-        col("rank").cast("long").as("rank"),
-        col("neighbor_id"),
-        round(col("cosine"), 6).as("cosine")
-      )
+    topKPerQuery(
+      c.join(broadcast(q), Seq("cid")).filter(col("query_id") =!= col("neighbor_id")),
+      cosineVQ("vc", "nc"),
+      "cosine",
+      k
+    )
   }
 
   /** k-NN label vote: classify each query vector by the majority label
@@ -458,21 +451,13 @@ object Similarity {
     val q = queries
       .select(col("vec_id").as("query_id"), col("embedding").as("vq"), col("label"))
       .withColumn("nq", VectorMath.norm(col("vq")))
-    val byQuery = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    c.join(
-      broadcast(q),
-      col("query_id") =!= col("neighbor_id") && col("__lc") === col("label")
+    topKPerQuery(
+      c.join(broadcast(q), col("query_id") =!= col("neighbor_id") && col("__lc") === col("label")),
+      cosineVQ("vc", "nc"),
+      "cosine",
+      k,
+      carry = Seq("label")
     )
-      .withColumn("cosine", VectorMath.cosine(col("vq"), col("vc"), col("nq"), col("nc")))
-      .withColumn("rank", row_number().over(byQuery))
-      .filter(col("rank") <= k)
-      .select(
-        col("query_id"),
-        col("rank").cast("long").as("rank"),
-        col("neighbor_id"),
-        col("label"),
-        round(col("cosine"), 6).as("cosine")
-      )
   }
 
   def annFiltered(spark: SparkSession, dir: String): DataFrame = {
@@ -560,23 +545,16 @@ object Similarity {
       .crossJoin(broadcast(mrow))
       .withColumn("__aug", sqrt(greatest(col("__M") * col("__M") - col("__n2"), lit(0.0))))
       .withColumn("bucket", augBucket(col("vc"), col("__aug"), hp))
-    val q0 = queries
+    val q = queries
       .select(col("vec_id").as("query_id"), col("embedding").as("vq"))
       .withColumn("__b0", augBucket(col("vq"), lit(0.0), hp))
-    val probes = col("__b0") +: (0 until planes).map(p => col("__b0").bitwiseXOR(lit(1L << p)))
-    val q = q0.select(col("query_id"), col("vq"), explode(array(probes: _*)).as("bucket"))
-    val byQuery = Window.partitionBy(col("query_id")).orderBy(col("score").desc, col("neighbor_id"))
-    c.join(broadcast(q), Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", VectorMath.dot(col("vq"), col("vc")))
-      .withColumn("rank", row_number().over(byQuery))
-      .filter(col("rank") <= k)
-      .select(
-        col("query_id"),
-        col("rank").cast("long").as("rank"),
-        col("neighbor_id"),
-        round(col("score"), 6).as("score")
-      )
+      .select(col("query_id"), col("vq"), probeBuckets(planes))
+    topKPerQuery(
+      c.join(broadcast(q), Seq("bucket")).filter(col("query_id") =!= col("neighbor_id")),
+      VectorMath.dot(col("vq"), col("vc")),
+      "score",
+      k
+    )
   }
 
   def annMipsLsh(spark: SparkSession, dir: String): DataFrame = {
@@ -1717,50 +1695,61 @@ object Similarity {
     precomputedBooks: Option[Seq[(Int, Seq[(Int, Seq[Double])])]] = None
   ): DataFrame = {
     require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
-    val subLen = dim / m
-    def sub(c: Column, s: Int): Column = slice(c, s * subLen + 1, subLen)
     val books = precomputedBooks.getOrElse(pqCodebooks(corpus, m, dim, kCent, iters))
-    // corpus → m argmin codes (pure projection against literal books);
+    val (coded, withLuts, adist) = pqEncode(corpus, queries, books, dim)
+    topKPerQuery(
+      coded.join(broadcast(withLuts), col("query_id") =!= col("neighbor_id")),
+      adist,
+      "adist",
+      k,
+      ascending = true
+    )
+  }
+
+  /** The PQ encoding under [[pqTopK]] and [[ivfPqTopK]]. The corpus
+    * becomes `neighbor_id` plus m argmin codes `c$s` (a pure
+    * projection against literal books), the queries become `query_id`
+    * plus m distance tables `lut$s` (k entries each, evaluated once per
+    * query), and the third value is the ADC Σ_s lut_s[code_s], summed
+    * left-to-right. `cells` adds the IVF coarse columns, both computed
+    * from the raw embedding `__e`: the corpus vector's cell and the
+    * query's probed cells.
+    */
+  private def pqEncode(
+    corpus: DataFrame,
+    queries: DataFrame,
+    books: Seq[(Int, Seq[(Int, Seq[Double])])],
+    dim: Int,
+    cells: Option[(Column, Column)] = None
+  ): (DataFrame, DataFrame, Column) = {
+    val m = books.size
+    val subLen = dim / m
     // subvectors project once per row, then the code structs reference
     // plain columns (slice inlined per centroid would bloat codegen)
-    val subCols = (0 until m).map(s => sub(col("embedding"), s).as(s"v$s"))
+    val subCols = (0 until m).map(s => slice(col("embedding"), s * subLen + 1, subLen).as(s"v$s"))
+    val raw = cells.map(_ => col("embedding").as("__e")).toSeq
     val coded = corpus
-      .select(col("vec_id").as("neighbor_id") +: subCols: _*)
+      .select(col("vec_id").as("neighbor_id") +: (raw ++ subCols): _*)
       .select(
-        col("neighbor_id") +:
-          books.map { case (s, cents) =>
-            kmeansAssignStruct(col(s"v$s"), cents).getField("cid").as(s"c$s")
-          }: _*
+        col("neighbor_id") +: (cells.map(_._1).toSeq ++ books.map { case (s, cents) =>
+          kmeansAssignStruct(col(s"v$s"), cents).getField("cid").as(s"c$s")
+        }): _*
       )
-    // query → per-subspace distance tables (k entries each, evaluated
-    // once per query); ADC = Σ_s lut_s[code_s], left-to-right
     val withLuts = queries
-      .select(col("vec_id").as("query_id") +: subCols: _*)
+      .select(col("vec_id").as("query_id") +: (raw ++ subCols): _*)
       .select(
-        col("query_id") +:
-          books.map { case (s, cents) =>
-            array(cents.map { case (_, cv) =>
-              val cc = cv.foldLeft(0.0)((acc, x) => acc + x * x)
-              val qs = col(s"v$s")
-              VectorMath.dot(qs, qs) - lit(2.0) * VectorMath.dot(qs, typedlit(cv)) + lit(cc)
-            }: _*).as(s"lut$s")
-          }: _*
+        col("query_id") +: (cells.map(_._2).toSeq ++ books.map { case (s, cents) =>
+          array(cents.map { case (_, cv) =>
+            val cc = cv.foldLeft(0.0)((acc, x) => acc + x * x)
+            val qs = col(s"v$s")
+            VectorMath.dot(qs, qs) - lit(2.0) * VectorMath.dot(qs, typedlit(cv)) + lit(cc)
+          }: _*).as(s"lut$s")
+        }): _*
       )
     val adist = (0 until m)
       .map(s => element_at(col(s"lut$s"), col(s"c$s").cast("int") + 1))
       .reduce(_ + _)
-    val byQuery = Window.partitionBy(col("query_id")).orderBy(col("adist"), col("neighbor_id"))
-    coded
-      .join(broadcast(withLuts), col("query_id") =!= col("neighbor_id"))
-      .withColumn("adist", adist)
-      .withColumn("rank", row_number().over(byQuery))
-      .filter(col("rank") <= k)
-      .select(
-        col("query_id"),
-        col("rank").cast("long").as("rank"),
-        col("neighbor_id"),
-        round(col("adist"), 6).as("adist")
-      )
+    (coded, withLuts, adist)
   }
 
   /** PQ codebooks, an [[Intermediates]] entry per (session, dir) — the
@@ -1864,8 +1853,6 @@ object Similarity {
     precomputedBooks: Option[Seq[(Int, Seq[(Int, Seq[Double])])]] = None
   ): DataFrame = {
     require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
-    val subLen = dim / m
-    def sub(c: Column, s: Int): Column = slice(c, s * subLen + 1, subLen)
     val books = precomputedBooks.getOrElse(pqCodebooks(corpus, m, dim, kCent, iters))
     val centroids: Array[Seq[Double]] = corpus
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
@@ -1876,48 +1863,19 @@ object Similarity {
     def simStructs(v: Column): Seq[Column] = centroids.zipWithIndex.map { case (cv, i) =>
       struct(VectorMath.dot(v, typedlit(cv)).as("sim"), lit(i).as("cid"))
     }
-    val subCols = (0 until m).map(s => sub(col("embedding"), s).as(s"v$s"))
-    val coded = corpus
-      .select(col("vec_id").as("neighbor_id") +: col("embedding").as("__e") +: subCols: _*)
-      .select(
-        col("neighbor_id") +:
-          greatest(simStructs(col("__e")): _*).getField("cid").as("cid") +:
-          books.map { case (s, cents) =>
-            kmeansAssignStruct(col(s"v$s"), cents).getField("cid").as(s"c$s")
-          }: _*
-      )
-    val withLuts = queries
-      .select(col("vec_id").as("query_id") +: col("embedding").as("__e") +: subCols: _*)
-      .select(
-        col("query_id") +:
-          slice(reverse(array_sort(array(simStructs(col("__e")): _*))), 1, nProbe)
-            .getField("cid").as("__cids") +:
-          books.map { case (s, cents) =>
-            array(cents.map { case (_, cv) =>
-              val cc = cv.foldLeft(0.0)((acc, x) => acc + x * x)
-              val qs = col(s"v$s")
-              VectorMath.dot(qs, qs) - lit(2.0) * VectorMath.dot(qs, typedlit(cv)) + lit(cc)
-            }: _*).as(s"lut$s")
-          }: _*
-      )
-      .withColumn("cid", explode(col("__cids")))
-      .drop("__cids")
-    val adist = (0 until m)
-      .map(s => element_at(col(s"lut$s"), col(s"c$s").cast("int") + 1))
-      .reduce(_ + _)
-    val byQuery = Window.partitionBy(col("query_id")).orderBy(col("adist"), col("neighbor_id"))
-    coded
-      .join(broadcast(withLuts), Seq("cid"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adist", adist)
-      .withColumn("rank", row_number().over(byQuery))
-      .filter(col("rank") <= k)
-      .select(
-        col("query_id"),
-        col("rank").cast("long").as("rank"),
-        col("neighbor_id"),
-        round(col("adist"), 6).as("adist")
-      )
+    val cells = (
+      greatest(simStructs(col("__e")): _*).getField("cid").as("cid"),
+      slice(reverse(array_sort(array(simStructs(col("__e")): _*))), 1, nProbe).getField("cid").as("__cids")
+    )
+    val (coded, luts, adist) = pqEncode(corpus, queries, books, dim, Some(cells))
+    val withLuts = luts.withColumn("cid", explode(col("__cids"))).drop("__cids")
+    topKPerQuery(
+      coded.join(broadcast(withLuts), Seq("cid")).filter(col("query_id") =!= col("neighbor_id")),
+      adist,
+      "adist",
+      k,
+      ascending = true
+    )
   }
 
   def annIvfPq(spark: SparkSession, dir: String): DataFrame = {
@@ -2058,24 +2016,13 @@ object Similarity {
     val byApprox = Window.partitionBy(col("query_id")).orderBy(col("approx").desc, col("neighbor_id"))
     val short = c
       .join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("approx", VectorMath.cosine(col("vq"), col("dq"), col("nq"), col("ndq")))
+      .withColumn("approx", cosineVQ("dq", "ndq"))
       .withColumn("__rk", row_number().over(byApprox))
       .filter(col("__rk") <= shortlistFactor * k)
       .select(col("query_id"), col("vq"), col("nq"), col("neighbor_id"))
     // exact rerank: point-fetch the raw candidate vectors
     val cTrue = prepped(corpus, "neighbor_id", "vt", "nt")
-    val byExact = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    cTrue
-      .join(broadcast(short), Seq("neighbor_id"))
-      .withColumn("cosine", VectorMath.cosine(col("vq"), col("vt"), col("nq"), col("nt")))
-      .withColumn("rank", row_number().over(byExact))
-      .filter(col("rank") <= k)
-      .select(
-        col("query_id"),
-        col("rank").cast("long").as("rank"),
-        col("neighbor_id"),
-        round(col("cosine"), 6).as("cosine")
-      )
+    topKPerQuery(cTrue.join(broadcast(short), Seq("neighbor_id")), cosineVQ("vt", "nt"), "cosine", k)
   }
 
   def annSq(spark: SparkSession, dir: String): DataFrame = {
@@ -2260,18 +2207,12 @@ object Similarity {
         "cid",
         explode(slice(array_sort(cellStructs(col("vq"))), 1, nProbe).getField("cid"))
       )
-    val byQuery = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    c.join(broadcast(q), Seq("cid"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", VectorMath.cosine(col("vq"), col("vc"), col("nq"), col("nc")))
-      .withColumn("rank", row_number().over(byQuery))
-      .filter(col("rank") <= k)
-      .select(
-        col("query_id"),
-        col("rank").cast("long").as("rank"),
-        col("neighbor_id"),
-        round(col("cosine"), 6).as("cosine")
-      )
+    topKPerQuery(
+      c.join(broadcast(q), Seq("cid")).filter(col("query_id") =!= col("neighbor_id")),
+      cosineVQ("vc", "nc"),
+      "cosine",
+      k
+    )
   }
 
   def annIvfKmeans(spark: SparkSession, dir: String): DataFrame = {
@@ -2417,6 +2358,49 @@ object Similarity {
   // ANN quality evaluation (recall@k vs the exact baseline)
   // ---------------------------------------------------------------------
 
+  /** Recall@k of an index's top-k (`approx`, a registry query) against
+    * the exact brute-force top-k: a broadcast left-outer hit join on
+    * (query, neighbor) ids and a per-query rollup, the same for every
+    * index. See [[annRecall]] for the scale shape.
+    */
+  private def recallAtK(
+    spark: SparkSession,
+    dir: String,
+    approx: (SparkSession, String) => DataFrame
+  ): DataFrame = {
+    val bf = bruteForceFor(spark, dir).select(col("query_id"), col("neighbor_id"))
+    val ann = approx(spark, dir).select(col("query_id").as("__q"), col("neighbor_id").as("__n"))
+    bf.join(
+        broadcast(ann),
+        col("query_id") === col("__q") && col("neighbor_id") === col("__n"),
+        "left_outer"
+      )
+      .groupBy(col("query_id"))
+      .agg(count(col("__n")).as("n_hit"))
+      .select(
+        col("query_id"),
+        col("n_hit"),
+        lit(TopK.toLong).as("k"),
+        round(col("n_hit") / lit(TopK.toDouble), 6).as("recall")
+      )
+      .orderBy(col("query_id"))
+  }
+
+  /** Recall oracle: the brute-force and the index pipelines verbatim
+    * as nested CTEs (each already proven hash-green on its own), the
+    * index one named `alias`, joined on (query, neighbor) id pairs.
+    */
+  private def recallSql(alias: String, approxSql: String): String =
+    s"""WITH bf AS ($annBruteforceSql),
+       |$alias AS ($approxSql)
+       |SELECT bf.query_id, COUNT($alias.neighbor_id) AS n_hit,
+       |  CAST($TopK AS BIGINT) AS k,
+       |  ROUND(COUNT($alias.neighbor_id) / CAST($TopK AS DOUBLE), 6) AS recall
+       |FROM bf LEFT JOIN $alias
+       |  ON $alias.query_id = bf.query_id AND $alias.neighbor_id = bf.neighbor_id
+       |GROUP BY bf.query_id
+       |ORDER BY bf.query_id""".stripMargin
+
   /** Recall@k of the LSH index against the exact brute-force top-k —
     * THE acceptance metric for any approximate index (how much of the
     * true neighborhood the bucketed search recovers). Every ANN
@@ -2432,40 +2416,9 @@ object Similarity {
     * Portability: hits are exact id-match counts; recall divides by
     * the constant k in one pinned order.
     */
-  def annRecall(spark: SparkSession, dir: String): DataFrame = {
-    val bf = bruteForceFor(spark, dir).select(col("query_id"), col("neighbor_id"))
-    val ls = annLsh(spark, dir)
-      .select(col("query_id").as("__q"), col("neighbor_id").as("__n"))
-    bf.join(
-        broadcast(ls),
-        col("query_id") === col("__q") && col("neighbor_id") === col("__n"),
-        "left_outer"
-      )
-      .groupBy(col("query_id"))
-      .agg(count(col("__n")).as("n_hit"))
-      .select(
-        col("query_id"),
-        col("n_hit"),
-        lit(TopK.toLong).as("k"),
-        round(col("n_hit") / lit(TopK.toDouble), 6).as("recall")
-      )
-      .orderBy(col("query_id"))
-  }
+  def annRecall(spark: SparkSession, dir: String): DataFrame = recallAtK(spark, dir, annLsh)
 
-  /** Recall oracle: the two component pipelines verbatim as nested
-    * CTEs (each already proven hash-green on its own), joined on
-    * (query, neighbor) id pairs.
-    */
-  val annRecallSql: String =
-    s"""WITH bf AS ($annBruteforceSql),
-       |lsh AS ($annLshSql)
-       |SELECT bf.query_id, COUNT(lsh.neighbor_id) AS n_hit,
-       |  CAST($TopK AS BIGINT) AS k,
-       |  ROUND(COUNT(lsh.neighbor_id) / CAST($TopK AS DOUBLE), 6) AS recall
-       |FROM bf LEFT JOIN lsh
-       |  ON lsh.query_id = bf.query_id AND lsh.neighbor_id = bf.neighbor_id
-       |GROUP BY bf.query_id
-       |ORDER BY bf.query_id""".stripMargin
+  val annRecallSql: String = recallSql("lsh", annLshSql)
 
   /** Recall@k of the IVF index against the same exact baseline — the
     * second index-acceptance metric: LSH and IVF trade recall
@@ -2473,25 +2426,7 @@ object Similarity {
     * its own curve. Same join shape as [[annRecall]]: two driver-size
     * (queries × k) rankings, co-keyed.
     */
-  def annRecallIvf(spark: SparkSession, dir: String): DataFrame = {
-    val bf = bruteForceFor(spark, dir).select(col("query_id"), col("neighbor_id"))
-    val iv = annIvf(spark, dir)
-      .select(col("query_id").as("__q"), col("neighbor_id").as("__n"))
-    bf.join(
-        broadcast(iv),
-        col("query_id") === col("__q") && col("neighbor_id") === col("__n"),
-        "left_outer"
-      )
-      .groupBy(col("query_id"))
-      .agg(count(col("__n")).as("n_hit"))
-      .select(
-        col("query_id"),
-        col("n_hit"),
-        lit(TopK.toLong).as("k"),
-        round(col("n_hit") / lit(TopK.toDouble), 6).as("recall")
-      )
-      .orderBy(col("query_id"))
-  }
+  def annRecallIvf(spark: SparkSession, dir: String): DataFrame = recallAtK(spark, dir, annIvf)
 
   /** Recall@k of the PQ index against the exact baseline — the third
     * acceptance curve: PQ's loss is QUANTIZATION (ADC distance error),
@@ -2499,36 +2434,9 @@ object Similarity {
     * count/size rather than probe count; a pipeline choosing an index
     * wants all three curves side by side.
     */
-  def annRecallPq(spark: SparkSession, dir: String): DataFrame = {
-    val bf = bruteForceFor(spark, dir).select(col("query_id"), col("neighbor_id"))
-    val pq = annPq(spark, dir)
-      .select(col("query_id").as("__q"), col("neighbor_id").as("__n"))
-    bf.join(
-        broadcast(pq),
-        col("query_id") === col("__q") && col("neighbor_id") === col("__n"),
-        "left_outer"
-      )
-      .groupBy(col("query_id"))
-      .agg(count(col("__n")).as("n_hit"))
-      .select(
-        col("query_id"),
-        col("n_hit"),
-        lit(TopK.toLong).as("k"),
-        round(col("n_hit") / lit(TopK.toDouble), 6).as("recall")
-      )
-      .orderBy(col("query_id"))
-  }
+  def annRecallPq(spark: SparkSession, dir: String): DataFrame = recallAtK(spark, dir, annPq)
 
-  val annRecallPqSql: String =
-    s"""WITH bf AS ($annBruteforceSql),
-       |pq AS ($annPqSql)
-       |SELECT bf.query_id, COUNT(pq.neighbor_id) AS n_hit,
-       |  CAST($TopK AS BIGINT) AS k,
-       |  ROUND(COUNT(pq.neighbor_id) / CAST($TopK AS DOUBLE), 6) AS recall
-       |FROM bf LEFT JOIN pq
-       |  ON pq.query_id = bf.query_id AND pq.neighbor_id = bf.neighbor_id
-       |GROUP BY bf.query_id
-       |ORDER BY bf.query_id""".stripMargin
+  val annRecallPqSql: String = recallSql("pq", annPqSql)
 
   /** Recall@k of the SQ index against the exact baseline — the fourth
     * acceptance curve, completing the family (LSH = pruning loss, IVF
@@ -2542,36 +2450,9 @@ object Similarity {
     * Same scale shape as [[annRecall]]: both rankings are driver-size
     * (queries × k) relations, hit join broadcast, rollup per query.
     */
-  def annRecallSq(spark: SparkSession, dir: String): DataFrame = {
-    val bf = bruteForceFor(spark, dir).select(col("query_id"), col("neighbor_id"))
-    val sq = annSq(spark, dir)
-      .select(col("query_id").as("__q"), col("neighbor_id").as("__n"))
-    bf.join(
-        broadcast(sq),
-        col("query_id") === col("__q") && col("neighbor_id") === col("__n"),
-        "left_outer"
-      )
-      .groupBy(col("query_id"))
-      .agg(count(col("__n")).as("n_hit"))
-      .select(
-        col("query_id"),
-        col("n_hit"),
-        lit(TopK.toLong).as("k"),
-        round(col("n_hit") / lit(TopK.toDouble), 6).as("recall")
-      )
-      .orderBy(col("query_id"))
-  }
+  def annRecallSq(spark: SparkSession, dir: String): DataFrame = recallAtK(spark, dir, annSq)
 
-  val annRecallSqSql: String =
-    s"""WITH bf AS ($annBruteforceSql),
-       |sq AS ($annSqSql)
-       |SELECT bf.query_id, COUNT(sq.neighbor_id) AS n_hit,
-       |  CAST($TopK AS BIGINT) AS k,
-       |  ROUND(COUNT(sq.neighbor_id) / CAST($TopK AS DOUBLE), 6) AS recall
-       |FROM bf LEFT JOIN sq
-       |  ON sq.query_id = bf.query_id AND sq.neighbor_id = bf.neighbor_id
-       |GROUP BY bf.query_id
-       |ORDER BY bf.query_id""".stripMargin
+  val annRecallSqSql: String = recallSql("sq", annSqSql)
 
   /** Recall@k of the composed IVF+PQ index (IVFADC) against the exact
     * baseline — the FIFTH acceptance curve, for the one index shape
@@ -2581,36 +2462,9 @@ object Similarity {
     * against, and it must sit at-or-below both parents' curves. Same
     * driver-size join shape as the other four.
     */
-  def annRecallIvfPq(spark: SparkSession, dir: String): DataFrame = {
-    val bf = bruteForceFor(spark, dir).select(col("query_id"), col("neighbor_id"))
-    val ip = annIvfPq(spark, dir)
-      .select(col("query_id").as("__q"), col("neighbor_id").as("__n"))
-    bf.join(
-        broadcast(ip),
-        col("query_id") === col("__q") && col("neighbor_id") === col("__n"),
-        "left_outer"
-      )
-      .groupBy(col("query_id"))
-      .agg(count(col("__n")).as("n_hit"))
-      .select(
-        col("query_id"),
-        col("n_hit"),
-        lit(TopK.toLong).as("k"),
-        round(col("n_hit") / lit(TopK.toDouble), 6).as("recall")
-      )
-      .orderBy(col("query_id"))
-  }
+  def annRecallIvfPq(spark: SparkSession, dir: String): DataFrame = recallAtK(spark, dir, annIvfPq)
 
-  val annRecallIvfPqSql: String =
-    s"""WITH bf AS ($annBruteforceSql),
-       |ip AS ($annIvfPqSql)
-       |SELECT bf.query_id, COUNT(ip.neighbor_id) AS n_hit,
-       |  CAST($TopK AS BIGINT) AS k,
-       |  ROUND(COUNT(ip.neighbor_id) / CAST($TopK AS DOUBLE), 6) AS recall
-       |FROM bf LEFT JOIN ip
-       |  ON ip.query_id = bf.query_id AND ip.neighbor_id = bf.neighbor_id
-       |GROUP BY bf.query_id
-       |ORDER BY bf.query_id""".stripMargin
+  val annRecallIvfPqSql: String = recallSql("ip", annIvfPqSql)
 
   // ---------------------------------------------------------------------
   // Hubness screen (kNN in-degree over the LSH-bucketed graph)
@@ -2955,16 +2809,7 @@ object Similarity {
        |ORDER BY n.vec_id""".stripMargin
   }
 
-  val annRecallIvfSql: String =
-    s"""WITH bf AS ($annBruteforceSql),
-       |ivf AS ($annIvfSql)
-       |SELECT bf.query_id, COUNT(ivf.neighbor_id) AS n_hit,
-       |  CAST($TopK AS BIGINT) AS k,
-       |  ROUND(COUNT(ivf.neighbor_id) / CAST($TopK AS DOUBLE), 6) AS recall
-       |FROM bf LEFT JOIN ivf
-       |  ON ivf.query_id = bf.query_id AND ivf.neighbor_id = bf.neighbor_id
-       |GROUP BY bf.query_id
-       |ORDER BY bf.query_id""".stripMargin
+  val annRecallIvfSql: String = recallSql("ivf", annIvfSql)
 
   // ---------------------------------------------------------------------
   // Graph-based ANN (beam search over the bucketed kNN graph)
@@ -3244,36 +3089,9 @@ object Similarity {
     * LSH/IVF/PQ/SQ curves. Same driver-size (queries × k) join shape
     * as [[annRecall]].
     */
-  def annRecallGraph(spark: SparkSession, dir: String): DataFrame = {
-    val bf = bruteForceFor(spark, dir).select(col("query_id"), col("neighbor_id"))
-    val gr = annGraph(spark, dir)
-      .select(col("query_id").as("__q"), col("neighbor_id").as("__n"))
-    bf.join(
-        broadcast(gr),
-        col("query_id") === col("__q") && col("neighbor_id") === col("__n"),
-        "left_outer"
-      )
-      .groupBy(col("query_id"))
-      .agg(count(col("__n")).as("n_hit"))
-      .select(
-        col("query_id"),
-        col("n_hit"),
-        lit(TopK.toLong).as("k"),
-        round(col("n_hit") / lit(TopK.toDouble), 6).as("recall")
-      )
-      .orderBy(col("query_id"))
-  }
+  def annRecallGraph(spark: SparkSession, dir: String): DataFrame = recallAtK(spark, dir, annGraph)
 
-  val annRecallGraphSql: String =
-    s"""WITH bf AS ($annBruteforceSql),
-       |gr AS ($annGraphSql)
-       |SELECT bf.query_id, COUNT(gr.neighbor_id) AS n_hit,
-       |  CAST($TopK AS BIGINT) AS k,
-       |  ROUND(COUNT(gr.neighbor_id) / CAST($TopK AS DOUBLE), 6) AS recall
-       |FROM bf LEFT JOIN gr
-       |  ON gr.query_id = bf.query_id AND gr.neighbor_id = bf.neighbor_id
-       |GROUP BY bf.query_id
-       |ORDER BY bf.query_id""".stripMargin
+  val annRecallGraphSql: String = recallSql("gr", annGraphSql)
 
   // ---------------------------------------------------------------------
   // MMR diversification rerank

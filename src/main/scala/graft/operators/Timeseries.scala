@@ -1014,9 +1014,9 @@ object Timeseries {
     * the normalized spectral power
     * ((Σ v·cos(2πk·frac))/n)² + ((Σ v·sin(2πk·frac))/n)², frac =
     * (t mod W)/W — the per-band energy report an EEG pipeline derives
-    * (delta/theta/alpha/beta analog on the harmonic axis). One shuffle,
-    * algebraic partial aggregation; the harmonic explode multiplies
-    * rows ×|ks| BEFORE the aggregation, map-side.
+    * (delta/theta/alpha/beta analog on the harmonic axis), read off
+    * the [[dftComps]] kernel. One shuffle, algebraic partial
+    * aggregation; the harmonic fan-out runs on the summary grain.
     *
     * Cross-engine float discipline: frac is exact integer-mod then one
     * division; 2π is the same double literal both sides; cos/sin args
@@ -1025,7 +1025,24 @@ object Timeseries {
     * NORMALIZED by n before squaring so a last-ulp libm difference
     * stays ~10 orders below the ROUND(…,6) boundary.
     */
-  def bandPower(ts: DataFrame, windowUs: Long, ks: Seq[Int] = 1 to 4): DataFrame = {
+  def bandPower(ts: DataFrame, windowUs: Long, ks: Seq[Int] = 1 to 4): DataFrame =
+    dftComps(ts, windowUs, ks)
+      .select(
+        col("channel"),
+        col("win"),
+        col("k"),
+        col("n"),
+        round(
+          (col("c") / col("n")) * (col("c") / col("n")) + (col("s") / col("n")) * (col("s") / col("n")),
+          6
+        ).as("power")
+      )
+
+  /** Per-(channel, window, k) sample count `n` and DFT components
+    * (c, s) — the shared kernel under [[bandPower]],
+    * [[spectralCoherence]] and [[phaseLocking]].
+    */
+  private def dftComps(ts: DataFrame, windowUs: Long, ks: Seq[Int]): DataFrame = {
     val twoPi = 6.283185307179586
     val frac = (col("t") % lit(windowUs)).cast("double") / lit(windowUs.toDouble)
     // ONE aggregation at (channel, win) grain carrying all |ks|
@@ -1037,7 +1054,8 @@ object Timeseries {
     // ((2π·k)·frac — k folded as a double literal, the same product the
     // per-row `2π·k·frac` column algebra produced), and DECIMAL sums
     // are order-independent, so every per-cell sum is bit-identical to
-    // the exploded formulation and the oracle is unchanged.
+    // the exploded formulation and the oracle is unchanged. A consumer
+    // that does not read `n` gets its count pruned away.
     val aggCols = Seq(count(lit(1)).as("n")) ++ ks.flatMap { k =>
       val arg = lit(twoPi) * lit(k.toLong) * col("__frac")
       Seq(
@@ -1062,12 +1080,22 @@ object Timeseries {
         col("win"),
         col("__kk.k").as("k"),
         col("n"),
-        round(
-          (col("__kk.c") / col("n")) * (col("__kk.c") / col("n")) +
-            (col("__kk.s") / col("n")) * (col("__kk.s") / col("n")),
-          6
-        ).as("power")
+        col("__kk.c").as("c"),
+        col("__kk.s").as("s")
       )
+  }
+
+  /** The channel pairs (ch_a < ch_b) of [[spectralCoherence]] and
+    * [[phaseLocking]]: both channels' components (ca, sa) and (cb, sb)
+    * of one (window, k), joined on the summary relation.
+    */
+  private def dftPairs(ts: DataFrame, windowUs: Long, ks: Seq[Int]): DataFrame = {
+    val comps = dftComps(ts, windowUs, ks)
+    def side(ch: String, c: String, s: String): DataFrame =
+      comps.select(col("channel").as(ch), col("win"), col("k"), col("c").as(c), col("s").as(s))
+    side("ch_a", "ca", "sa")
+      .join(side("ch_b", "cb", "sb"), Seq("win", "k"))
+      .filter(col("ch_a") < col("ch_b"))
   }
 
   /** Welch-style cross-channel spectral coherence — the standard
@@ -1089,63 +1117,8 @@ object Timeseries {
     * reduction is one (pair, k)-keyed partial agg. Portability: same
     * trig-on-identical-rationals + DECIMAL-routed sums as bandPower.
     */
-  /** Per-(channel, window, k) DFT components (c, s) — the shared
-    * kernel under [[spectralCoherence]] and [[phaseLocking]]. Same
-    * single-agg shape as [[bandPower]]: all |ks| harmonics are sum
-    * columns of ONE (channel, win) aggregation (no sample-grain
-    * explode), fanned out to k rows on the summary grain. Trig terms
-    * and DECIMAL sums are bit-identical to the exploded formulation.
-    */
-  private def dftComps(ts: DataFrame, windowUs: Long, ks: Seq[Int]): DataFrame = {
-    val twoPi = 6.283185307179586
-    val frac = (col("t") % lit(windowUs)).cast("double") / lit(windowUs.toDouble)
-    val aggCols = ks.flatMap { k =>
-      val arg = lit(twoPi) * lit(k.toLong) * col("__frac")
-      Seq(
-        detSum(col("v") * cos(arg)).as(s"__c_$k"),
-        detSum(col("v") * sin(arg)).as(s"__s_$k")
-      )
-    }
-    val kFan = array(ks.map { k =>
-      struct(lit(k.toLong).as("k"), col(s"__c_$k").as("c"), col(s"__s_$k").as("s"))
-    }: _*)
-    ts.select(
-      col("channel"),
-      floor(col("t") / lit(windowUs)).cast("long").as("win"),
-      col("v"),
-      frac.as("__frac")
-    )
-      .groupBy(col("channel"), col("win"))
-      .agg(aggCols.head, aggCols.tail: _*)
-      .select(col("channel"), col("win"), explode(kFan).as("__kk"))
-      .select(
-        col("channel"),
-        col("win"),
-        col("__kk.k").as("k"),
-        col("__kk.c").as("c"),
-        col("__kk.s").as("s")
-      )
-  }
-
-  def spectralCoherence(ts: DataFrame, windowUs: Long, ks: Seq[Int] = 1 to 4): DataFrame = {
-    val comps = dftComps(ts, windowUs, ks)
-    val lhs = comps.select(
-      col("channel").as("ch_a"),
-      col("win"),
-      col("k"),
-      col("c").as("ca"),
-      col("s").as("sa")
-    )
-    val rhs = comps.select(
-      col("channel").as("ch_b"),
-      col("win"),
-      col("k"),
-      col("c").as("cb"),
-      col("s").as("sb")
-    )
-    lhs
-      .join(rhs, Seq("win", "k"))
-      .filter(col("ch_a") < col("ch_b"))
+  def spectralCoherence(ts: DataFrame, windowUs: Long, ks: Seq[Int] = 1 to 4): DataFrame =
+    dftPairs(ts, windowUs, ks)
       .groupBy(col("ch_a"), col("ch_b"), col("k"))
       .agg(
         count(lit(1)).as("n_win"),
@@ -1165,7 +1138,6 @@ object Timeseries {
           6
         ).as("coherence")
       )
-  }
 
   /** Phase-locking value per channel pair (Lachaux et al. 1999) — the
     * PHASE-ONLY coupling measure EEG pipelines report beside
@@ -1189,29 +1161,12 @@ object Timeseries {
     * windows drop via NULLIF in both engines.
     */
   def phaseLocking(ts: DataFrame, windowUs: Long, ks: Seq[Int] = 1 to 4): DataFrame = {
-    val comps = dftComps(ts, windowUs, ks)
-    val lhs = comps.select(
-      col("channel").as("ch_a"),
-      col("win"),
-      col("k"),
-      col("c").as("ca"),
-      col("s").as("sa")
-    )
-    val rhs = comps.select(
-      col("channel").as("ch_b"),
-      col("win"),
-      col("k"),
-      col("c").as("cb"),
-      col("s").as("sb")
-    )
     val denom = nullif(
       sqrt(col("ca") * col("ca") + col("sa") * col("sa")) *
         sqrt(col("cb") * col("cb") + col("sb") * col("sb")),
       lit(0.0)
     )
-    lhs
-      .join(rhs, Seq("win", "k"))
-      .filter(col("ch_a") < col("ch_b"))
+    dftPairs(ts, windowUs, ks)
       .withColumn("__cosd", round((col("ca") * col("cb") + col("sa") * col("sb")) / denom, 9))
       .withColumn("__sind", round((col("sa") * col("cb") - col("ca") * col("sb")) / denom, 9))
       .filter(col("__cosd").isNotNull)

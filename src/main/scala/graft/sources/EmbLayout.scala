@@ -40,46 +40,18 @@ object EmbLayout {
     */
   private val PlanesMarker = "_graft_planes"
 
-  /** Cached marker lookups, keyed by CANONICAL path (misses cached
-    * too): a probe via any alias of the same directory — trailing
-    * slash, relative path, symlink — must hit the same cache entry
-    * that [[writeMarker]] invalidates, or a pre-write miss cached
-    * under the alias would pin the default plane count against a
-    * layout later written at another count.
+  /** The plane count recorded in a layout's `_graft_planes` marker,
+    * None for markerless paths or a count outside 1..62. The read is
+    * cached per layout root.
     */
-  private val planesCache = scala.collection.concurrent.TrieMap[String, Option[Int]]()
-
   def markerPlanes(
     rootPath: String,
     hadoopConf: org.apache.hadoop.conf.Configuration
   ): Option[Int] =
-    planesCache.getOrElseUpdate(
-      graft.Tables.canonDir(rootPath), {
-        try {
-          val marker = new org.apache.hadoop.fs.Path(rootPath, PlanesMarker)
-          val fs = marker.getFileSystem(hadoopConf)
-          if (!fs.exists(marker)) None
-          else {
-            val in = fs.open(marker)
-            val bytes =
-              try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-              finally in.close()
-            val p = new String(bytes, "UTF-8").trim.toInt
-            if (p > 0 && p < 63) Some(p) else None
-          }
-        } catch { case scala.util.control.NonFatal(_) => None }
-      }
-    )
-
-  private def writeMarker(spark: SparkSession, path: String, planes: Int): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(path, PlanesMarker)
-    val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(marker, true)
-    try out.write(planes.toString.getBytes("UTF-8"))
-    finally out.close()
-    // a rewrite with a different plane set must invalidate the lookup
-    planesCache.remove(graft.Tables.canonDir(path))
-  }
+    PartitionedLayouts
+      .readMarker(rootPath, PlanesMarker, hadoopConf)
+      .flatMap(_.toIntOption)
+      .filter(p => p > 0 && p < 63)
 
   /** One-time write: vectors land in their bucket's directory. One
     * writer task per partition dir (the bucket key is the repartition
@@ -97,7 +69,7 @@ object EmbLayout {
       .partitionBy("p_bucket")
       .mode("overwrite")
       .parquet(path)
-    writeMarker(emb.sparkSession, path, planes)
+    PartitionedLayouts.writeMarker(emb.sparkSession, path, PlanesMarker, planes)
   }
 
   def read(spark: SparkSession, path: String): DataFrame =
@@ -121,17 +93,7 @@ object EmbLayout {
     dstPath: String,
     maxRecordsPerFile: Long = 5000000L
   ): Unit = {
-    // the overwrite is lazy w.r.t. the read — compacting a layout onto
-    // itself (or into a dir nested under itself) would truncate the
-    // layout being read and destroy it
-    val srcCanon = graft.Tables.canonDir(srcPath)
-    val dstCanon = graft.Tables.canonDir(dstPath)
-    require(
-      srcCanon != dstCanon && !dstCanon.startsWith(srcCanon + java.io.File.separator) &&
-        !srcCanon.startsWith(dstCanon + java.io.File.separator),
-      s"compact src and dst must not coincide or nest either way " +
-        s"(overwrite would truncate the layout being read): src=$srcCanon dst=$dstCanon"
-    )
+    PartitionedLayouts.requireDisjoint(srcPath, dstPath)
     spark.read
       .parquet(srcPath)
       .repartition(col("p_bucket"))
@@ -142,7 +104,7 @@ object EmbLayout {
       .mode("overwrite")
       .parquet(dstPath)
     markerPlanes(srcPath, spark.sessionState.newHadoopConf()).foreach { p =>
-      writeMarker(spark, dstPath, p)
+      PartitionedLayouts.writeMarker(spark, dstPath, PlanesMarker, p)
     }
   }
 

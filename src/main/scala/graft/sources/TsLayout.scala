@@ -29,39 +29,14 @@ object TsLayout {
   /** Marker file recording the bucket width a layout was written with. */
   private val BucketMarker = "_graft_bucket_us"
 
-  /** Cached marker lookups, keyed by CANONICAL root path (misses
-    * cached too — the optimizer asks on every query). Canonicalizing
-    * the key means a probe via any alias of the same directory
-    * (trailing slash, relative path, symlink) hits the entry that
-    * [[writeMarker]] invalidates — a miss cached under an alias would
-    * otherwise pin "markerless" against a layout written later.
-    */
-  private val widthCache = scala.collection.concurrent.TrieMap[String, Option[Long]]()
-
   /** The bucket width recorded in a layout's `_graft_bucket_us` marker,
     * None for markerless paths. This is how [[graft.plans.DeriveBucketFilter]]
     * learns each scanned layout's OWN width instead of trusting a
     * session-global number — the session conf is only a fallback for
-    * markerless layouts.
+    * markerless layouts. The read is cached per layout root.
     */
   def markerWidth(rootPath: String, hadoopConf: org.apache.hadoop.conf.Configuration): Option[Long] =
-    widthCache.getOrElseUpdate(
-      graft.Tables.canonDir(rootPath), {
-        try {
-          val marker = new org.apache.hadoop.fs.Path(rootPath, BucketMarker)
-          val fs = marker.getFileSystem(hadoopConf)
-          if (!fs.exists(marker)) None
-          else {
-            val in = fs.open(marker)
-            val bytes =
-              try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-              finally in.close()
-            val w = new String(bytes, "UTF-8").trim.toLong
-            if (w > 0) Some(w) else None
-          }
-        } catch { case scala.util.control.NonFatal(_) => None }
-      }
-    )
+    PartitionedLayouts.readMarker(rootPath, BucketMarker, hadoopConf).flatMap(_.toLongOption).filter(_ > 0)
 
   /** Write ts rows into the partitioned layout. Directory keys are
     * duplicated from data columns (p_channel, p_bucket) so the data
@@ -82,13 +57,7 @@ object TsLayout {
       .partitionBy("p_channel", "p_bucket")
       .mode("overwrite")
       .parquet(path)
-    val marker = new org.apache.hadoop.fs.Path(path, BucketMarker)
-    val fs = marker.getFileSystem(ts.sparkSession.sessionState.newHadoopConf())
-    val out = fs.create(marker, true)
-    try out.write(bucketUs.toString.getBytes("UTF-8"))
-    finally out.close()
-    // a rewrite with a different width must invalidate the cached lookup
-    widthCache.remove(graft.Tables.canonDir(path))
+    PartitionedLayouts.writeMarker(ts.sparkSession, path, BucketMarker, bucketUs)
   }
 
   /** Read a layout. Width handling needs no session step: the rule
@@ -116,17 +85,7 @@ object TsLayout {
     dstPath: String,
     maxRecordsPerFile: Long = 5000000L
   ): Unit = {
-    // the overwrite is lazy w.r.t. the read — compacting a layout onto
-    // itself (or into a dir nested under itself) would truncate the
-    // layout being read and destroy it
-    val srcCanon = graft.Tables.canonDir(srcPath)
-    val dstCanon = graft.Tables.canonDir(dstPath)
-    require(
-      srcCanon != dstCanon && !dstCanon.startsWith(srcCanon + java.io.File.separator) &&
-        !srcCanon.startsWith(dstCanon + java.io.File.separator),
-      s"compact src and dst must not coincide or nest either way " +
-        s"(overwrite would truncate the layout being read): src=$srcCanon dst=$dstCanon"
-    )
+    PartitionedLayouts.requireDisjoint(srcPath, dstPath)
     spark.read
       .parquet(srcPath)
       .repartition(col("p_channel"), col("p_bucket"))
@@ -136,17 +95,8 @@ object TsLayout {
       .mode("overwrite")
       .parquet(dstPath)
     markerWidth(srcPath, spark.sessionState.newHadoopConf()).foreach { w =>
-      writeMarker(spark, dstPath, w)
+      PartitionedLayouts.writeMarker(spark, dstPath, BucketMarker, w)
     }
-  }
-
-  private def writeMarker(spark: SparkSession, path: String, bucketUs: Long): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(path, BucketMarker)
-    val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(marker, true)
-    try out.write(bucketUs.toString.getBytes("UTF-8"))
-    finally out.close()
-    widthCache.remove(graft.Tables.canonDir(path))
   }
 
   /** Range query that drives partition pruning: channel set + time

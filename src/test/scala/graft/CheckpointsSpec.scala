@@ -87,6 +87,19 @@ class CheckpointsSpec extends SparkSpec {
     }
   }
 
+  "pageRank" should "leave no entry in the session's cache manager" in {
+    val sc = spark.sparkContext
+    // public in bytecode, private[sql] in Scala
+    val cache = spark.sharedState.cacheManager
+    def entries: Int = cache.getClass.getMethod("numCachedEntries").invoke(cache).asInstanceOf[Int]
+    val before = (sc.getPersistentRDDs.keySet, entries)
+    val ranks = Dedup.pageRank(stars)
+    ranks.count()
+    entries shouldBe before._2
+    java.lang.ref.Reference.reachabilityFence(ranks)
+    sc.getPersistentRDDs.filter { case (id, _) => !before._1(id) }.values.foreach(_.unpersist(blocking = true))
+  }
+
   "unigramTrain" should "keep only the two pins it returns" in {
     pinnedAll { val (n2, enc) = Tokenizer.unigramTrain(docs); Seq(n2, enc) } shouldBe 2
   }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Similarity
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -153,26 +154,94 @@ class SimilaritySpec extends SparkSpec {
   }
 
   "annRecallSq" should "stay within bounds and equal a driver-side set intersection" in {
-    val rows = Similarity.annRecallSq(spark, sfDir).collect()
-    rows.length shouldBe Similarity.QueryCount
-    rows.foreach { r =>
-      val hit = r.getAs[Long]("n_hit")
-      val k = r.getAs[Long]("k")
-      hit should (be >= 0L and be <= k)
-      r.getAs[Double]("recall") shouldBe hit.toDouble / k +- 1e-9
+    // every recall@k query beside the ranking it scores, and the
+    // brute-force truth they share
+    val curves: Seq[(String, (SparkSession, String) => DataFrame, (SparkSession, String) => DataFrame)] = Seq(
+      ("lsh", Similarity.annRecall, Similarity.annLsh),
+      ("ivf", Similarity.annRecallIvf, Similarity.annIvf),
+      ("pq", Similarity.annRecallPq, Similarity.annPq),
+      ("sq", Similarity.annRecallSq, Similarity.annSq),
+      ("ivfpq", Similarity.annRecallIvfPq, Similarity.annIvfPq),
+      ("graph", Similarity.annRecallGraph, Similarity.annGraph)
+    )
+    def neighbors(df: DataFrame): Map[Long, Set[Long]] =
+      df.select($"query_id", $"neighbor_id").as[(Long, Long)].collect().groupBy(_._1).map { case (q, xs) =>
+        q -> xs.map(_._2).toSet
+      }
+    val bf = neighbors(Similarity.annBruteforce(spark, sfDir))
+    curves.foreach { case (name, recall, ranking) =>
+      withClue(s"$name: ") {
+        val rows = recall(spark, sfDir).collect()
+        rows.map(_.getAs[Long]("query_id")).toSeq shouldBe (0L until Similarity.QueryCount.toLong)
+        val approx = neighbors(ranking(spark, sfDir))
+        rows.foreach { r =>
+          val q = r.getAs[Long]("query_id")
+          val hit = r.getAs[Long]("n_hit")
+          val k = r.getAs[Long]("k")
+          k shouldBe Similarity.TopK.toLong
+          hit should (be >= 0L and be <= k)
+          // recompute the hit count from the two published rankings
+          hit shouldBe (bf(q) intersect approx.getOrElse(q, Set.empty)).size.toLong
+          r.getAs[Double]("recall") shouldBe hit.toDouble / k +- 1e-9
+        }
+        // exact rerank means SQ recall can only lose at the shortlist
+        // margin: on this table the average must clear the LSH curve's
+        // pruning-loss territory by a wide margin
+        if (name == "sq") rows.map(_.getAs[Double]("recall")).sum / rows.length should be >= 0.8
+      }
     }
-    // recompute one query's hit count from the two published rankings
-    val bf = Similarity.annBruteforce(spark, sfDir)
-      .filter($"query_id" === 0L).select($"neighbor_id").as[Long].collect().toSet
-    val sq = Similarity.annSq(spark, sfDir)
-      .filter($"query_id" === 0L).select($"neighbor_id").as[Long].collect().toSet
-    rows.find(_.getAs[Long]("query_id") == 0L).get
-      .getAs[Long]("n_hit") shouldBe (bf intersect sq).size.toLong
-    // exact rerank means SQ recall can only lose at the shortlist
-    // margin: on this table the average must clear the LSH curve's
-    // pruning-loss territory by a wide margin
-    val mean = rows.map(_.getAs[Double]("recall")).sum / rows.length
-    mean should be >= 0.8
+  }
+
+  "every top-k index" should "rank 1..min(k, candidates) per query, never self, score monotone with id ties" in {
+    // 8 base vectors, 3 copies each: copies tie exactly on every score,
+    // so the neighbor_id tie-break is exercised by every index
+    val corpus = (0L until 24L).map { i =>
+      val b = (i % 8).toInt
+      (i, (b % 2).toLong, Array.tabulate(8)(d => (((b * 7 + d * 3) % 11) - 5 + (if (d == b) 9 else 0)).toFloat / 4f))
+    }.toDF("vec_id", "label", "embedding")
+    val qs = corpus.filter($"vec_id" < 6)
+    val indexes: Seq[(String, Int => DataFrame, Boolean)] = Seq(
+      ("bruteForceTopK", k => Similarity.bruteForceTopK(corpus, qs, k), false),
+      ("mipsTopK", k => Similarity.mipsTopK(corpus, qs, k), false),
+      ("lshTopK", k => Similarity.lshTopK(corpus, qs, k, planes = 3, dim = 8), false),
+      ("ivfTopK", k => Similarity.ivfTopK(corpus, qs, k, nCentroids = 4, nProbe = 2), false),
+      ("filteredTopK", k => Similarity.filteredTopK(corpus, qs, k), false),
+      ("mipsLshTopK", k => Similarity.mipsLshTopK(corpus, qs, k, planes = 3, dim = 8), false),
+      ("pqTopK", k => Similarity.pqTopK(corpus, qs, k, m = 2, dim = 8, kCent = 4, iters = 2), true),
+      (
+        "ivfPqTopK",
+        k => Similarity.ivfPqTopK(corpus, qs, k, nCentroids = 4, nProbe = 2, m = 2, dim = 8, kCent = 4, iters = 2),
+        true
+      ),
+      ("sqTopK", k => Similarity.sqTopK(corpus, qs, k, dim = 8), false),
+      ("ivfKmeansTopK", k => Similarity.ivfKmeansTopK(corpus, qs, k, kClusters = 3, iters = 2, nProbe = 2), false)
+    )
+    val k = 4
+    indexes.foreach { case (name, topK, ascending) =>
+      withClue(s"$name: ") {
+        def rows(kk: Int): Map[Long, Seq[(Long, Long, Double)]] = {
+          val df = topK(kk)
+          df.select($"query_id", $"rank", $"neighbor_id", col(df.columns.last).cast("double"))
+            .as[(Long, Long, Long, Double)]
+            .collect()
+            .groupBy(_._1)
+            .map { case (q, xs) => q -> xs.map(x => (x._2, x._3, x._4)).sortBy(_._1).toSeq }
+        }
+        // a cut far above the corpus size returns every candidate
+        val candidates = rows(1000).map { case (q, xs) => q -> xs.size }
+        val cut = rows(k)
+        cut.keySet shouldBe candidates.keySet
+        cut.foreach { case (q, xs) =>
+          xs.map(_._1) shouldBe (1L to math.min(k, candidates(q)).toLong)
+          xs.foreach(_._2 should not be q)
+          xs.sliding(2).filter(_.size == 2).foreach { case Seq((_, n1, s1), (_, n2, s2)) =>
+            if (ascending) s1 should be <= s2 else s1 should be >= s2
+            if (s1 == s2) n1 should be < n2
+          }
+        }
+        candidates.values.max should be >= k
+      }
+    }
   }
 
   "ivfTopK" should "beat the probe fraction's random-recall baseline" in {
