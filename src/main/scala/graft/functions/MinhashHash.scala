@@ -3,9 +3,9 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, TypeUtils}
 import org.apache.spark.sql.types._
 
 /** The MinHash hash family, engine-portable: a polynomial base hash of
@@ -144,6 +144,79 @@ object MinhashHash {
     */
   def polyHashes(features: Column): Column =
     GraftSqlBridge.column(PolyHashes(GraftSqlBridge.expression(features)))
+
+  /** Column API: |A ∩ B| of two ASCENDING-sorted arrays as multisets —
+    * each value equal on both sides adds ca·cb, the row count an
+    * equi-join of the two exploded arrays on the element produces.
+    * Null elements match nothing, as in that join. See [[InterCount]].
+    */
+  def interCount(a: Column, b: Column): Column =
+    GraftSqlBridge.column(InterCount(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
+}
+
+/** `inter_count(sorted_a, sorted_b)`: one merge walk, O(|A|+|B|), over
+  * two arrays that are sorted ascending by the element type's ordering
+  * (what `array_sort` produces; its trailing nulls are skipped). Any
+  * orderable element type works; long arrays — the hashed shingle sets
+  * of the MinHash verify — take an unboxed path. Unsorted input gives
+  * a wrong count, not an error. A null array gives null.
+  */
+case class InterCount(left: Expression, right: Expression)
+    extends BinaryExpression
+    with CodegenFallback {
+
+  override def dataType: DataType = LongType
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(a, _), ArrayType(b, _)) if a == b =>
+        TypeUtils.checkForOrderingExpr(a, prettyName)
+      case (l, r) =>
+        TypeCheckResult.TypeCheckFailure(
+          s"inter_count expects two arrays of one element type, got ${l.catalogString} and ${r.catalogString}")
+    }
+
+  private lazy val elementType = left.dataType.asInstanceOf[ArrayType].elementType
+  private lazy val ordering = TypeUtils.getInterpretedOrdering(elementType)
+
+  override def nullSafeEval(l: Any, r: Any): Any = {
+    val a = l.asInstanceOf[ArrayData]
+    val b = r.asInstanceOf[ArrayData]
+    val (na, nb) = (a.numElements(), b.numElements())
+    val compare: (Int, Int) => Int =
+      if (elementType == LongType) (i, j) => java.lang.Long.compare(a.getLong(i), b.getLong(j))
+      else (i, j) => ordering.compare(a.get(i, elementType), b.get(j, elementType))
+    // the length of the run of values equal to x(i) starting at i
+    def run(x: ArrayData, n: Int, i: Int, same: Int => Boolean): Int = {
+      var k = i + 1
+      while (k < n && !x.isNullAt(k) && same(k)) k += 1
+      k - i
+    }
+    var (i, j, count) = (0, 0, 0L)
+    while (i < na && j < nb) {
+      if (a.isNullAt(i)) i += 1
+      else if (b.isNullAt(j)) j += 1
+      else {
+        val c = compare(i, j)
+        if (c < 0) i += 1
+        else if (c > 0) j += 1
+        else {
+          val (i0, j0) = (i, j)
+          val ca = run(a, na, i0, k => compare(k, j0) == 0)
+          val cb = run(b, nb, j0, k => compare(i0, k) == 0)
+          count += ca.toLong * cb
+          i += ca
+          j += cb
+        }
+      }
+    }
+    count
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): InterCount =
+    copy(left = newLeft, right = newRight)
+
+  override def prettyName: String = "inter_count"
 }
 
 /** `poly_hashes(array<string>)`: element-wise polynomial codepoint hash

@@ -14,23 +14,24 @@ import org.apache.spark.sql.functions._
   *    MAP-SIDE kernel over that document's own token array — a
   *    signature is a function of one row, so no explode/re-aggregate
   *    shuffle exists in any signature stage;
-  *  - per-token work that must cross rows (Jaccard verify) is EXPLODED
-  *    to rows and runs as flat, codegen'd projections and joins, never
-  *    as nested higher-order lambdas — Spark HOF lambdas are
-  *    interpreted and re-evaluate inner expressions per element;
-  *  - set intersections (Jaccard verify) are relational: join exploded
-  *    element rows on the element and count — no recomputed arrays —
-  *    and the exploded relation exists only for candidate docs;
+  *  - set intersections (Jaccard verify) join each candidate pair to
+  *    its two docs' SORTED element arrays and count |A∩B| with one
+  *    native merge walk (MinhashHash.interCount), never a nested
+  *    higher-order lambda — Spark HOF lambdas are interpreted and
+  *    re-evaluate inner expressions per element — and the arrays exist
+  *    only for candidate docs;
   *  - mega buckets (boilerplate that collides everywhere) are dropped
   *    by a counted bucket-size cap BEFORE any bucket materializes, the
   *    guard against O(n²) pair blowup inside one bucket.
   *
-  * Note on persistence: the near-dup operators persist their multi-
-  * consumer intermediates (signatures, candidate pairs)
-  * with MEMORY_AND_DISK. Cached blocks live until session end / LRU
-  * eviction; long-running sessions processing many corpora should call
-  * spark.catalog.clearCache() between jobs, and at production scale
-  * these intermediates belong in checkpointed storage instead.
+  * Note on persistence: the MinHash and SimHash miners pin their
+  * multi-consumer signatures in a [[Checkpoints.scoped]] pin set; the
+  * pin lives while the result's plan reads it and nothing is left in
+  * the session's cache manager. Some older operators here still
+  * persist intermediates with MEMORY_AND_DISK; those cached blocks
+  * live until session end / LRU eviction, so long-running sessions
+  * processing many corpora should call spark.catalog.clearCache()
+  * between jobs.
   */
 object Dedup {
 
@@ -276,27 +277,21 @@ object Dedup {
     * nothing. The MinhashSignature kernel computes all 64 per-seed
     * minima in one pass (shingle hashed once, polynomial mod 2⁶¹−1;
     * seeds are affine derivations — reproducible in the DuckDB oracle,
-    * graft.functions.MinhashHash); `n` is the shingle-set size the
-    * Jaccard verify needs. At 100 TB the signature stage is an
+    * graft.functions.MinhashHash). At 100 TB the signature stage is an
     * embarrassingly parallel scan that pipelines into the banding
     * shuffle.
     */
   def minhashSignatures(docs: DataFrame, w: Int): DataFrame =
     docs
       .select(col("doc_id"), shingles(w).as("__sh"))
-      .select(
-        col("doc_id"),
-        graft.functions.MinhashHash.signature(col("__sh")).as("__sig"),
-        size(col("__sh")).cast("long").as("n")
-      )
+      .select(col("doc_id"), graft.functions.MinhashHash.signature(col("__sh")).as("__sig"))
       // null-text docs have no shingles and no signature — drop them
       // (the oracle's string_split(NULL) does the same); keeping them
       // would put every null doc in one all-null bucket per band
       .filter(col("__sig").isNotNull)
       .select(
         col("doc_id") +:
-          (0 until MinhashSeeds).map(s => element_at(col("__sig"), s + 1).as(s"h$s")) :+
-          col("n"): _*
+          (0 until MinhashSeeds).map(s => element_at(col("__sig"), s + 1).as(s"h$s")): _*
       )
 
   /** Candidate pairs from LSH banding over the signature columns: band b
@@ -326,8 +321,8 @@ object Dedup {
     val packed = graft.functions.MinhashHash
       .bandKeys(array((0 until MinhashSeeds).map(s => col(s"h$s")): _*), bands)
     // (band, bandKey, doc_id) rows feed the count and both sides of
-    // the self-join. NOT persisted: callers persist `sigs` (one row per
-    // doc), and re-deriving the band keys from cached signatures is
+    // the self-join. NOT pinned: callers pin `sigs` (one row per
+    // doc), and re-deriving the band keys from pinned signatures is
     // cheaper than materializing docs×bands rows into the block store
     val bucketRows = sigs
       .select(col("doc_id"), posexplode(packed).as(Seq("band", "bandKey")))
@@ -348,33 +343,34 @@ object Dedup {
       .distinct()
   }
 
-  /** Exact set Jaccard for candidate pairs, computed relationally over
-    * exploded element rows: |A∩B| = count of equal-element joins,
-    * |A∪B| = |A| + |B| - |A∩B|. `sizes` (doc_id, n) carries the
-    * per-doc element counts — pass it from an aggregation that already
-    * ran (e.g. minhashSignatures) to avoid an extra pass over elems.
+  /** Exact set Jaccard for candidate pairs (doc_a, doc_b) over `sets`
+    * (doc_id, set): one row per document holding its elements as an
+    * ASCENDING-sorted array (`array_sort`). Each pair joins its two
+    * arrays and counts |A∩B| with one merge walk
+    * (MinhashHash.interCount: ca·cb per equal value, the count an
+    * equi-join of the exploded elements produces); |A| and |B| are the
+    * array sizes and |A∪B| = |A| + |B| − |A∩B|. A document with a null
+    * or empty set has no elements to match, so its pairs drop out.
+    *
+    * Why arrays: a verify over exploded element rows moves one row per
+    * element of every candidate doc through two shuffled joins on the
+    * element, a count and three joins back; the arrays cross the two
+    * pair joins once per document.
     */
-  def setJaccard(pairsIn: DataFrame, elems: DataFrame, elemCol: String, sizes: DataFrame): DataFrame = {
-    // the candidate-pair table is consumed twice (intersection join +
-    // left join for zero-intersection pairs) and is tiny — persist it
-    val pairs = pairsIn.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the element stream is candidate-doc EXPLOSION grain (one row per
-    // shingle of every doc a candidate pair touches) — never
-    // broadcastable at a crawl-scale corpus. Shuffle-hash hints keep
-    // the joins broadcast-free without SMJ's sort of the exploded
-    // stream: join 1 builds on the PAIR relation (candidate-capped),
-    // join 2 on the per-partition slice of the element stream
-    val inter = pairs
-      .hint("shuffle_hash")
-      .join(elems.select(col("doc_id").as("doc_a"), col(elemCol).as("__e")), "doc_a")
-      .join(elems.select(col("doc_id").as("doc_b"), col(elemCol).as("__e")).hint("shuffle_hash"), Seq("doc_b", "__e"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("n_inter"))
+  def setJaccard(pairs: DataFrame, sets: DataFrame): DataFrame = {
+    def side(s: String) =
+      sets.filter(size(col("set")) > 0).select(col("doc_id").as(s"doc_$s"), col("set").as(s"set_$s"))
+    // the sets are candidate-doc grain (a corpus-scale relation at
+    // crawl scale), never broadcastable: shuffle-hash hints keep both
+    // joins broadcast-free without a sort — join 1 builds on the
+    // candidate-capped pair relation, join 2 on the sets
+    val inter = graft.functions.MinhashHash.interCount(col("set_a"), col("set_b"))
     pairs
-      .join(inter, Seq("doc_a", "doc_b"), "left")
-      .na.fill(0L, Seq("n_inter"))
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
+      .hint("shuffle_hash")
+      .join(side("a"), "doc_a")
+      .join(side("b").hint("shuffle_hash"), "doc_b")
+      .select(col("doc_a"), col("doc_b"), inter.as("n_inter"),
+        size(col("set_a")).as("na"), size(col("set_b")).as("nb"))
       .select(
         col("doc_a"),
         col("doc_b"),
@@ -394,41 +390,54 @@ object Dedup {
   /** The full candidate relation with exact Jaccard, BEFORE the τ cut —
     * the verified-pair miner minus its last filter, shared by
     * [[minhashNearDups]] and the lshTuningCurve calibration report.
+    *
+    * The signatures (one row per doc) are read four times: the band
+    * count, both sides of the bucket self-join and the candidate-id
+    * semi-join. They are a scope pin, taken once; the scope keeps the
+    * pin while the result's plan reads it. A lazy `persist` here cost
+    * jobs: under AQE each read of the cached relation became its own
+    * table-cache stage, so no exchange above them was reused and the
+    * band count ran twice (43 jobs per [[minhashNearDups]] call at
+    * sf0.01, 14 with the pin and the array verify), and the
+    * cache-manager entry outlived the call.
     */
   def minhashJaccard(
     docs: DataFrame,
     w: Int = 3,
     bands: Int = 16,
     maxBucketSize: Int = 64
+  ): DataFrame = Checkpoints.scoped(minhashJaccardIn(_, docs, w, bands, maxBucketSize))
+
+  private def minhashJaccardIn(
+    pins: Checkpoints.Pins,
+    docs: DataFrame,
+    w: Int,
+    bands: Int,
+    maxBucketSize: Int
   ): DataFrame = {
     val docsSel = docs.select(col("doc_id"), col("text"))
-    // one row per doc (66 columns), computed map-side: consumed by
-    // banding AND the size lookup — persist so the kernel runs once
-    val sigs = minhashSignatures(docsSel, w)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sigs = pins(minhashSignatures(docsSel, w))
     val pairs = lshCandidates(sigs, bands, maxBucketSize)
-    // verify joins only probe docs that appear in a candidate pair —
-    // semi-join the corpus down BEFORE shingles ever explode to rows,
-    // so the exploded relation exists only for the candidate subset
+    // the verify reads only docs that appear in a candidate pair —
+    // semi-join the corpus down BEFORE any shingle set is built
     val candidateIds = pairs
       .select(col("doc_a").as("doc_id"))
       .union(pairs.select(col("doc_b").as("doc_id")))
       .distinct()
-    // HASHED VERIFY KEYS (round-16 stage profile: the verify stage was
-    // ~2.9 s of the query's 5.4 at sf0.1, its joins keyed on ~25-byte
-    // shingle STRINGS): the exploded stream carries polyHash(shingle) —
-    // the same 2⁶¹−1 fold the signature kernel and the containment
-    // postings already shuffle, reproduced fold-for-fold in the
-    // oracle's h1 CTE, so intersection counts stay bit-for-bit
-    // engine-portable — an 8-byte long per element instead of the
-    // string (guide §2.3: narrower shuffle keys). Cross-shingle hash
-    // collisions (P ≈ 2.3e18) would inflate n_inter identically in both
-    // engines; the same trade every hashed-key dedup stage accepts.
-    val shVerify = docsSel
+    // HASHED VERIFY SETS: each candidate doc's shingles as sorted
+    // polyHash(shingle) longs — the same 2⁶¹−1 fold the signature
+    // kernel and the containment postings use, reproduced fold-for-fold
+    // in the oracle's h1 CTE, so intersection counts stay bit-for-bit
+    // engine-portable, and the merge walk compares 8-byte longs instead
+    // of ~25-byte strings. Cross-shingle hash collisions (P ≈ 2.3e18)
+    // would inflate n_inter identically in both engines; the same trade
+    // every hashed-key dedup stage accepts. polyHashes maps each
+    // shingle to one hash, so each array's size is the doc's shingle
+    // count.
+    val sets = docsSel
       .join(candidateIds, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"),
-        explode(graft.functions.MinhashHash.polyHashes(shingles(w))).as("shingle"))
-    setJaccard(pairs, shVerify, "shingle", sigs.select(col("doc_id"), col("n")))
+      .select(col("doc_id"), array_sort(graft.functions.MinhashHash.polyHashes(shingles(w))).as("set"))
+    setJaccard(pairs, sets)
   }
 
   /** Verified near-dup pairs: LSH candidates whose exact shingle-set
@@ -458,8 +467,11 @@ object Dedup {
     */
   def minedJaccardFor(spark: SparkSession, dir: String): DataFrame =
     Intermediates.getOrBuild(spark, "mined_jaccard", Tables.canonDir(dir)) {
-      minhashJaccard(withPlantedNearDups(Tables.documents(spark, dir)), w = 3)
-        .localCheckpoint()
+      // one scope for the miner's signature pin and the mined pin: the
+      // mined pin reads no signatures, so the scope frees them
+      Checkpoints.scoped { pins =>
+        pins(minhashJaccardIn(pins, withPlantedNearDups(Tables.documents(spark, dir)), 3, 16, 64))
+      }
     }
 
   /** Verified near-dup pairs (τ = 0.5) from the shared memo — the
@@ -1325,38 +1337,38 @@ object Dedup {
     * pairs with hamming distance <= 3), then verify
     * bit_count(xor) <= maxHamming.
     */
-  def simhashNearDups(docs: DataFrame, maxHamming: Int = 3, maxBucketSize: Int = 256): DataFrame = {
-    // one row per doc, re-read by every bucket-shape branch below —
-    // persist the signatures, not the docs×bands bucket rows
-    val signed = simhashSignatures(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val chunks = (0 until 4).map(b => shiftright(col("sig"), b * 16).bitwiseAND(65535))
-    // same counted-bucket shape as lshCandidates: no bucket is ever one
-    // row — count, drop inadmissible, left-semi, self-join on bucket key
-    val bucketRows = signed
-      .select(col("doc_id"), col("sig"), posexplode(array(chunks: _*)).as(Seq("band", "chunk")))
-    val admissible = bucketRows
-      .groupBy(col("band"), col("chunk"))
-      .agg(count(lit(1)).as("sz"))
-      .filter(col("sz") > 1 && col("sz") <= maxBucketSize)
-      .select(col("band"), col("chunk"))
-    val member = bucketRows.join(admissible, Seq("band", "chunk"), "left_semi")
-    member
-      .select(col("band"), col("chunk"), col("doc_id").as("doc_a"), col("sig").as("sig_a"))
-      .join(
-        member.select(col("band"), col("chunk"), col("doc_id").as("doc_b"), col("sig").as("sig_b")),
-        Seq("band", "chunk")
-      )
-      .filter(col("doc_a") < col("doc_b"))
-      .select(
-        col("doc_a"),
-        col("doc_b"),
-        // long, not int: the DuckDB oracle's SUM yields int64
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("long").as("hamming")
-      )
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
+  def simhashNearDups(docs: DataFrame, maxHamming: Int = 3, maxBucketSize: Int = 256): DataFrame =
+    Checkpoints.scoped { pins =>
+      // one row per doc, re-read by every bucket-shape branch below —
+      // pin the signatures, not the docs×bands bucket rows
+      val signed = pins(simhashSignatures(docs))
+      val chunks = (0 until 4).map(b => shiftright(col("sig"), b * 16).bitwiseAND(65535))
+      // same counted-bucket shape as lshCandidates: no bucket is ever one
+      // row — count, drop inadmissible, left-semi, self-join on bucket key
+      val bucketRows = signed
+        .select(col("doc_id"), col("sig"), posexplode(array(chunks: _*)).as(Seq("band", "chunk")))
+      val admissible = bucketRows
+        .groupBy(col("band"), col("chunk"))
+        .agg(count(lit(1)).as("sz"))
+        .filter(col("sz") > 1 && col("sz") <= maxBucketSize)
+        .select(col("band"), col("chunk"))
+      val member = bucketRows.join(admissible, Seq("band", "chunk"), "left_semi")
+      member
+        .select(col("band"), col("chunk"), col("doc_id").as("doc_a"), col("sig").as("sig_a"))
+        .join(
+          member.select(col("band"), col("chunk"), col("doc_id").as("doc_b"), col("sig").as("sig_b")),
+          Seq("band", "chunk")
+        )
+        .filter(col("doc_a") < col("doc_b"))
+        .select(
+          col("doc_a"),
+          col("doc_b"),
+          // long, not int: the DuckDB oracle's SUM yields int64
+          bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("long").as("hamming")
+        )
+        .distinct()
+        .filter(col("hamming") <= maxHamming)
+    }
 
   // ---------------------------------------------------------------------
   // Character n-gram Jaccard (exact verify path)
@@ -1368,18 +1380,16 @@ object Dedup {
     */
   def ngramJaccard(docs: DataFrame, pairs: DataFrame, n: Int = 3): DataFrame = {
     // only docs that appear in a candidate pair need their grams —
-    // a semi-join before the explode skips the (usually much larger)
+    // a semi-join before the gram sets skips the (usually much larger)
     // rest of the corpus entirely
     val candidateIds = pairs
       .select(col("doc_a").as("doc_id"))
       .union(pairs.select(col("doc_b").as("doc_id")))
       .distinct()
-    val grams = docs
+    val sets = docs
       .join(candidateIds, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), explode(charNgrams(n)).as("gram"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sizes = grams.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    setJaccard(pairs, grams, "gram", sizes)
+      .select(col("doc_id"), array_sort(charNgrams(n)).as("set"))
+    setJaccard(pairs, sets)
       .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
   }
 

@@ -234,10 +234,11 @@ object Montages {
     * feeding the virtual channel, its event rate over the overlap, and
     * the overlap's share of the pair's union span.
     *
-    * Scale shape: the pair table is a literal broadcast relation; the
-    * physical catalog is channel-cardinality (itself one partial agg
-    * over the stream), so the whole listing is broadcast-join-only —
-    * no data-scale shuffle.
+    * Scale shape: the pair table is a literal relation and the
+    * preserved side of both left joins; the physical catalog is
+    * channel-cardinality (itself one partial agg over the stream) and
+    * is the broadcast side of each, so the whole listing is
+    * broadcast-join-only — no data-scale shuffle.
     */
   def virtualChannelCatalog(spark: SparkSession, catalog: DataFrame, mt: MontageType): DataFrame = {
     import spark.implicits._
@@ -260,9 +261,11 @@ object Montages {
     val valid = col("ls").isNotNull && col("rs").isNotNull && js <= je
     val span = (je - js).cast("double")
     val union = (greatest(col("le"), col("re")) - least(col("ls"), col("rs"))).cast("double")
-    broadcast(pairDf)
-      .join(l, Seq("lead"), "left")
-      .join(r, Seq("sec"), "left")
+    // the pair table is the preserved side of both left joins, so it
+    // cannot be the build side: broadcast the channel-grain catalog
+    pairDf
+      .join(broadcast(l), Seq("lead"), "left")
+      .join(broadcast(r), Seq("sec"), "left")
       .select(
         concat(col("lead"), lit(Separator), col("sec")).as("channel"),
         valid.as("valid"),

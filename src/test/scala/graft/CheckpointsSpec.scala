@@ -87,17 +87,53 @@ class CheckpointsSpec extends SparkSpec {
     }
   }
 
+  /** Entries in the session's cache manager (public in bytecode,
+    * private[sql] in Scala).
+    */
+  private def cacheEntries: Int = {
+    val cache = spark.sharedState.cacheManager
+    cache.getClass.getMethod("numCachedEntries").invoke(cache).asInstanceOf[Int]
+  }
+
   "pageRank" should "leave no entry in the session's cache manager" in {
     val sc = spark.sparkContext
-    // public in bytecode, private[sql] in Scala
-    val cache = spark.sharedState.cacheManager
-    def entries: Int = cache.getClass.getMethod("numCachedEntries").invoke(cache).asInstanceOf[Int]
+    def entries = cacheEntries
     val before = (sc.getPersistentRDDs.keySet, entries)
     val ranks = Dedup.pageRank(stars)
     ranks.count()
     entries shouldBe before._2
     java.lang.ref.Reference.reachabilityFence(ranks)
     sc.getPersistentRDDs.filter { case (id, _) => !before._1(id) }.values.foreach(_.unpersist(blocking = true))
+  }
+
+  // two planted near-dup pairs (0~1, 2~3) and one unrelated doc
+  private val nearDocs = Seq(
+    "the quick brown fox jumps over the lazy dog near the river bank today",
+    "the quick brown fox jumps over the lazy dog near the river bank",
+    "a stitch in time saves nine and a penny saved is a penny earned",
+    "a stitch in time saves nine and a penny saved is a penny earned twice",
+    "nothing here resembles any other document at all"
+  ).zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+
+  /** Near-dup miners with the pins their results read: the MinHash and
+    * SimHash signatures; the n-gram verify pins nothing.
+    */
+  private val miners: Seq[(String, () => DataFrame, Int)] = Seq(
+    ("minhashNearDups", () => Dedup.minhashNearDups(nearDocs), 1),
+    ("ngramJaccard", () => Dedup.ngramJaccard(nearDocs, Seq((0L, 1L), (2L, 3L), (0L, 4L)).toDF("doc_a", "doc_b")), 0),
+    ("simhashNearDups", () => Dedup.simhashNearDups(nearDocs), 1)
+  )
+
+  miners.foreach { case (name, run, pins) =>
+    name should "leave no cache-manager entry and keep exactly the pins its result reads" in {
+      val before = cacheEntries
+      pinned {
+        val out = run()
+        out.count() should be > 0L
+        out
+      } shouldBe pins
+      cacheEntries shouldBe before
+    }
   }
 
   "unigramTrain" should "keep only the two pins it returns" in {

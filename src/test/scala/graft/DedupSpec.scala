@@ -38,6 +38,48 @@ class DedupSpec extends SparkSpec {
     planted.subsetOf(found) shouldBe true
   }
 
+  "minhashJaccard" should "score every candidate pair with the exact Jaccard of its string shingle sets" in {
+    val rnd = new scala.util.Random(11)
+    val vocab = (0 until 40).map(i => s"w$i")
+    val base = (0 until 12).map(i => i.toLong -> Seq.fill(20)(vocab(rnd.nextInt(vocab.size))))
+    // planted near-dups: the last word swapped, or the last two dropped
+    val near = base.take(8).map { case (id, ws) =>
+      (id + 100L) -> (if (id % 2 == 0) ws.updated(19, "swapped") else ws.dropRight(2))
+    }
+    val texts: Seq[(Long, String)] = (base ++ near).map { case (id, ws) => id -> ws.mkString(" ") } ++ Seq(
+      200L -> "",
+      201L -> "   ",
+      202L -> "?!",
+      203L -> "?! ",
+      204L -> null
+    )
+    val docs = texts.toDF("doc_id", "text")
+    val sets = docs
+      .select($"doc_id", Dedup.shingles(3).as("sh"))
+      .as[(Long, Option[Seq[String]])]
+      .collect()
+      .collect { case (id, Some(sh)) => id -> sh.toSet }
+      .toMap
+    def jaccard(a: Long, b: Long): Double = {
+      val inter = (sets(a) & sets(b)).size
+      val union = sets(a).size + sets(b).size - inter
+      if (union > 0) inter.toDouble / union else 1.0
+    }
+    val got = Dedup.minhashJaccard(docs).as[(Long, Long, Double)].collect().toSeq
+    got.map(p => (p._1, p._2)).distinct should have length got.length.toLong
+    got.foreach { case (a, b, j) =>
+      withClue(s"pair ($a, $b):") { j shouldBe jaccard(a, b) }
+    }
+    val found = got.map(p => (p._1, p._2) -> p._3).toMap
+    // whitespace-only docs normalize to "" (one empty shingle each),
+    // punctuation-only ones to "?!": exact duplicates, Jaccard 1.0
+    found((200L, 201L)) shouldBe 1.0
+    found((202L, 203L)) shouldBe 1.0
+    base.take(8).foreach { case (id, _) => found.keySet should contain((id, id + 100L)) }
+    got.exists(p => p._1 == 204L || p._2 == 204L) shouldBe false
+    got.exists(p => p._3 < 1.0) shouldBe true
+  }
+
   "containmentNearDups" should "catch a subsumption pair whose Jaccard is far below the MinHash gate" in {
     // doc 2 = the first third of doc 1 (12 of 36 words): Jaccard ~ 1/3
     // but containment C(2,1) = 1.0 — exactly what the operator exists
