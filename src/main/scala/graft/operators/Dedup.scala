@@ -1108,66 +1108,57 @@ object Dedup {
     * (b,c) form one cluster {a,b,c}; keep the min doc_id, drop the
     * rest.
     *
-    * Iterative min-label propagation over the edge set EXTENDED WITH
-    * SELF-LOOPS: with (u,u) present for every node, one
-    * join-on-v + groupBy-u + min computes
-    * newLabel(u) = min(label(u), min over neighbors) directly — no
-    * second per-round join to merge a node's own label back in, and
-    * round 0 needs no initialization join at all (labels(v) = v
-    * initially, so round 0 is a single aggregation over the edges
-    * themselves). Rounds run until a round changes nothing (witnessed
-    * by an exact decimal label-sum, which strictly decreases until the
-    * fixpoint) or maxIter. Each round is one join + one
-    * partial-aggregated groupBy on the node id — no component ever has
-    * to fit in one task, which is what makes label propagation the
-    * scale-safe shape for >10⁹-edge graphs. Rounds ∝ component
-    * diameter; near-dup clusters are shallow (members share a
-    * template), so a handful of rounds suffices — if diameters ever
-    * grew, alternating large-star/small-star cuts rounds to O(log n).
-    * Every round's labels are an eager local checkpoint, so each
-    * round plans against stored blocks and lineage never grows.
+    * Shortcut label propagation (Stergiou et al., "Shortcutting Label
+    * Propagation for Distributed Connected Components", WSDM 2018) over
+    * the edge set EXTENDED WITH SELF-LOOPS. Round 0 is one aggregation,
+    * label(u) = min of u's closed neighborhood (labels start as the ids
+    * themselves, so no initialization join). Every later round is the
+    * min-label step plus one pointer jump against the previous round's
+    * labels:
+    *
+    *  - hop(u) = min over v in N(u) ∪ {u} of label(v) (one join on v +
+    *    one partial-aggregated groupBy on u; the self-loop keeps the
+    *    node's own label in the min);
+    *  - label'(u) = label(hop(u)) (one join on the node id).
+    *
+    * Plain min-label needs O(diameter) rounds; the jump lets a node
+    * adopt the label its best neighbor's label already points at, so
+    * on a path the distance a label has travelled grows as 2d + 1 per
+    * round and a path of n nodes settles in O(log n) rounds (a 1000-deep
+    * chain settles in round 9 and round 10 witnesses it). Each step is a
+    * join or a groupBy on a node id, so no component ever has to fit in
+    * one task.
+    *
+    * Exact fixpoint witness: label(v) ≤ v for every node, so
+    * label'(u) = label(hop(u)) ≤ hop(u) ≤ label(u) and labels never
+    * increase. An unchanged exact decimal label sum therefore means
+    * every label is unchanged. At that fixpoint hop(u) = label(u) for
+    * every u, so neighbors share a label, and since a label is a member
+    * id no larger than any member it is the component minimum. The sum
+    * rides the action that pins the round (an `Observation` on the
+    * top-level pinned Dataset), so each round is one pinned relation;
+    * a missing metric throws instead of reading as converged. Rounds
+    * past maxIter throw: unconverged labels are wrong labels.
     *
     * Output: (node, cluster) for every doc appearing in a pair, with
-    * cluster = the component's minimum doc_id.
+    * cluster = the component's minimum doc_id. A self-pair (a, a) makes
+    * a a node, so a doc seen only paired with itself is a singleton.
     */
-  def connectedComponents(pairsIn: DataFrame, maxIter: Int = 25): DataFrame = {
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // the pair relation feeds both edge orientations — persist it so
-    // an expensive upstream pipeline (minhash verify) runs once
-    val pairs = pairsIn.persist(sl)
-    // both orientations + one self-loop per oriented row ((u,u) appears
-    // deg(u) times — duplicates don't affect min, and skipping the
-    // dedup keeps setup shuffle-free)
-    val oriented = pairs
-      .select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .union(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
-    // the final labels are self-contained pinned blocks, so the
-    // upstream cache always goes
-    try Checkpoints.scoped { pins =>
-      // edges are LOCALLY CHECKPOINTED, not merely persisted: a persist
-      // leaves the whole upstream mining pipeline's logical plan under
-      // every round, and Catalyst re-analyzes/re-optimizes that tree for
-      // each round's fresh QueryExecution — measured on the pageRank
-      // sibling loop as ~3 s of DRIVER time per round vs ~0.02 s of
-      // executor time. The checkpoint truncates each round's plan to
-      // (LogicalRDD join LogicalRDD).
-      val edges = pins(oriented.union(oriented.select(col("u"), col("u").as("v"))))
-      // labels live on LOCALLY CHECKPOINTED rdds, not chained persists:
-      // uncaching round i's labels would force Spark to re-cache round
-      // i+1's entry from scratch (buffers of dependents are invalidated,
-      // not kept), so a persist/unpersist chain re-runs the whole
-      // upstream pipeline EVERY round — and lineage would grow per
-      // round besides. localCheckpoint(eager) both materializes the
-      // round and truncates its plan to the stored blocks; each round
-      // replaces the one it supersedes, so a long-lived driver does not
-      // retain up to maxIter label copies.
-      // ONE job per round: the convergence witness (exact decimal label
-      // sum) rides the SAME action that materializes the checkpoint,
-      // via an Observation on the label stream — the former separate
-      // labelSum aggregation doubled the job count of every round.
+  def connectedComponents(pairsIn: DataFrame, maxIter: Int = 25): DataFrame =
+    Checkpoints.scoped { pins =>
+      // both orientations plus one self-loop per end of each pair, in
+      // one pass over the pairs ((u,u) appears deg(u) times; duplicates
+      // do not change a min). Pinned, so each round plans against
+      // (LogicalRDD join LogicalRDD) instead of re-optimizing the
+      // whole mining pipeline under every round.
+      def edge(u: String, v: String) = struct(col(u).as("u"), col(v).as("v"))
+      val edges = pins(
+        pairsIn.select(
+          inline(array(edge("doc_a", "doc_b"), edge("doc_b", "doc_a"), edge("doc_a", "doc_a"), edge("doc_b", "doc_b")))
+        )
+      )
       // Empty input sums to SQL NULL — normalize to zero so an empty
-      // pair set converges after one round instead of burning maxIter
-      // no-op rounds on never-equal nulls.
+      // pair set converges after one round.
       def checkpointWithSum(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
         val obs = org.apache.spark.sql.Observation()
         val ck = pins(
@@ -1176,9 +1167,6 @@ object Dedup {
         val s = obs.get("s").asInstanceOf[java.math.BigDecimal]
         (ck, if (s == null) java.math.BigDecimal.ZERO else s)
       }
-      // round 0, fused with initialization: labels(v) = v initially, so
-      // min over the self-looped neighborhood is a plain aggregation —
-      // no distinct-nodes job and no join; its sum seeds the witness
       var (labels, prevSum) = checkpointWithSum(
         edges
           .groupBy(col("u").as("node"))
@@ -1187,120 +1175,25 @@ object Dedup {
       var iter = 1
       var converged = false
       while (!converged && iter < maxIter) {
-        // self-loops make the neighborhood min include the node's own
-        // label, so the aggregation output IS the new label relation
+        // both joins read labels through the same projection, so the
+        // jump reuses the exchange (broadcast or shuffle) of the first
+        val byV = labels.select(col("node").as("v"), col("cluster"))
         val (updated, s) = checkpointWithSum(
           edges
-            .join(labels.select(col("node").as("v"), col("cluster")), "v")
+            .join(byV, "v")
             .groupBy(col("u").as("node"))
-            .agg(min(col("cluster")).as("cluster"))
+            .agg(min(col("cluster")).as("v")) // hop(u)
+            .join(byV, "v") // label(hop(u))
+            .select(col("node"), col("cluster"))
         )
         converged = s.compareTo(prevSum) == 0
         labels = pins.replace(labels, updated)
         prevSum = s
         iter += 1
       }
-      // unconverged labels are WRONG labels (nodes >maxIter hops from
-      // their component minimum keep intermediate values) — fail loudly
-      // rather than silently mis-clustering; real near-dup components
-      // are shallow, so hitting this means the graph (or maxIter) needs
-      // attention, not that the caller should trust the output
       if (!converged)
-        throw new IllegalStateException(
-          s"connectedComponents did not converge within $maxIter rounds; " +
-            "raise maxIter (diameter-bound) for unusually deep components"
-        )
+        throw new IllegalStateException(s"connectedComponents did not converge within $maxIter rounds")
       labels
-    } finally pairs.unpersist()
-  }
-
-  /** Connected components by ALTERNATING LARGE-STAR / SMALL-STAR
-    * rounds (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC 2014) — the DEEP-GRAPH option behind the same
-    * (node, cluster) contract as [[connectedComponents]]. Min-label
-    * propagation converges in O(diameter) rounds, the right trade for
-    * shallow near-dup components; a path-shaped graph (chained
-    * near-dups, reference chains, citation threads) makes diameter —
-    * and therefore rounds — O(n). Star contraction converges in
-    * O(log n) rounds regardless of diameter:
-    *
-    *  - large-star: every node links its LARGER neighbors to the
-    *    minimum of its neighborhood (including itself);
-    *  - small-star: every node links its SMALLER neighbors (and
-    *    itself) to the minimum of those.
-    *
-    * Each half-round is one groupBy(min) + one join on the node id —
-    * the same partial-agg/shuffle shape as a min-label round, no
-    * component ever in one task. At the fixpoint the edge set IS the
-    * star (component-min → member), read off directly as labels.
-    * Rounds localCheckpoint like the min-label loop (lineage
-    * truncation + superseded-block release); convergence is an exact
-    * set check (counts equal + one-sided exceptAll empty — equal-size
-    * distinct sets with an empty difference are equal), and
-    * non-convergence within maxIter throws loudly for the same reason
-    * connectedComponents does.
-    *
-    * Contract notes: input pairs are undirected (a, b); self-pairs are
-    * ignored (a node only ever paired with itself has no edge — unlike
-    * [[connectedComponents]], which labels it a singleton).
-    */
-  def connectedComponentsStar(pairsIn: DataFrame, maxIter: Int = 30): DataFrame =
-    Checkpoints.scoped { pins =>
-      var edges = pins(
-        pairsIn
-          .select(
-            least(col("doc_a"), col("doc_b")).as("a"),
-            greatest(col("doc_a"), col("doc_b")).as("b")
-          )
-          .filter(col("a") =!= col("b"))
-          .distinct()
-      )
-      var iter = 0
-      var converged = edges.isEmpty
-      while (!converged && iter < maxIter) {
-        // large-star: m(u) = min(N(u) ∪ {u}); emit (m(u), v) for v > u
-        val nbrs = edges
-          .select(col("a").as("u"), col("b").as("v"))
-          .union(edges.select(col("b").as("u"), col("a").as("v")))
-        val mins = nbrs
-          .groupBy(col("u"))
-          .agg(min(col("v")).as("mn"))
-          .select(col("u"), least(col("u"), col("mn")).as("m"))
-        val large = nbrs
-          .join(mins, "u")
-          .filter(col("v") > col("u"))
-          // m ≤ u < v, so (m, v) is already canonical
-          .select(col("m").as("a"), col("v").as("b"))
-          .distinct()
-        // small-star over the large output: m(u) = min of the SMALLER
-        // neighbors; emit (m, v) for the other small neighbors + (m, u)
-        val nbrs2 = large
-          .select(col("a").as("u"), col("b").as("v"))
-          .union(large.select(col("b").as("u"), col("a").as("v")))
-        val lower = nbrs2.filter(col("v") < col("u"))
-        val mins2 = lower.groupBy(col("u")).agg(min(col("v")).as("m"))
-        val small = lower
-          .join(mins2, "u")
-          .filter(col("v") =!= col("m"))
-          .select(col("m").as("a"), col("v").as("b"))
-          .union(mins2.select(col("m").as("a"), col("u").as("b")))
-          .distinct()
-        val next = pins(small)
-        val sameCount = next.count() == edges.count()
-        converged = sameCount && next.exceptAll(edges).isEmpty
-        edges = pins.replace(edges, next)
-        iter += 1
-      }
-      if (!converged)
-        throw new IllegalStateException(
-          s"connectedComponentsStar did not converge within $maxIter rounds — " +
-            "O(log n) bound exceeded; inspect the edge distribution"
-        )
-      // fixpoint edges are (component-min, member): read labels off
-      edges
-        .select(col("b").as("node"), col("a").as("cluster"))
-        .union(edges.select(col("a").as("node"), col("a").as("cluster")))
-        .distinct()
     }
 
   /** Components + survivor flag: survivor = the cluster's min doc_id. */
@@ -1755,22 +1648,6 @@ object Dedup {
         .select(col("doc_a"), col("doc_b"))
     )
 
-  /** The same mined-pair pipeline as [[dedupClusters]] with components
-    * formed by the O(log n) [[connectedComponentsStar]] rounds instead
-    * of min-label propagation — the deep-graph option proven end to
-    * end against the IDENTICAL transitive-closure oracle (both
-    * algorithms must produce the same min-label clustering).
-    */
-  def dedupClustersStar(spark: SparkSession, dir: String): DataFrame =
-    connectedComponentsStar(
-      minedPairsFor(spark, dir)
-        .select(col("doc_a"), col("doc_b"))
-    ).select(
-      col("node").as("doc_id"),
-      col("cluster"),
-      (col("node") === col("cluster")).as("survivor")
-    )
-
   /** Cluster-size histogram + singleton row from a corpus and its
     * cluster labels — the run report every dedup job publishes: how
     * many clusters of each size, how many documents they cover, and
@@ -1977,7 +1854,7 @@ object Dedup {
     *
     * Scale shape: the rank relation is node-cardinality, keyed by id.
     * Degrees are folded into the edge relation ONCE and the result is
-    * hash-partitioned on src before persisting, so each iteration is
+    * hash-partitioned on src before pinning, so each iteration is
     * exactly one join in which ONLY the rank relation moves (the
     * weighted-edge side reuses its partitioning) plus one dst-keyed
     * partial agg — the standard Pregel-style iteration expressed
@@ -1994,15 +1871,12 @@ object Dedup {
     */
   def pageRank(pairsIn: DataFrame, iters: Int = 8, damping: Double = 0.85): DataFrame = {
     require(iters > 0, s"iters must be positive, got $iters")
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val dec = org.apache.spark.sql.types.DecimalType(27, 10)
-    val pairs = pairsIn.persist(sl)
-    val edges = pairs
+    val edges = pairsIn
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .persist(sl)
+      .union(pairsIn.select(col("doc_b").as("src"), col("doc_a").as("dst")))
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    try Checkpoints.scoped { pins =>
+    Checkpoints.scoped { pins =>
       // degree folded into the edges once, partitioned on the join key —
       // and LOCALLY CHECKPOINTED, not merely persisted: a persist leaves
       // the mining pipeline's full logical plan under every round, and
@@ -2037,9 +1911,6 @@ object Dedup {
       ranks
         .join(nodes.select(col("node"), col("deg").as("n_links")), "node")
         .select(col("node").as("doc_id"), col("n_links"), round(col("r"), 6).as("pagerank"))
-    } finally {
-      pairs.unpersist(false)
-      edges.unpersist(false)
     }
   }
 

@@ -1108,8 +1108,9 @@ object Multimodal {
   /** Image duplicate groups end to end: the phash pair graph collapsed
     * to connected components with min-id survivors — the actual
     * "keep one thumbnail per family" decision a multimodal pipeline
-    * ships, sharing [[Dedup.clustersWithSurvivors]] (the proven
-    * O(diameter) min-label propagation) above the mm pair miner.
+    * ships, sharing [[Dedup.clustersWithSurvivors]] (the one components
+    * loop: min-label rounds with a pointer jump, O(log n) rounds on a
+    * path) above the mm pair miner.
     */
   def mmPhashClusters(spark: SparkSession, dir: String): DataFrame =
     Dedup.clustersWithSurvivors(

@@ -1300,19 +1300,15 @@ object Similarity {
   ): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(27, 10)
     val cont = nmiContingency(emb, k, iters)
-    val tot = cont.agg(
-      sum(col("nij")).as("n"),
-      countDistinct(col("label")).as("n_labels"),
-      countDistinct(col("cluster")).as("n_clusters")
-    )
     val labm = cont.groupBy(col("label")).agg(sum(col("nij")).as("ai"))
     val clum = cont
       .groupBy(col("cluster"))
       .agg(sum(col("nij")).as("bj"), max(col("nij")).as("mx"))
+    val nRow = cont.agg(sum(col("nij")).as("n"))
     val miRow = cont
       .join(broadcast(labm), Seq("label"))
       .join(broadcast(clum), Seq("cluster"))
-      .crossJoin(broadcast(tot.select(col("n"))))
+      .crossJoin(broadcast(nRow))
       .agg(
         sum(
           round(
@@ -1327,7 +1323,7 @@ object Similarity {
         sum((col("nij") * (col("nij") - 1)).cast(dec)).cast("double").as("sij2")
       )
     val huRow = labm
-      .crossJoin(broadcast(tot.select(col("n"))))
+      .crossJoin(broadcast(nRow))
       .agg(
         sum(
           round(
@@ -1335,10 +1331,14 @@ object Similarity {
             9
           ).cast(dec)
         ).as("hun_dec"),
-        sum((col("ai") * (col("ai") - 1)).cast(dec)).cast("double").as("sa2")
+        sum((col("ai") * (col("ai") - 1)).cast(dec)).cast("double").as("sa2"),
+        // the distinct label / cluster counts are the non-null keys of
+        // the margins (two countDistinct in one aggregate plan an Expand
+        // whose group order is not stable from one JVM to the next)
+        count(col("label")).as("n_labels")
       )
     val hvRow = clum
-      .crossJoin(broadcast(tot.select(col("n"))))
+      .crossJoin(broadcast(nRow))
       .agg(
         sum(
           round(
@@ -1347,7 +1347,8 @@ object Similarity {
           ).cast(dec)
         ).as("hvn_dec"),
         sum((col("bj") * (col("bj") - 1)).cast(dec)).cast("double").as("sb2"),
-        sum(col("mx")).as("mxs")
+        sum(col("mx")).as("mxs"),
+        count(col("cluster")).as("n_clusters")
       )
     val sij = col("sij2") / lit(2.0)
     val sa = col("sa2") / lit(2.0)
@@ -1369,7 +1370,7 @@ object Similarity {
     miRow
       .crossJoin(huRow)
       .crossJoin(hvRow)
-      .crossJoin(tot)
+      .crossJoin(nRow)
       .select(
         col("n"),
         col("n_labels"),
@@ -2085,8 +2086,8 @@ object Similarity {
     * exact cosine only WITHIN a cluster, shrinking the pair product
     * from n² to Σ|cluster|². Emits verified pairs
     * (cluster, vec_a, vec_b, cosine ≥ τ); survivor selection composes
-    * downstream exactly like the other pair-mining dedups (feed
-    * [[Dedup.connectedComponents]] or keep min vec_id per pair).
+    * downstream exactly like the other pair-mining dedups
+    * ([[dedupSemanticClusters]] feeds [[Dedup.clustersWithSurvivors]]).
     *
     * Scale shape: assignment is the kmeansAssign projection (corpus
     * never shuffled); the pair join shuffles keyed by (cluster, block).
@@ -2255,8 +2256,8 @@ object Similarity {
   }
 
   /** The full semantic-dedup PIPELINE ending: verified within-cluster
-    * pairs grouped into connected components (the same bounded-round
-    * min-label propagation dedup_clusters uses) with one survivor per
+    * pairs grouped into connected components (the same shortcut
+    * label-propagation loop dedup_clusters uses) with one survivor per
     * component — what a user actually deletes on.
     */
   def dedupSemanticClusters(spark: SparkSession, dir: String): DataFrame =

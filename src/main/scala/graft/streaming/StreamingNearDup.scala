@@ -184,9 +184,9 @@ object StreamingNearDup {
     * union-find forest carried in state, unioned with each
     * micro-batch's pairs, so components MERGE ACROSS BATCHES instead
     * of restarting per batch. Union-by-min keeps every root the
-    * component's minimum doc_id — the same min-label cluster identity
-    * (and survivor convention: doc_id == cluster) the batch pipeline
-    * emits.
+    * component's minimum doc_id — the same cluster identity (and
+    * survivor convention: doc_id == cluster) the batch loop's
+    * pointer-jumped min labels settle on.
     *
     * Each batch emits the CURRENT (doc_id, cluster) assignment for
     * every document in a component touched this batch; Append mode

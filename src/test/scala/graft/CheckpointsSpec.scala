@@ -75,7 +75,6 @@ class CheckpointsSpec extends SparkSpec {
     "graphBeamTopK" -> (r => Similarity.graphBeamTopK(emb, queries, k = 3, hops = r)),
     "mmrRerank" -> (r => Similarity.mmrRerank(emb, queries, pool = 8, m = r)),
     "connectedComponents" -> (r => Dedup.connectedComponents(stars, maxIter = r)),
-    "connectedComponentsStar" -> (r => Dedup.connectedComponentsStar(stars, maxIter = r)),
     "pageRank" -> (r => Dedup.pageRank(stars, iters = r)),
     "kcoreness" -> (r => Dedup.kcoreness(path, rounds = r)),
     "wordpieceTrain" -> (r => Tokenizer.wordpieceTrain(docs, r)._2)

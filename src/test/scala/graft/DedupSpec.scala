@@ -259,36 +259,47 @@ class DedupSpec extends SparkSpec {
     ranks.foreach(_ shouldBe (1.0 / n +- 1e-9))
   }
 
-  "connectedComponentsStar" should "converge on a 1000-deep chain without raising maxIter" in {
-    // a path graph has diameter n: min-label would need ~1000 rounds
-    // (far past its maxIter=25 default); star contraction must finish
-    // within its O(log n) default budget
+  "connectedComponents" should "converge on a 1000-deep chain inside its default maxIter" in {
+    // a path has diameter n: plain min-label would need ~1000 rounds.
+    // With the pointer jump a label travels 2d + 1 hops per round
+    // (1, 3, 7, ..., 1023), so round 9 settles the chain and round 10
+    // witnesses it: 11 rounds counting round 0, well inside the
+    // default maxIter = 25
     val n = 1000
     val pairs = (0 until n).map(i => (i.toLong, i + 1L)).toDF("doc_a", "doc_b")
-    val labels = Dedup
-      .connectedComponentsStar(pairs)
-      .as[(Long, Long)]
-      .collect()
-      .toMap
+    val labels = Dedup.connectedComponents(pairs).as[(Long, Long)].collect().toMap
     labels.size shouldBe n + 1
     labels.values.toSet shouldBe Set(0L)
+    Dedup.connectedComponents(pairs, maxIter = 11).count() shouldBe n + 1L
+    an[IllegalStateException] should be thrownBy Dedup.connectedComponents(pairs, maxIter = 10)
   }
 
-  it should "agree with min-label propagation on arbitrary shallow graphs" in {
-    // deterministic pseudo-random multi-component graph
-    var seed = 0xdeadbeefL
-    def next(m: Int): Int = {
-      seed = seed * 6364136223846793005L + 1442695040888963407L
-      (((seed >>> 33) % m) + m).toInt % m
+  it should "agree with a driver-side union-find on seeded random graphs with self-pairs" in {
+    def unionFind(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      pairs.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      parent.keys.map(x => x -> find(x)).toMap
     }
-    val pairs = (0 until 120)
-      .map(_ => (next(60).toLong, next(60).toLong))
-      .filter { case (a, b) => a != b }
-      .toDF("doc_a", "doc_b")
-      .persist()
-    val star = Dedup.connectedComponentsStar(pairs).as[(Long, Long)].collect().toMap
-    val ml = Dedup.connectedComponents(pairs).as[(Long, Long)].collect().toMap
-    star shouldBe ml
+    Seq(0xdeadbeefL, 42L, 7919L).foreach { start =>
+      var seed = start
+      def next(m: Int): Int = {
+        seed = seed * 6364136223846793005L + 1442695040888963407L
+        (((seed >>> 33) % m) + m).toInt % m
+      }
+      // random self-pairs stay in; 99 is seen only in a self-pair
+      val pairs = (0 until 120).map(_ => (next(60).toLong, next(60).toLong)) :+ ((99L, 99L))
+      val labels = Dedup.connectedComponents(pairs.toDF("doc_a", "doc_b")).as[(Long, Long)].collect()
+      labels.map(_._1).distinct.length shouldBe labels.length
+      labels.toMap shouldBe unionFind(pairs)
+      labels.toMap.apply(99L) shouldBe 99L
+    }
   }
 
   it should "label every mined pair's docs on real data with min-id clusters" in {
@@ -303,6 +314,19 @@ class DedupSpec extends SparkSpec {
       labels(a) shouldBe labels(b)
       labels(a) should be <= math.min(a, b)
     }
+  }
+
+  "dedup_clusters_star" should "keep a doc seen only in a self-pair as its own singleton, like dedup_clusters" in {
+    // seed the shared mined-pair intermediate of a fresh dir, so both
+    // registry ids read these pairs instead of mining a corpus
+    val dir = java.nio.file.Files.createTempDirectory("self-pair").toFile
+    dir.deleteOnExit()
+    operators.Intermediates.getOrBuild(spark, "mined_jaccard", Tables.canonDir(dir.getPath)) {
+      Seq((1L, 2L, 0.9), (2L, 3L, 0.8), (7L, 7L, 1.0)).toDF("doc_a", "doc_b", "jaccard")
+    }
+    def run(id: String) = SparkEntry.queries(id)(spark, dir.getPath).as[(Long, Long, Boolean)].collect().sorted.toList
+    run("dedup_clusters_star") shouldBe List((1L, 1L, true), (2L, 1L, false), (3L, 1L, false), (7L, 7L, true))
+    run("dedup_clusters") shouldBe run("dedup_clusters_star")
   }
 
   "simhashNearDups" should "find planted near-duplicates within hamming 3" in {
