@@ -14,10 +14,9 @@ import org.apache.spark.sql.SparkSession
   *  - each query is timed SPARK_GRAFT_BENCH_REPS times (default 3) and
   *    reports the per-query MINIMUM — the run least polluted by page
   *    cache misses, GC pauses, or co-tenant load;
-  *  - the cache is cleared and a GC is requested between reps, so the
-  *    MEMORY_AND_DISK persists inside the dedup/embedding queries never
-  *    accumulate across queries and every rep pays (or re-warms) the
-  *    same cache state;
+  *  - a GC is requested between reps; no operator caches (a scope pin
+  *    lives while its result reads it), so every rep starts from the
+  *    same state apart from the session's shared Intermediates;
   *  - driver heap is pinned by build.sbt's javaOptions (-Xmx from
   *    SPARK_DRIVER_MEM, default 8g) rather than inherited ambience.
   *  - the JSON carries the box's BOOT ID plus TWO fixed calibration
@@ -195,7 +194,6 @@ object Bench {
     val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt).getOrElse(3).max(1)
     def stamp(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val times = (1 to reps).map { _ =>
-        spark.catalog.clearCache()
         System.gc()
         val t0 = System.nanoTime()
         val ok =

@@ -518,13 +518,13 @@ object Curation {
     * epoch's update, so epoch 1 is the all-zero model (loss = ln 2)
     * and the decline is the training curve a run report plots.
     *
-    * Scale shape: the corpus is projected once to (id, y, x) and
-    * persisted; each epoch is two jobs over it — score + stats, then
-    * a dim-keyed partial aggregation for the gradient — with the
-    * weight vector riding along as a LITERAL (the same
-    * broadcast-update loop as [[Similarity.topPrincipalComponent]]
-    * and the Lloyd kmeans): the corpus is scanned per epoch but never
-    * shuffled, and the driver only ever holds dim-sized vectors.
+    * Scale shape: each epoch is two scans of the corpus projection
+    * (id, y, x) — score + stats, then a dim-keyed partial aggregation
+    * for the gradient — with the weight vector riding along as a
+    * LITERAL (the same broadcast-update loop as
+    * [[Similarity.topPrincipalComponent]] and the Lloyd kmeans): the
+    * corpus is scanned per epoch, never cached or shuffled, and the
+    * driver only ever holds dim-sized vectors.
     *
     * Portability: z = VecDot against the literal weights (left-to-
     * right fold == list_dot_product); σ(z) and both ln's round to 9
@@ -551,61 +551,58 @@ object Curation {
         (col("label") === posLabel).cast("int").as("y"),
         col("embedding").cast("array<double>").as("x")
       )
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = e.count()
-      val d = e.select(size(col("x"))).first().getInt(0)
-      var w = Array.fill(d)(0.0)
-      var bias = 0.0
-      val stats = scala.collection.mutable.Buffer.empty[(Long, Double, Double)]
-      for (ep <- 1 to epochs) {
-        val scored = e.select(
-          col("vec_id"),
-          col("y"),
-          col("x"),
-          least(
-            greatest(
-              round(
-                lit(1.0) /
-                  (lit(1.0) + exp(-(graft.functions.VectorMath.dot(col("x"), typedlit(w.toSeq)) + bias))),
-                9
-              ),
-              lit(1e-9)
+    val n = e.count()
+    val d = e.select(size(col("x"))).first().getInt(0)
+    var w = Array.fill(d)(0.0)
+    var bias = 0.0
+    val stats = scala.collection.mutable.Buffer.empty[(Long, Double, Double)]
+    for (ep <- 1 to epochs) {
+      val scored = e.select(
+        col("vec_id"),
+        col("y"),
+        col("x"),
+        least(
+          greatest(
+            round(
+              lit(1.0) /
+                (lit(1.0) + exp(-(graft.functions.VectorMath.dot(col("x"), typedlit(w.toSeq)) + bias))),
+              9
             ),
-            lit(1.0 - 1e-9)
-          ).as("p")
+            lit(1e-9)
+          ),
+          lit(1.0 - 1e-9)
+        ).as("p")
+      )
+      val st = scored
+        .agg(
+          round(
+            (-sum(
+              (col("y") * round(log(col("p")), 9) +
+                (lit(1) - col("y")) * round(log(lit(1.0) - col("p")), 9)).cast(dec)
+            )).cast("double") / n,
+            6
+          ).as("loss"),
+          round(
+            sum(when((col("p") >= 0.5).cast("int") === col("y"), 1).otherwise(0))
+              .cast("double") / n,
+            6
+          ).as("acc"),
+          sum((col("p") - col("y")).cast(dec)).cast("double").as("gb")
         )
-        val st = scored
-          .agg(
-            round(
-              (-sum(
-                (col("y") * round(log(col("p")), 9) +
-                  (lit(1) - col("y")) * round(log(lit(1.0) - col("p")), 9)).cast(dec)
-              )).cast("double") / n,
-              6
-            ).as("loss"),
-            round(
-              sum(when((col("p") >= 0.5).cast("int") === col("y"), 1).otherwise(0))
-                .cast("double") / n,
-              6
-            ).as("acc"),
-            sum((col("p") - col("y")).cast(dec)).cast("double").as("gb")
-          )
-          .head()
-        val g = scored
-          .select((col("p") - col("y")).as("r"), posexplode(col("x")).as(Seq("d", "val")))
-          .groupBy(col("d"))
-          .agg(sum((col("r") * col("val")).cast(dec)).cast("double").as("g"))
-          .orderBy(col("d"))
-          .select(col("g"))
-          .collect()
-          .map(_.getDouble(0))
-        w = w.zip(g).map { case (wj, gj) => round9(wj - lr * gj / n) }
-        bias = round9(bias - lr * st.getAs[Double]("gb") / n)
-        stats += ((ep.toLong, st.getAs[Double]("loss"), st.getAs[Double]("acc")))
-      }
-      stats.toSeq.toDF("epoch", "loss", "acc")
-    } finally e.unpersist(false)
+        .head()
+      val g = scored
+        .select((col("p") - col("y")).as("r"), posexplode(col("x")).as(Seq("d", "val")))
+        .groupBy(col("d"))
+        .agg(sum((col("r") * col("val")).cast(dec)).cast("double").as("g"))
+        .orderBy(col("d"))
+        .select(col("g"))
+        .collect()
+        .map(_.getDouble(0))
+      w = w.zip(g).map { case (wj, gj) => round9(wj - lr * gj / n) }
+      bias = round9(bias - lr * st.getAs[Double]("gb") / n)
+      stats += ((ep.toLong, st.getAs[Double]("loss"), st.getAs[Double]("acc")))
+    }
+    stats.toSeq.toDF("epoch", "loss", "acc")
   }
 
   def trainClassifier(spark: SparkSession, dir: String): DataFrame =

@@ -24,14 +24,12 @@ import org.apache.spark.sql.functions._
   *    by a counted bucket-size cap BEFORE any bucket materializes, the
   *    guard against O(n²) pair blowup inside one bucket.
   *
-  * Note on persistence: the MinHash and SimHash miners pin their
-  * multi-consumer signatures in a [[Checkpoints.scoped]] pin set; the
-  * pin lives while the result's plan reads it and nothing is left in
-  * the session's cache manager. Some older operators here still
-  * persist intermediates with MEMORY_AND_DISK; those cached blocks
-  * live until session end / LRU eviction, so long-running sessions
-  * processing many corpora should call spark.catalog.clearCache()
-  * between jobs.
+  * Note on persistence: no operator here caches. An intermediate that
+  * a result reads more than once (the MinHash and SimHash signatures,
+  * the blocked embedding miner's bucketed vectors) is a pin in a
+  * [[Checkpoints.scoped]] pin set; the pin lives while the result's
+  * plan reads it and nothing is left in the session's cache manager,
+  * so a long-running session needs no spark.catalog.clearCache().
   */
 object Dedup {
 
@@ -1381,7 +1379,7 @@ object Dedup {
     maxPlanes: Int,
     bitsFor: Column => Column,
     maxBucketSize: Int
-  ): DataFrame = {
+  ): DataFrame = Checkpoints.scoped { pins =>
     import graft.functions.VectorMath
     val hp = Similarity.hyperplanes(maxPlanes, 64)
     val raw = emb
@@ -1389,10 +1387,12 @@ object Dedup {
       .withColumn("nrm", VectorMath.norm(col("v")))
       .withColumn("bf", Similarity.hyperplaneBucket(col("v"), hp))
     val cfg = raw.agg(bitsFor(count(lit(1))).cast("int").as("bits"))
-    val prepped = raw
-      .crossJoin(broadcast(cfg))
-      .withColumn("b0", expr("bf & (shiftleft(CAST(1 AS BIGINT), bits) - 1)"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // five reads (probes, sizes, home buckets, two verify sides): one pin
+    val prepped = pins(
+      raw
+        .crossJoin(broadcast(cfg))
+        .withColumn("b0", expr("bf & (shiftleft(CAST(1 AS BIGINT), bits) - 1)"))
+    )
     // probe buckets: own bucket + each 1-bit flip of the USED bits;
     // for a pair straddling one hyperplane, EACH side's flipped probe
     // lands in the other's home bucket, so the pair survives as long

@@ -365,23 +365,20 @@ object Similarity {
       .zipWithIndex
       .map { case (v, i) => (i, v) }
 
-    base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      for (_ <- 1 to iters) {
-        cents = base
-          .withColumn("cid", kmeansAssignStruct(col("v"), cents).getField("cid"))
-          .select(col("cid"), posexplode(col("v")).as(Seq("dim", "x")))
-          .groupBy(col("cid"), col("dim"))
-          .agg((sum(col("x").cast("double").cast(dec)).cast("double") / count(lit(1))).as("m"))
-          .collect()
-          .toSeq
-          .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
-          .groupBy(_._1)
-          .toSeq
-          .map { case (cid, rows) => (cid, rows.sortBy(_._2).map(_._3)) }
-          .sortBy(_._1)
-      }
-    } finally base.unpersist()
+    for (_ <- 1 to iters) {
+      cents = base
+        .withColumn("cid", kmeansAssignStruct(col("v"), cents).getField("cid"))
+        .select(col("cid"), posexplode(col("v")).as(Seq("dim", "x")))
+        .groupBy(col("cid"), col("dim"))
+        .agg((sum(col("x").cast("double").cast(dec)).cast("double") / count(lit(1))).as("m"))
+        .collect()
+        .toSeq
+        .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
+        .groupBy(_._1)
+        .toSeq
+        .map { case (cid, rows) => (cid, rows.sortBy(_._2).map(_._3)) }
+        .sortBy(_._1)
+    }
     cents
   }
 
@@ -413,7 +410,7 @@ object Similarity {
     Intermediates.getOrBuild(spark, "ann_bruteforce", Tables.canonDir(dir)) {
       val emb = Tables.embeddings(spark, dir)
       bruteForceTopK(emb, emb.filter(col("vec_id") < QueryCount), TopK)
-        .localCheckpoint()
+        .localCheckpoint(true)
     }
 
   def annBruteforce(spark: SparkSession, dir: String): DataFrame =
@@ -1605,7 +1602,8 @@ object Similarity {
     * exploded (subspace, cid, subdim) means reduce in one partial
     * aggregation, and one m·k·(dim/m)-row collect updates all
     * codebooks — where m independent [[kmeansCentroids]] calls would
-    * scan the corpus m times per iteration. Each subspace's
+    * scan the corpus m times per iteration; nothing is cached, the
+    * loop's state is the driver-side codebooks. Each subspace's
     * trajectory (md5-ranked init rows, least-struct ties, decimal
     * means) is bit-identical to the per-subspace run, so the oracle
     * reproduces it subspace by subspace.
@@ -1632,38 +1630,35 @@ object Similarity {
     var books: Seq[Seq[(Int, Seq[Double])]] = (0 until m).map { s =>
       initRows.zipWithIndex.map { case (v, i) => (i, v.slice(s * subLen, s * subLen + subLen)) }
     }
-    // subvectors materialize ONCE per row here (m slices); assignment
-    // structs then reference plain columns — inlining the slice into
-    // every centroid struct would blow the generated method up m·k·2×
+    // subvectors are sliced once per row (m slices); assignment structs
+    // then reference plain columns — inlining the slice into every
+    // centroid struct would blow the generated method up m·k·2×
     val base = corpus
       .select(col("vec_id") +: (0 until m).map(s => sub(col("embedding"), s).as(s"v$s")): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      for (_ <- 1 to iters) {
-        val rows = base
-          .select((0 until m).map { s =>
-            struct(
-              kmeansAssignStruct(col(s"v$s"), books(s)).getField("cid").as("cid"),
-              col(s"v$s").as("sv")
-            ).as(s"p$s")
-          }: _*)
-          .select(posexplode(array((0 until m).map(s => col(s"p$s")): _*)).as(Seq("s", "p")))
-          .select(col("s"), col("p.cid").as("cid"), posexplode(col("p.sv")).as(Seq("subdim", "x")))
-          .groupBy(col("s"), col("cid"), col("subdim"))
-          .agg((sum(col("x").cast("double").cast(dec)).cast("double") / count(lit(1))).as("mn"))
-          .collect()
+    for (_ <- 1 to iters) {
+      val rows = base
+        .select((0 until m).map { s =>
+          struct(
+            kmeansAssignStruct(col(s"v$s"), books(s)).getField("cid").as("cid"),
+            col(s"v$s").as("sv")
+          ).as(s"p$s")
+        }: _*)
+        .select(posexplode(array((0 until m).map(s => col(s"p$s")): _*)).as(Seq("s", "p")))
+        .select(col("s"), col("p.cid").as("cid"), posexplode(col("p.sv")).as(Seq("subdim", "x")))
+        .groupBy(col("s"), col("cid"), col("subdim"))
+        .agg((sum(col("x").cast("double").cast(dec)).cast("double") / count(lit(1))).as("mn"))
+        .collect()
+        .toSeq
+        .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3)))
+      books = (0 until m).map { s =>
+        rows
+          .filter(_._1 == s)
+          .groupBy(_._2)
           .toSeq
-          .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3)))
-        books = (0 until m).map { s =>
-          rows
-            .filter(_._1 == s)
-            .groupBy(_._2)
-            .toSeq
-            .map { case (cid, xs) => (cid, xs.sortBy(_._3).map(_._4)) }
-            .sortBy(_._1)
-        }
+          .map { case (cid, xs) => (cid, xs.sortBy(_._3).map(_._4)) }
+          .sortBy(_._1)
       }
-    } finally base.unpersist()
+    }
     books.zipWithIndex.map { case (b, s) => (s, b) }
   }
 
@@ -2124,7 +2119,7 @@ object Similarity {
     maxCell: Long = 100000L,
     subPlanes: Int = 16,
     dim: Int = KmeansDim
-  ): DataFrame = {
+  ): DataFrame = Checkpoints.scoped { pins =>
     require(maxCell > 0 && subPlanes > 0 && subPlanes < 63, s"bad cap ($maxCell, $subPlanes)")
     val asg = kmeansAssign(emb, k, iters).select(col("vec_id"), col("cluster"))
     val p0 = prepped(emb, "vec_id", "v", "nrm").join(asg, "vec_id")
@@ -2137,19 +2132,21 @@ object Similarity {
         ceil(log(2.0, col("__cellSz").cast("double") / lit(maxCell.toDouble))).cast("int")
       )
     )
-    val p = p0
-      .join(broadcast(cellSizes), "cluster")
-      .withColumn("__w", width)
-      .withColumn(
-        "block",
-        when(
-          col("__cellSz") > maxCell,
-          hyperplaneBucket(col("v"), hp)
-            .bitwiseAND(expr("shiftleft(CAST(1 AS BIGINT), __w) - 1"))
-        ).otherwise(lit(0L))
-      )
-      .select(col("cluster"), col("block"), col("vec_id"), col("v"), col("nrm"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // read three times (block sizes, both pair sides): one scope pin
+    val p = pins(
+      p0
+        .join(broadcast(cellSizes), "cluster")
+        .withColumn("__w", width)
+        .withColumn(
+          "block",
+          when(
+            col("__cellSz") > maxCell,
+            hyperplaneBucket(col("v"), hp)
+              .bitwiseAND(expr("shiftleft(CAST(1 AS BIGINT), __w) - 1"))
+          ).otherwise(lit(0L))
+        )
+        .select(col("cluster"), col("block"), col("vec_id"), col("v"), col("nrm"))
+    )
     // ≤ k + (oversize cells)·2^subPlanes rows — broadcast admission
     val admissible = p
       .groupBy(col("cluster"), col("block"))
@@ -2594,7 +2591,7 @@ object Similarity {
   ): DataFrame =
     Intermediates.getOrBuild(spark, "knn", (Tables.canonDir(dir), seed, planes)) {
       bucketedKnn(Tables.embeddings(spark, dir), 5, planes, 64, seed = seed)
-        .localCheckpoint()
+        .localCheckpoint(true)
     }
 
   // the graph-ANN long-range view (half-sampled coarse mine) — its own
@@ -2607,7 +2604,7 @@ object Similarity {
         GraphCoarsePlanes,
         64,
         seed = GraphSeedC
-      ).localCheckpoint()
+      ).localCheckpoint(true)
     }
 
   def hubnessScreen(
@@ -2971,7 +2968,7 @@ object Similarity {
             coarseKnnFor(spark, dir)
           )
         )
-      ).localCheckpoint()
+      ).localCheckpoint(true)
     }
 
   def annGraph(spark: SparkSession, dir: String): DataFrame =
@@ -3277,8 +3274,9 @@ object Similarity {
     * projection, the row's score (codegen'd VecDot against the literal
     * direction, minus the literal μ·v) alongside its posexploded
     * (dim, value) pairs; the only shuffle is the d-key partial agg
-    * (d·partitions rows). The corpus is never shuffled, never joined.
-    * Driver holds d-sized vectors only (the centroid-collect shape).
+    * (d·partitions rows). The corpus is never cached, shuffled or
+    * joined; the driver holds d-sized vectors only (the
+    * centroid-collect shape).
     *
     * Portability: per-dim sums route through DECIMAL (order-free);
     * dot products are left-to-right (VecDot == list_dot_product, and
@@ -3295,55 +3293,51 @@ object Similarity {
   private def powerIteration(embeds: DataFrame, iters: Int): (Array[Double], Array[Double], Double) = {
     require(iters > 0, s"iters must be positive, got $iters")
     val dec = org.apache.spark.sql.types.DecimalType(27, 10)
-    val e = embeds
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("x"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val d = e.select(size(col("x"))).first().getInt(0)
-      // mean per dimension: exact-decimal sum / count (matches the
-      // oracle's DECIMAL route bit for bit)
-      val mu: Array[Double] = e
-        .select(posexplode(col("x")).as(Seq("d", "val")))
+    val e = embeds.select(col("vec_id"), col("embedding").cast("array<double>").as("x"))
+    val d = e.select(size(col("x"))).first().getInt(0)
+    // mean per dimension: exact-decimal sum / count (matches the
+    // oracle's DECIMAL route bit for bit)
+    val mu: Array[Double] = e
+      .select(posexplode(col("x")).as(Seq("d", "val")))
+      .groupBy(col("d"))
+      .agg((sum(col("val").cast(dec)).cast("double") / count(lit(1))).as("m"))
+      .orderBy(col("d"))
+      .select(col("m"))
+      .collect()
+      .map(_.getDouble(0))
+    def orderedFold(xs: Array[Double]): Double = {
+      // left-to-right, matching list_reduce / list_dot_product
+      var acc = 0.0; var i = 0
+      while (i < xs.length) { acc += xs(i); i += 1 }
+      acc
+    }
+    var v = Array.fill(d)(1.0 / math.sqrt(d.toDouble))
+    var lastS = Array.empty[Double]
+    var lastNorm = 0.0
+    var i = 0
+    while (i < iters) {
+      val muDotV = orderedFold(mu.zip(v).map { case (a, b) => a * b })
+      val s = e
+        .select(
+          (VectorMath.dot(col("x"), typedlit(v)) - lit(muDotV)).as("score"),
+          posexplode(col("x")).as(Seq("d", "val"))
+        )
         .groupBy(col("d"))
-        .agg((sum(col("val").cast(dec)).cast("double") / count(lit(1))).as("m"))
+        .agg(
+          sum(((col("val") - element_at(typedlit(mu), col("d") + 1)) * col("score")).cast(dec))
+            .cast("double")
+            .as("s")
+        )
         .orderBy(col("d"))
-        .select(col("m"))
+        .select(col("s"))
         .collect()
         .map(_.getDouble(0))
-      def orderedFold(xs: Array[Double]): Double = {
-        // left-to-right, matching list_reduce / list_dot_product
-        var acc = 0.0; var i = 0
-        while (i < xs.length) { acc += xs(i); i += 1 }
-        acc
-      }
-      var v = Array.fill(d)(1.0 / math.sqrt(d.toDouble))
-      var lastS = Array.empty[Double]
-      var lastNorm = 0.0
-      var i = 0
-      while (i < iters) {
-        val muDotV = orderedFold(mu.zip(v).map { case (a, b) => a * b })
-        val s = e
-          .select(
-            (VectorMath.dot(col("x"), typedlit(v)) - lit(muDotV)).as("score"),
-            posexplode(col("x")).as(Seq("d", "val"))
-          )
-          .groupBy(col("d"))
-          .agg(
-            sum(((col("val") - element_at(typedlit(mu), col("d") + 1)) * col("score")).cast(dec))
-              .cast("double")
-              .as("s")
-          )
-          .orderBy(col("d"))
-          .select(col("s"))
-          .collect()
-          .map(_.getDouble(0))
-        lastNorm = math.sqrt(orderedFold(s.map(z => z * z)))
-        v = s.map(_ / lastNorm)
-        lastS = s
-        i += 1
-      }
-      (mu, lastS, lastNorm)
-    } finally e.unpersist(false)
+      lastNorm = math.sqrt(orderedFold(s.map(z => z * z)))
+      v = s.map(_ / lastNorm)
+      lastS = s
+      i += 1
+    }
+    (mu, lastS, lastNorm)
   }
 
   /** Spark round(x, 6) semantics on the driver: HALF_UP on the

@@ -1,24 +1,17 @@
 package graft
 
-import graft.operators.{Dedup, Similarity, Tokenizer}
+import graft.operators.{Curation, Dedup, Similarity, Tokenizer}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions.col
+import scala.jdk.CollectionConverters._
 
 class CheckpointsSpec extends SparkSpec {
   import spark.implicits._
 
-  /** The persisted RDDs a result reads: the `LogicalRDD` leaves of its
-    * plan (pins) and the buffers of the caches it scans.
-    */
-  private def reads(df: DataFrame): Set[Int] = {
-    val qe = df.queryExecution
-    (qe.logical.collectWithSubqueries { case lr: LogicalRDD => lr.rdd.id } ++
-      qe.withCachedData.collectWithSubqueries { case m: InMemoryRelation =>
-        m.cacheBuilder.cachedColumnBuffers.id
-      }).toSet
-  }
+  /** The pins a result reads: the `LogicalRDD` leaves of its plan. */
+  private def reads(df: DataFrame): Set[Int] =
+    df.queryExecution.logical.collectWithSubqueries { case lr: LogicalRDD => lr.rdd.id }.toSet
 
   /** RDDs a run leaves persisted in the context while its result is
     * still reachable (unpersisted again afterwards so no spec sees
@@ -115,12 +108,16 @@ class CheckpointsSpec extends SparkSpec {
   ).zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
 
   /** Near-dup miners with the pins their results read: the MinHash and
-    * SimHash signatures; the n-gram verify pins nothing.
+    * SimHash signatures, the blocked miners' bucketed vectors and the
+    * semantic dedup's blocked cells; the n-gram verify pins nothing.
     */
   private val miners: Seq[(String, () => DataFrame, Int)] = Seq(
     ("minhashNearDups", () => Dedup.minhashNearDups(nearDocs), 1),
     ("ngramJaccard", () => Dedup.ngramJaccard(nearDocs, Seq((0L, 1L), (2L, 3L), (0L, 4L)).toDF("doc_a", "doc_b")), 0),
-    ("simhashNearDups", () => Dedup.simhashNearDups(nearDocs), 1)
+    ("simhashNearDups", () => Dedup.simhashNearDups(nearDocs), 1),
+    ("embedNearDupsBlocked", () => Dedup.embedNearDupsBlocked(emb, tau = 0.9), 1),
+    ("embedNearDupsBlockedAdaptive", () => Dedup.embedNearDupsBlockedAdaptive(emb, tau = 0.9), 1),
+    ("semanticDedup", () => Similarity.semanticDedup(emb, k = 2), 1)
   )
 
   miners.foreach { case (name, run, pins) =>
@@ -133,6 +130,44 @@ class CheckpointsSpec extends SparkSpec {
       } shouldBe pins
       cacheEntries shouldBe before
     }
+  }
+
+  "driver-valued loops" should "leave no persisted RDD and no cache-manager entry" in {
+    val sc = spark.sparkContext
+    // a k no other case asks for, so the Intermediates entry is built here
+    val runs: Seq[(String, () => Any)] = Seq(
+      "kmeansCentroids" -> (() => Similarity.kmeansCentroids(emb, k = 5, iters = 2)),
+      "pqCodebooks" -> (() => Similarity.pqCodebooks(emb, m = 4, dim = 64, k = 3, iters = 2)),
+      "topPrincipalComponent" -> (() => Similarity.topPrincipalComponent(emb, iters = 2).collect()),
+      "classifierTrajectory" -> (() =>
+        Curation.classifierTrajectory(emb.withColumn("label", (col("vec_id") % 2).cast("int")), epochs = 2).collect())
+    )
+    runs.foreach { case (name, run) =>
+      val before = (sc.getPersistentRDDs.keySet, cacheEntries)
+      run()
+      withClue(name) {
+        (sc.getPersistentRDDs.keySet -- before._1, cacheEntries) shouldBe ((Set.empty, before._2))
+      }
+    }
+  }
+
+  "src/main/scala" should "hold no lazy persist or cache call" in {
+    // a lazy cache outlives the call that made it and, under AQE, turns
+    // every read into its own table-cache stage; intermediates read
+    // more than once are Checkpoints scope pins instead
+    val lazyCache = raw"\.persist\(|\.cache\(\)".r
+    val files = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    files should not be empty
+    val hits = files.flatMap { f =>
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if lazyCache.findFirstIn(line).isDefined => s"$f:${i + 1}: ${line.trim}"
+      }
+    }
+    hits shouldBe empty
   }
 
   "unigramTrain" should "keep only the two pins it returns" in {

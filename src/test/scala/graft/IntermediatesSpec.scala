@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.Intermediates
+import graft.operators.{Intermediates, Similarity}
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -80,5 +81,33 @@ class IntermediatesSpec extends SparkSpec {
     concurrently(Seq(() => outer(), () => inner(), () => outer(), () => inner())) shouldBe
       Seq("knn+beam", "knn", "knn+beam", "knn")
     (innerBuilds.get, outerBuilds.get) shouldBe ((1, 1))
+  }
+
+  it should "finish a checkpointed build before it returns" in {
+    // the build is paid inside getOrBuild, not by the first consumer's
+    // action; a directory of its own keeps every entry cold
+    val dir = Files.createTempDirectory("graft-intermediates")
+    val emb = dir.resolve("embeddings.parquet")
+    Files.copy(Paths.get(sfDir, "embeddings.parquet"), emb)
+    val d = dir.toString
+    try {
+      Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "ann_bruteforce" -> (() => Similarity.annBruteforce(spark, d)),
+        "knn" -> (() => Similarity.knnFor(spark, d)),
+        "knn_coarse" -> (() => Similarity.coarseKnnFor(spark, d)),
+        "ann_graph" -> (() => Similarity.annGraph(spark, d))
+      ).foreach { case (name, build) =>
+        val rdds = build().queryExecution.logical.collect {
+          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+        }
+        withClue(name) {
+          rdds should not be empty
+          rdds.map(_.isCheckpointed) should contain only true
+        }
+      }
+    } finally {
+      Files.delete(emb)
+      Files.delete(dir)
+    }
   }
 }
